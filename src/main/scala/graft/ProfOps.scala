@@ -75,7 +75,7 @@ object ProfOps {
           val oldPairs = spark.read.parquet(pairsPath)
           val t0 = System.nanoTime()
           val oldCC = time(s"r$rep oldCC star")(
-            Dedup.dedupClustersStar(d, oldPairs).localCheckpoint(true))
+            Dedup.dedupClusters(d, oldPairs).localCheckpoint(true))
           val changed = edited.unionByName(added).select("doc_id", "text")
           val noTomb = d.select(col("doc_id"), lit(0L).as("before_seg")).limit(0)
           val tomb = deletedIds.select(col("doc_id"),

@@ -177,7 +177,7 @@ object Queries {
   private def ensureNgramClusters(s: SparkSession, dir: String): DataFrame = {
     val path = scratchPath("cc", dir)
     buildOnce(path) {
-      Dedup.dedupClustersStar(docs(s, dir), ensureNgramPairs(s, dir))
+      Dedup.dedupClusters(docs(s, dir), ensureNgramPairs(s, dir))
         .write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
@@ -1266,12 +1266,12 @@ object Queries {
       Dedup.dedupClusters(d, ensureNgramPairs(s, dir))
         .orderBy("doc_id")
     }),
-    // same clusters via O(log n)-round large-star/small-star contraction —
-    // the scale path when the pair graph's shape is arbitrary (chain-shaped
-    // components defeat round-bounded min-label propagation)
+    // the same query under the star-contraction row name: dedupClusters is
+    // the one CC path (driver union-find below graft.cc.maxDriverEdges,
+    // star contraction above it), so p35 reads exactly p21's output
     "p35_dedup_clusters_star" -> ((s, dir) => {
       val d = docs(s, dir)
-      Dedup.dedupClustersStar(d, ensureNgramPairs(s, dir))
+      Dedup.dedupClusters(d, ensureNgramPairs(s, dir))
         .orderBy("doc_id")
     }),
     // leakage-free split: the p32 hash keyed on the dup-CLUSTER label, so
@@ -1643,7 +1643,7 @@ object Queries {
             TextStats.tokenCount(col("text")).cast("long").as("n_tokens")), "doc_id")
           .select(col("doc_id"), col("split"), col("n_tokens"))
       // the two snapshots' pair+CC chains are independent until splitMoves
-      // — overlap their driver-blocking star-CC loops on two threads
+      // — overlap their driver-blocking CC calls on two threads
       // (guide §2.6; r17). Results are unchanged: each chain is the same
       // deterministic computation, just not serialized behind the other.
       locally {
@@ -1947,7 +1947,7 @@ object Queries {
     // using the orchestrator's OWN tombstone artifact — it must equal a
     // full rebuild on the refreshed corpus (the oracle replays BM25 over
     // the refreshed snapshot directly; IVF/pairs coherence is gated in
-    // RefreshSpec + the refresh fuzzer)
+    // RefreshSpec + LifecycleSpec)
     "p98_orchestrated_refresh" -> ((s, dir) => {
       val root = ensureOrchestratedRoot(s, dir)
       TextStats.bm25TopK(s, s"$root/term_index",
@@ -2111,9 +2111,6 @@ object Queries {
   // raw previous point (NaN poisons): nonNegativeDerivative/perSecond semantics
   private val rawLagS = "SELECT name, ts, v, lag(v) OVER (PARTITION BY name ORDER BY ts) AS pv FROM s"
 
-  // connected components over the exact ngram-jaccard pair graph: p11's pair
-  // derivation + transitive min-reachable-id closure. p21 (label propagation)
-  // and p35 (star contraction) compute the identical contract.
   private val contaminationSql =
     """WITH words AS (
       |  SELECT doc_id, list_filter(string_split_regex(lower(regexp_replace(text, '[^\p{L}\p{N}\s]', ' ', 'g')), '\s+'), x -> len(x) > 0) AS w
@@ -2268,6 +2265,7 @@ object Queries {
       |SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
       |FROM $rel d LEFT JOIN cc USING (doc_id) ORDER BY doc_id""".stripMargin
 
+  // p21 and p35 both read Dedup.dedupClusters, so one oracle serves both rows
   private val ccSql = ccSqlFor("documents")
 
   val oracleSql: Map[String, String] = Map(

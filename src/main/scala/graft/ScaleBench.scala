@@ -412,7 +412,7 @@ object ScaleBench {
         val path = Queries.ndIndexPath(dir) + "_shx_split"
         val oldPairs = graft.pipeline.Dedup
           .ngramJaccardPairs(d, k = 3, threshold = 0.5).localCheckpoint(true)
-        val oldCC = graft.pipeline.Dedup.dedupClustersStar(d, oldPairs)
+        val oldCC = graft.pipeline.Dedup.dedupClusters(d, oldPairs)
           .localCheckpoint(true)
         graft.pipeline.PairMaintenance.writeShingleIndex(d, path)
         val edited = d.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 5 === 0)

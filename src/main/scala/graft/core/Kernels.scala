@@ -81,19 +81,6 @@ object Kernels {
     if (isNaN(hi) || isNaN(lo)) Double.NaN else hi - lo
   }
 
-  /** Product of non-NaN values... except `multiply` in summarize semantics
-    * NaNs poison the product (ref consolidations.go:231-241). */
-  def multiplyStrict(v: Array[Double]): Double = {
-    if (v.length == 0) return Double.NaN
-    var p = 1.0; var n = 0; var i = 0
-    while (i < v.length) {
-      val x = v(i)
-      if (isNaN(x)) return Double.NaN
-      p *= x; n += 1; i += 1
-    }
-    if (n == 0) Double.NaN else p
-  }
-
   /** Population variance of non-NaN values. (ref VarianceValue consolidations.go:70-88) */
   def variance(v: Array[Double]): Double = {
     val m = mean(v)

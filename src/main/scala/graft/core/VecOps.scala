@@ -407,14 +407,6 @@ object VecOps {
     (predictions, deviations)
   }
 
-  /** Mask points whose predicate on value fails → NaN. */
-  def maskWhere(v: Array[Double], pred: Double => Boolean): Array[Double] = {
-    val out = v.clone()
-    var i = 0
-    while (i < out.length) { if (!isNaN(out(i)) && pred(out(i))) out(i) = Double.NaN; i += 1 }
-    out
-  }
-
   /** Pearson correlation between two equal-length vectors, pairwise NaN-skip. */
   def pearson(a: Array[Double], b: Array[Double]): Double = {
     var n = 0; var sa = 0.0; var sb = 0.0; var saa = 0.0; var sbb = 0.0; var sab = 0.0

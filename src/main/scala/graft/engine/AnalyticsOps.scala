@@ -468,16 +468,6 @@ object AnalyticsOps {
 
   // ------------------------------------------------------------------- fft
 
-  private def padPow2(v: Array[Double]): (Array[Double], Array[Double]) = {
-    var n = 1
-    while (n < v.length) n <<= 1
-    val re = new Array[Double](n); val im = new Array[Double](n)
-    var i = 0
-    while (i < v.length) { re(i) = if (Kernels.isNaN(v(i))) 0.0 else v(i); i += 1 }
-    (re, im)
-  }
-
-  /** fft: magnitude spectrum (zero-padded radix-2). (ref fft/function.go) */
   /** fft(seriesList, mode): true n-point DFT (no padding) emitting abs
     * and/or phase component series named fft(m,abs)/fft(m,phase); default
     * mode emits both (ref fft/function.go:30-69). NaN inputs are zeroed

@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import graft.core.{Glob, Kernels, Names, SeriesFrame, VecOps}
+import graft.core.{Kernels, Names, SeriesFrame, VecOps}
 
 /**
  * The Graphite operator library over the canonical series frame
@@ -509,7 +509,6 @@ object SeriesOps {
   def sigmoid(df: DataFrame): DataFrame =
     rewrap(mapPointwise(df, v => lit(1.0) / (lit(1.0) + exp(-v))), "sigmoid",
       tagValue = Some("sigmoid"))
-  def squareS(df: DataFrame): DataFrame = rewrap(mapPointwise(df, v => v * v), "pow", Seq("2"))
 
   /** scaleToSeconds: v * seconds/step. (ref scaleToSeconds/function.go) */
   def scaleToSeconds(df: DataFrame, seconds: Long): DataFrame =
@@ -949,9 +948,4 @@ object SeriesOps {
   /** Graphite formats float args without trailing .0 for integral values. */
   def fmtNum(d: Double): String =
     if (d == math.rint(d) && !d.isInfinite) d.toLong.toString else d.toString
-
-  /** Filter a series frame by a Graphite name glob. */
-  def whereGlob(df: DataFrame, glob: String): DataFrame =
-    if (Glob.isGlob(glob)) df.where(col("name").rlike(Glob.toRegex(glob)))
-    else df.where(col("name") === glob)
 }

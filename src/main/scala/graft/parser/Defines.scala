@@ -19,7 +19,6 @@ object Defines {
   private val defs = TrieMap.empty[String, String]
 
   def define(name: String, template: String): Unit = defs.put(name, template)
-  def undefine(name: String): Unit = defs.remove(name)
   def clear(): Unit = defs.clear()
   def names: Set[String] = defs.keySet.toSet
 

@@ -345,12 +345,11 @@ object Curation {
    * and near-dup keeper selection (cluster representative = min doc_id).
    * Every stage is one of this library's operators and all the gates are
    * scan-speed column math; the only non-map-side work is the cluster join,
-   * whose right side is one (doc_id, cluster_id) row per document.
+   * whose right side is one (doc_id, cluster_id) row per document, from
+   * [[Dedup.dedupClusters]].
    */
   def curatedCorpus(docs: DataFrame, pairs: DataFrame, lang: String = "en",
-                    minTokens: Int = 10,
-                    cc: (DataFrame, DataFrame) => DataFrame =
-                      Dedup.dedupClustersStar(_, _)): DataFrame = {
+                    minTokens: Int = 10): DataFrame = {
     // r18: the gate battery (language id + 4 PII regexes + tokenCount) is
     // the heaviest map-side work in the pass — spread it so a one-row-group
     // local input doesn't run it on a single core (Par.spread no-ops when
@@ -359,7 +358,7 @@ object Curation {
       .withColumn("n_tokens", TextStats.tokenCount(col("text")))
       .where(col("lang_pred") === lang && col("n_tokens") >= minTokens && !col("has_pii"))
     gated
-      .join(cc(docs, pairs), "doc_id")
+      .join(Dedup.dedupClusters(docs, pairs), "doc_id")
       .where(col("cluster_id") === col("doc_id")) // keeper = component min id
       .select(col("doc_id"), col("lang_pred"), col("n_tokens").cast("long").as("n_tokens"))
   }

@@ -17,23 +17,20 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  * bounded; skewed buckets (boilerplate text) are handled by AQE skew-join.
  *
  * Lifecycle note: the LSH methods `persist()` their signature table (it
- * feeds both sides of the band self-join), [[sharedSpanPairs]] its positional
- * gram table, and [[dedupClusters]] its final label table. Each returned plan
- * references its cache, so eviction is the CALLER's job — in a long-lived
- * server, call `spark.catalog.clearCache()` (or unpersist via the storage
- * API) after consuming the result, or the cached tables accumulate (Bench
- * sweeps new persists after each query for exactly this reason).
+ * feeds both sides of the band self-join) and [[sharedSpanPairs]] its
+ * positional gram table. Each returned plan references its cache, so
+ * eviction is the CALLER's job — in a long-lived server, unpersist via the
+ * storage API after consuming the result, or the cached tables accumulate.
+ * [[dedupClusters]] persists nothing: it `localCheckpoint`s its canonical
+ * edge set (and, above the driver gate, each contraction round), which the
+ * context cleaner reclaims once their plans are dropped.
  */
 object Dedup {
 
-  /** GRAFT_CC_LOG=1 prints per-round CC progress (edge/moved counts, wall)
-    * to stderr — the ScaleBench instrumentation for the 100× spot-runs. */
-  private val ccLog: Boolean = sys.env.contains("GRAFT_CC_LOG")
-
-  /** Size gate for the CC driver fallback (r18): a pair graph whose
+  /** Size gate for [[dedupClusters]]' driver side (r18): a pair graph whose
     * materialized canonical edge count is at or below this resolves its
     * labels with an in-memory union-find instead of iterating distributed
-    * star/label-prop rounds — each distributed round on a tiny edge set is
+    * star-contraction rounds — each distributed round on a tiny edge set is
     * pure control-plane cost (~3 exchanges + per-round plan analysis,
     * measured ~0.45 s/round on a 400-edge blast-radius subgraph), where
     * the driver fold is milliseconds. Same bounded-driver-fold contract as
@@ -50,7 +47,7 @@ object Dedup {
   /** Exact min-reachable-id labels over a collected edge list: union-find
     * with path compression, then min doc_id per component. Returns one
     * (doc_id, label) row per edge ENDPOINT (singletons resolve through the
-    * caller's left join + coalesce, as with the distributed loops). */
+    * caller's left join + coalesce, as on the distributed side). */
   private def driverCcLabels(spark: org.apache.spark.sql.SparkSession,
                              edgeRows: Array[org.apache.spark.sql.Row]): DataFrame = {
     val idx = new java.util.HashMap[Long, Integer](edgeRows.length * 2)
@@ -96,8 +93,6 @@ object Dedup {
       rows(i) = org.apache.spark.sql.Row(ids(i), minOf(find(i)))
       i += 1
     }
-    if (ccLog) System.err.println(
-      s"[cc] driver union-find: nodes=${ids.length} edges=${edgeRows.length}")
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("label", LongType, nullable = false)))
@@ -141,9 +136,6 @@ object Dedup {
   /** Normalized word k-shingles straight from text — convenience for small
     * inputs/tests; hot paths should materialize [[wordsOf]] first. */
   def shingles(text: Column, k: Int): Column = shinglesOf(wordsOf(text), k)
-
-  /** 64-bit stable hash of a string column (xxhash64 — codegen'd built-in). */
-  private def h64(c: Column, seed: Int): Column = xxhash64(c, lit(seed))
 
   /** splitmix64 finalizer — cheap independent re-mix of a base hash per
     * seed (public-domain bit mixer). */
@@ -543,91 +535,20 @@ object Dedup {
    * graph (from [[minhashPairs]]/[[simhashPairs]]/[[ngramJaccardPairs]]),
    * labeling every document with the minimum doc_id reachable in its
    * component — the keeper-selection step after candidate generation.
+   * `docs` supplies ids so singletons label themselves.
    *
-   * Min-label propagation: each round every node takes the min of its own
-   * and its neighbors' labels; rounds = component diameter. Near-dup
-   * components are dense and tiny (duplicates of one source document), so
-   * diameter is small and this beats the alternating-star O(log n) scheme's
-   * constant factors; each round is one shuffle keyed by node id, state is
-   * one (id, label) row per node. `docs` supplies ids so singletons label
-   * themselves.
+   * One path with two sides, chosen from the measured canonical edge count
+   * (see [[maxDriverEdges]]): at or below the gate the edges collect once
+   * and a driver union-find labels them; above it, alternating large-star /
+   * small-star contraction runs distributed. Both sides produce the same
+   * labels (the min reachable id is unique).
    *
-   * Throws if the propagation has not converged after `maxIters` rounds
-   * (a path-shaped component of diameter > maxIters) — non-converged labels
-   * are silently WRONG, so failing loudly is the only safe exit; raise
-   * `maxIters` for pathological chain-shaped graphs. Caching contract: the
-   * returned plan references the final persisted (id, label) table (one row
-   * per paired doc) — see the object-level lifecycle note; callers done with
-   * the result should evict it.
-   */
-  def dedupClusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val und = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .persist()
-    // r18 small-graph gate (see [[maxDriverEdges]]): the count materializes
-    // the persist the first round would have paid anyway; a graph that fits
-    // collects once and labels resolve in-memory instead of per-round jobs
-    val nUnd = und.count()
-    if (nUnd > 0 && nUnd <= 2 * maxDriverEdges(docs.sparkSession)) {
-      val collected = und.collect()
-      und.unpersist()
-      val labels = driverCcLabels(docs.sparkSession, collected)
-      return docs.select(col("doc_id"))
-        .join(broadcast(labels), Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
-    }
-    // per-round localCheckpoint: round k's plan nests round k-1's, so
-    // un-truncated lineage deepens every round and the analyzer OOMs the
-    // driver near round ~40 — BEFORE the maxIters guard can fire.
-    // r18: LAZY checkpoints — the moved-count below is each round's first
-    // action, so it materializes the checkpoint in the SAME job (the old
-    // eager checkpoint + separate count paid two scheduler round-trips per
-    // round; at near-dup blast-radius sizes the per-job control-plane
-    // overhead IS the round cost)
-    var labels = und.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).localCheckpoint(false)
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      val t0 = System.nanoTime()
-      val nbrMin = und.join(labels, und("v") === labels("id"))
-        .groupBy(col("u")).agg(min(col("label")).as("nmin"))
-      // r17: carry the previous label through the checkpoint so the
-      // moved-count is a filter over materialized blocks instead of a
-      // second join+shuffle per round
-      val next0 = labels.join(nbrMin, labels("id") === nbrMin("u"), "left")
-        .select(col("id"), col("label").as("_old"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .localCheckpoint(false)
-      changed = next0.where(col("label") < col("_old")).count()
-      labels = next0.select(col("id"), col("label"))
-      it += 1
-      if (ccLog) System.err.println(
-        f"[cc] label-prop round $it: moved=$changed wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    und.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"dedupClusters: not converged after $maxIters rounds ($changed labels " +
-          "still moving) — component diameter exceeds maxIters; raise it")
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
-  }
-
-  /**
-   * Same contract as [[dedupClusters]] (doc_id, cluster_id = min reachable
-   * id), via alternating large-star / small-star contraction — the
-   * round count is O(log n) for ANY graph shape, so chain-shaped components
-   * (diameter ≫ rounds, where min-label propagation must give up) converge
-   * too. This is the scale path when the pair graph's shape is not known to
-   * be dense-and-tiny; label propagation stays the default because its
-   * per-round cost is lower on the near-dup graphs dedup actually produces.
-   *
-   * Each round: large-star hangs every bigger neighbor of u onto
-   * min(N(u) ∪ {u}), small-star re-hangs the smaller neighbors and u itself
-   * onto the minimum — two groupBy+join shuffles per phase over an edge set
-   * that only shrinks toward one star per component. Edges stay canonically
+   * Star contraction needs O(log n) rounds for ANY graph shape, so
+   * chain-shaped components (diameter ≫ rounds) converge too. Each round,
+   * large-star hangs every bigger neighbor of u onto min(N(u) ∪ {u}), and
+   * small-star re-hangs the smaller neighbors and u itself onto the
+   * minimum — two groupBy+join shuffles per phase over an edge set that
+   * only shrinks toward one star per component. Edges stay canonically
    * oriented (u > v) throughout, so convergence (= the edge set is a fixed
    * point) is one anti-join test per round.
    *
@@ -637,22 +558,21 @@ object Dedup {
    * ~8 rounds. Checkpointing makes every round start from materialized
    * blocks (dropped rounds are reclaimed by the context cleaner); on a
    * cluster with executor churn, prefer a real `checkpoint` dir.
+   *
+   * Throws if the contraction has not converged after `maxIters` rounds —
+   * non-converged labels are silently WRONG, so failing loudly is the only
+   * safe exit.
    */
-  def dedupClustersStar(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    // r18: LAZY checkpoints throughout the loop — the count that follows
-    // each checkpoint is its first action, so materialization and count
-    // share ONE job (the eager checkpoint + count pair cost two scheduler
-    // round-trips per round, pure control-plane overhead on blast-radius-
-    // sized edge sets)
+  def dedupClusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+    // LAZY checkpoints throughout the loop — the count that follows each
+    // checkpoint is its first action, so materialization and count share
+    // ONE job per round
     var edges = pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"), least(col("doc_a"), col("doc_b")).as("v"))
       .where(col("u") =!= col("v")).distinct().localCheckpoint(false)
-    // r17: carry the materialized count across rounds (the old loop
-    // re-counted the previous edge set every round — one extra job/round)
+    // the materialized count carries across rounds (no re-count of the
+    // previous edge set)
     var nEdges = edges.count()
-    // r18 small-graph gate (see [[maxDriverEdges]]): a pair graph that fits
-    // the driver collects once and labels resolve by union-find — each
-    // distributed star round on a tiny edge set is pure control-plane cost
     if (nEdges > 0 && nEdges <= maxDriverEdges(docs.sparkSession)) {
       val labels = driverCcLabels(docs.sparkSession, edges.collect())
       return docs.select(col("doc_id"))
@@ -662,7 +582,6 @@ object Dedup {
     var converged = nEdges == 0L
     var it = 0
     while (!converged && it < maxIters) {
-      val t0 = System.nanoTime()
       // large-star over the symmetric neighborhood: (v, m) for every v > u
       val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
       val mins = sym.groupBy(col("u"))
@@ -689,12 +608,10 @@ object Dedup {
       edges = next
       nEdges = nNext
       it += 1
-      if (ccLog) System.err.println(
-        f"[cc] star round $it: edges=$nNext wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     if (!converged)
       throw new IllegalStateException(
-        s"dedupClustersStar: not converged after $maxIters rounds — " +
+        s"dedupClusters: not converged after $maxIters rounds — " +
           "this bounds O(log n); raise maxIters only for astronomically large n")
     // at the fixed point every component is a star rooted at its minimum:
     // non-roots appear exactly once as u, roots/singletons only as v or not
@@ -707,18 +624,6 @@ object Dedup {
   }
 
   /**
-   * Dedup-aware sampling weights — the SemDeDup/D4-style alternative to
-   * dropping duplicates (Abbas et al. 2023 arXiv:2303.09540; Tirumala et
-   * al. 2023 arXiv:2308.12284): every near-dup cluster's members share
-   * unit sampling mass, weight = 1/|cluster|, so epoch sampling sees each
-   * cluster once in expectation and repeated boilerplate stops dominating
-   * the mix while unique text keeps weight 1.
-   *
-   * Scale shape: the [[dedupClustersStar]] chain plus ONE cluster-keyed
-   * count aggregate joined back onto the label table by cluster_id —
-   * equality-keyed, label-table-sized; the corpus text never moves.
-   */
-  /**
    * Leakage-free train/val/test split — the dedup-aware refinement of
    * the p32 hash split: a near-duplicate of a training document landing
    * in val/test leaks training content into evaluation (the
@@ -727,17 +632,29 @@ object Dedup {
    * in the same split, and singletons (cluster_id = own id) reduce to
    * exactly the plain p32 assignment.
    *
-   * Scale shape: the star-CC chain plus the p32 map-side multiplicative
-   * hash on the cluster label — the only addition over p35 is
+   * Scale shape: the [[dedupClusters]] chain plus the p32 map-side
+   * multiplicative hash on the cluster label — the only addition over p35 is
    * arithmetic; nothing new moves.
    */
   def splitByCluster(docs: DataFrame, pairs: DataFrame, trainFrac: Double = 0.9,
                      valFrac: Double = 0.05, seed: Long = 9377L): DataFrame =
-    dedupClustersStar(docs, pairs).withColumn("split",
+    dedupClusters(docs, pairs).withColumn("split",
       Assembly.splitLabel(col("cluster_id"), trainFrac, valFrac, seed))
 
+  /**
+   * Dedup-aware sampling weights — the SemDeDup/D4-style alternative to
+   * dropping duplicates (Abbas et al. 2023 arXiv:2303.09540; Tirumala et
+   * al. 2023 arXiv:2308.12284): every near-dup cluster's members share
+   * unit sampling mass, weight = 1/|cluster|, so epoch sampling sees each
+   * cluster once in expectation and repeated boilerplate stops dominating
+   * the mix while unique text keeps weight 1.
+   *
+   * Scale shape: the [[dedupClusters]] chain plus ONE cluster-keyed
+   * count aggregate joined back onto the label table by cluster_id —
+   * equality-keyed, label-table-sized; the corpus text never moves.
+   */
   def dedupWeights(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val cc = dedupClustersStar(docs, pairs)
+    val cc = dedupClusters(docs, pairs)
     val sizes = cc.groupBy("cluster_id").agg(count(lit(1)).as("n_dups"))
     cc.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("n_dups"),
@@ -755,19 +672,13 @@ object Dedup {
    * One window per cluster over (score, id) — clusters are near-dup groups
    * and tiny, so the partitioned sort never concentrates load.
    *
-   * Labels come from [[dedupClustersStar]] by default: the keeper has no
-   * knowledge of the pair graph's shape, so the O(log n)-round contraction
-   * is the safe choice (label propagation's O(diameter) worst case turns a
-   * chain-shaped duplicate graph into a round-count hostage). Both impls
-   * produce identical labels (min reachable id), so swapping `cc` never
-   * changes the output — pass `dedupClusters` when the graph is known
-   * dense-and-tiny and the cheaper per-round cost wins.
+   * Labels come from [[dedupClusters]], which converges in O(log n)
+   * rounds whatever the pair graph's shape.
    *
    * Returns (doc_id, cluster_id, quality_score rounded, keep ∈ {0,1}).
    */
-  def qualityKeeper(docs: DataFrame, pairs: DataFrame,
-      cc: (DataFrame, DataFrame) => DataFrame = dedupClustersStar(_, _)): DataFrame = {
-    val labels = cc(docs, pairs)
+  def qualityKeeper(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val labels = dedupClusters(docs, pairs)
     val q = TextStats.qualityScore(docs).select(col("doc_id"),
       (round(col("quality_score") * 1e4) / 1e4).as("quality_score"))
     val w = Window.partitionBy("cluster_id").orderBy(col("quality_score").desc, col("doc_id"))

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
  * 3 narrow columns, no corpus text) feed broadcast semi-joins against
  * delta-sized id/gram sets; the only shuffles are the delta-gram df folds
  * and the probe-partner intersection aggregate, all keyed and bounded by
- * the blast radius; the star-CC iteration runs on the touched subgraph
+ * the blast radius; connected components run on the touched subgraph
  * only. All small sides (changed ids, delta grams, crossing grams, seeds,
  * touched labels, sub-corpus ids) are refresh-blast-radius-bounded in
  * production, but only the genuinely delta-sized ones carry a broadcast
@@ -127,7 +127,7 @@ object PairMaintenance {
   /**
    * The incremental refresh: new `(doc_id, cluster_id)` labels and the
    * refreshed exact pair set, equal to a full
-   * [[Dedup.ngramJaccardPairs]] + [[Dedup.dedupClustersStar]] recompute
+   * [[Dedup.ngramJaccardPairs]] + [[Dedup.dedupClusters]] recompute
    * over the refreshed corpus.
    *
    * Inputs: `indexDir` — the shingle index AFTER the refresh's segment
@@ -373,7 +373,7 @@ object PairMaintenance {
     // boundary): the composed join/filter constraints riding subDocs/
     // subPairs survive the star loop's localCheckpoints (LogicalRDD keeps
     // origin constraints) and trip Catalyst's union constraint rewrite
-    // ("key not found: u#N") inside dedupClustersStar's symmetric union
+    // ("key not found: u#N") inside dedupClusters' symmetric union
     def strip(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)
     // r18: no eager checkpoint on the CC result — the star loop inside is
@@ -381,7 +381,7 @@ object PairMaintenance {
     // label-join tail references only the loop's final checkpointed edge
     // set and the strip()-RDD inputs, so it rides the CALLER's one action
     // instead of paying a materialization job here
-    val subCC = labeled("subCC")(Dedup.dedupClustersStar(strip(subDocs), strip(subPairs)))
+    val subCC = labeled("subCC")(Dedup.dedupClusters(strip(subDocs), strip(subPairs)))
     val untouched = oldCC.join(touched, Seq("cluster_id"), "left_anti")
       .select("doc_id", "cluster_id")
     // the returned frames reference only inputs and the eager checkpoints

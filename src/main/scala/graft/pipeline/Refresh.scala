@@ -114,11 +114,11 @@ object Refresh {
       .parquet(a.shingleTombstonesPath)
     emptyTombstones(spark, "vec_id").write.mode("overwrite")
       .parquet(a.ivfTombstonesPath)
-    // the exact near-dup pair set + star-CC labels, version 0
+    // the exact near-dup pair set + CC labels, version 0
     val pairs = Dedup.ngramJaccardPairs(docs, k = shingleK,
       threshold = pairThreshold)
     pairs.write.mode("overwrite").parquet(a.pairsPath(0L))
-    Dedup.dedupClustersStar(docs, spark.read.parquet(a.pairsPath(0L)))
+    Dedup.dedupClusters(docs, spark.read.parquet(a.pairsPath(0L)))
       .write.mode("overwrite").parquet(a.clustersPath(0L))
     writeManifestRow(spark, a, seg = 0L, nEdited = 0L,
       nAdded = docs.count(), nRemoved = 0L, cb = cb)

@@ -14,13 +14,6 @@ object TextStats {
   def tokenCount(text: Column): Column =
     size(filter(split(text, "\\s+"), t => length(t) > 0))
 
-  /** BPE-ish subword count estimate: word-boundary regex split like the GPT-2
-    * pre-tokenizer (letters / digits / punctuation runs), no merges. */
-  def subwordCount(text: Column): Column =
-    size(filter(
-      split(text, "(?=\\s)|(?<=\\s)(?=\\S)|(?<=\\p{L})(?=\\p{N})|(?<=\\p{N})(?=\\p{L})|(?<=[\\p{L}\\p{N}])(?=\\p{P})|(?<=\\p{P})(?=[\\p{L}\\p{N}])"),
-      t => length(trim(t)) > 0))
-
   private val stopwords = Seq("the", "a", "an", "and", "or", "of", "to", "in",
     "is", "are", "was", "for", "on", "with", "as", "by", "at", "from", "that", "this")
 

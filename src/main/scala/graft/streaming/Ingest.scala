@@ -101,15 +101,4 @@ object Ingest {
         (unix_micros(col("last_ts").cast("timestamp")) -
           unix_micros(col("first_ts").cast("timestamp"))).as("duration_us"),
         col("total_value"))
-
-  /** Assemble the streamed long points into the canonical dense series
-    * frame for a [start, stop) request — the bridge from the streaming sink
-    * back into the batch query path. */
-  def toSeriesFrame(spark: SparkSession, pointsPath: String,
-                    start: Long, stopExclusive: Long, step: Long = 3600L): DataFrame =
-    graft.core.SeriesFrame.fromPoints(
-      spark.read.parquet(pointsPath)
-        .where(col("ts") >= start && col("ts") < stopExclusive)
-        .select(col("name"), col("ts"), col("value")),
-      start, stopExclusive, step)
 }

@@ -123,104 +123,101 @@ class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kept == Set(1L, 6L))
   }
 
+  /** Brute-force union-find reference: min reachable id per node. */
+  private def unionFindLabels(ids: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: Long): Long = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.map(i => i -> find(i)).toMap
+  }
+
+  /** dedupClusters' labels with the default gate and with the driver side
+    * switched off (`graft.cc.maxDriverEdges=0` forces star contraction). */
+  private def labelsBothSides(d: org.apache.spark.sql.DataFrame,
+                              pairs: org.apache.spark.sql.DataFrame): (Map[Long, Long], Map[Long, Long]) = {
+    def run() = graft.pipeline.Dedup.dedupClusters(d, pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gated = run()
+    spark.conf.set("graft.cc.maxDriverEdges", "0")
+    try (gated, run()) finally spark.conf.unset("graft.cc.maxDriverEdges")
+  }
+
+  /** Random graphs over ids 0 until n; graph 0 is edgeless (everyone
+    * self-labels), the rest carry duplicate, reversed and self-loop edges. */
+  private def randomGraphs(seed: Int, count: Int): Seq[(Seq[Long], Seq[(Long, Long)])] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until count).map { g =>
+      val n = 2 + rnd.nextInt(40)
+      val edges = if (g == 0) Seq.empty[(Long, Long)]
+        else Seq.fill(rnd.nextInt(2 * n))((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      ((0L until n.toLong), edges)
+    }
+  }
+
   test("dedup clusters: random graphs match brute-force union-find") {
     val s = spark
     import s.implicits._
-    val rnd = new scala.util.Random(7)
-    (1 to 6).foreach { _ =>
-      val n = 2 + rnd.nextInt(30)
-      val nEdges = rnd.nextInt(2 * n)
-      val edges = Seq.fill(nEdges) {
-        val a = rnd.nextInt(n).toLong; val b = rnd.nextInt(n).toLong
-        (math.min(a, b), math.max(a, b))
-      }.filter(e => e._1 != e._2).distinct
-      // brute-force union-find with min-id roots
-      val parent = Array.tabulate(n.toInt)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = (0 until n.toInt).map(i => i.toLong -> find(i).toLong).toMap
-      val d = (0L until n).map(i => (i, s"d$i")).toDF("doc_id", "text")
-      val got =
-        if (edges.isEmpty) graft.pipeline.Dedup.dedupClusters(d, Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
-        else graft.pipeline.Dedup.dedupClusters(d, edges.toDF("doc_a", "doc_b"))
-      val gotMap = got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotMap == want, s"n=$n edges=$edges")
+    for ((ids, edges) <- randomGraphs(seed = 7, count = 8)) {
+      val d = ids.map(i => (i, s"d$i")).toDF("doc_id", "text")
+      val got = graft.pipeline.Dedup.dedupClusters(d, edges.toDF("doc_a", "doc_b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == unionFindLabels(ids, edges), s"n=${ids.size} edges=$edges")
     }
   }
 
-  test("star contraction: random graphs match label propagation; empty graph self-labels") {
+  test("star contraction: random graphs match union-find; empty graph self-labels") {
     val s = spark
     import s.implicits._
-    val rnd = new scala.util.Random(11)
-    (1 to 4).foreach { _ =>
-      val n = 2 + rnd.nextInt(30)
-      val edges = Seq.fill(rnd.nextInt(2 * n)) {
-        val a = rnd.nextInt(n).toLong; val b = rnd.nextInt(n).toLong
-        (math.min(a, b), math.max(a, b))
-      }.filter(e => e._1 != e._2).distinct
-      val d = (0L until n).map(i => (i, s"d$i")).toDF("doc_id", "text")
-      val pairs =
-        if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-        else edges.toDF("doc_a", "doc_b")
-      val prop = graft.pipeline.Dedup.dedupClusters(d, pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = graft.pipeline.Dedup.dedupClustersStar(d, pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == prop, s"n=$n edges=$edges")
+    for ((ids, edges) <- randomGraphs(seed = 11, count = 6)) {
+      val d = ids.map(i => (i, s"d$i")).toDF("doc_id", "text")
+      val (_, dist) = labelsBothSides(d, edges.toDF("doc_a", "doc_b"))
+      assert(dist == unionFindLabels(ids, edges), s"n=${ids.size} edges=$edges")
     }
     val d1 = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
-    val none = graft.pipeline.Dedup.dedupClustersStar(d1, Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (_, none) = labelsBothSides(d1, Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
     assert(none == Map(1L -> 1L, 2L -> 2L))
-  }
-
-  test("star contraction: a 120-long chain converges in O(log n) rounds where label propagation cannot") {
-    val s = spark
-    import s.implicits._
-    val n = 120L
-    val d = (0L until n).map(i => (i, s"d$i")).toDF("doc_id", "text")
-    val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    // force the DISTRIBUTED loops: the r18 small-graph gate would otherwise
-    // resolve this tiny chain by driver union-find (always convergent) and
-    // the round-count semantics below are exactly what this spec gates
-    spark.conf.set("graft.cc.maxDriverEdges", "0")
-    try {
-      // label propagation needs diameter rounds: 119 > the default 50 → throws
-      assertThrows[IllegalStateException] {
-        graft.pipeline.Dedup.dedupClusters(d, chain).collect()
-      }
-      // star contraction is round-logarithmic: well inside 15 rounds
-      val star = graft.pipeline.Dedup.dedupClustersStar(d, chain, maxIters = 15)
-        .collect().map(r => r.getLong(0) -> r.getLong(1))
-      assert(star.length == n && star.forall(_._2 == 0L))
-    } finally spark.conf.unset("graft.cc.maxDriverEdges")
   }
 
   test("small-graph gate: driver union-find labels equal the distributed loops' on random graphs") {
     val s = spark
     import s.implicits._
-    val rnd = new scala.util.Random(41)
-    for (_ <- 1 to 5) {
-      val n = 2 + rnd.nextInt(40)
-      val d = (0L until n.toLong).map(i => (i, s"d$i")).toDF("doc_id", "text")
-      val edges = (1 to rnd.nextInt(60)).map(_ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).filter(e => e._1 != e._2)
-      val pairs =
-        if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-        else edges.toDF("doc_a", "doc_b")
-      // gated run (default conf): small graphs take the union-find path
-      val gated = graft.pipeline.Dedup.dedupClustersStar(d, pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // forced distributed star on the identical input
-      spark.conf.set("graft.cc.maxDriverEdges", "0")
-      val dist = try graft.pipeline.Dedup.dedupClustersStar(d, pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("graft.cc.maxDriverEdges")
-      assert(gated == dist, s"n=$n edges=$edges")
+    for ((ids, edges) <- randomGraphs(seed = 41, count = 5)) {
+      val d = ids.map(i => (i, s"d$i")).toDF("doc_id", "text")
+      val (gated, dist) = labelsBothSides(d, edges.toDF("doc_a", "doc_b"))
+      assert(gated == dist, s"n=${ids.size} edges=$edges")
     }
+  }
+
+  test("dedup clusters: the ngram-jaccard graph of the sf0.001 corpus labels identically on both sides of the gate") {
+    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
+    val pairs = graft.pipeline.Dedup.ngramJaccardPairs(d, k = 3, threshold = 0.5).localCheckpoint(true)
+    val edges = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(edges.nonEmpty)
+    val want = unionFindLabels(d.collect().map(_.getLong(0)).toSeq, edges)
+    // a real dup graph: multi-member components, not just isolated pairs
+    assert(want.values.groupBy(identity).values.exists(_.size >= 3))
+    val (gated, dist) = labelsBothSides(d, pairs)
+    assert(gated == want)
+    assert(dist == want)
+  }
+
+  test("dedup clusters: a 120-long chain converges within 15 distributed rounds") {
+    val s = spark
+    import s.implicits._
+    val n = 120L
+    val d = (0L until n).map(i => (i, s"d$i")).toDF("doc_id", "text")
+    val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    // force the distributed side: the driver union-find would otherwise
+    // resolve this tiny chain, and the round bound is what this gates
+    spark.conf.set("graft.cc.maxDriverEdges", "0")
+    try {
+      val star = graft.pipeline.Dedup.dedupClusters(d, chain, maxIters = 15)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(star.length == n && star.forall(_._2 == 0L))
+    } finally spark.conf.unset("graft.cc.maxDriverEdges")
   }
 
   test("vocab: counts, doc frequency and the top-N cut are exact") {

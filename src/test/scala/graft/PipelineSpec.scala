@@ -1944,7 +1944,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // caller reading them back would
       val oldPairs = D.ngramJaccardPairs(oldDocs, k = 3, threshold = 0.5,
         maxDocFreq = maxDf).localCheckpoint(true)
-      val oldCC = D.dedupClustersStar(oldDocs, oldPairs).localCheckpoint(true)
+      val oldCC = D.dedupClusters(oldDocs, oldPairs).localCheckpoint(true)
       P.writeShingleIndex(oldDocs, dir, k = 3, buckets = 16)
       P.appendToShingleIndex((edits ++ adds).toDF("doc_id", "text"), dir, seg = 1L)
       val noTomb = Seq.empty[(Long, Long)].toDF("doc_id", "before_seg")
@@ -1963,8 +1963,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         maxDocFreq = maxDf)
       assert(pairsOf(incPairs) == pairsOf(fullPairs),
         s"pairs: inc=${pairsOf(incPairs)} full=${pairsOf(fullPairs)}")
-      assert(ccOf(incCC) == ccOf(D.dedupClustersStar(newCorpus, fullPairs)),
-        s"cc: inc=${ccOf(incCC)} full=${ccOf(D.dedupClustersStar(newCorpus, fullPairs))}")
+      assert(ccOf(incCC) == ccOf(D.dedupClusters(newCorpus, fullPairs)),
+        s"cc: inc=${ccOf(incCC)} full=${ccOf(D.dedupClusters(newCorpus, fullPairs))}")
     }
 
     // A: chain 1-2-3 (2 is the bridge), identical pair {5,6}, singleton 7.
@@ -2012,7 +2012,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val oldDocs = olds.toDF("doc_id", "text")
       val pairs0 = D.ngramJaccardPairs(oldDocs, k = 3, threshold = 0.5,
         maxDocFreq = 10L).localCheckpoint(true)
-      val cc0 = D.dedupClustersStar(oldDocs, pairs0).localCheckpoint(true)
+      val cc0 = D.dedupClusters(oldDocs, pairs0).localCheckpoint(true)
       P.writeShingleIndex(oldDocs, dir1, k = 3, buckets = 16)
       val ch1 = Seq((7L, "x1 x2 x3"), (8L, "w1 w2 w3 w4 w5")).toDF("doc_id", "text")
       P.appendToShingleIndex(ch1, dir1, seg = 1L)
@@ -2042,7 +2042,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         maxDocFreq = 10L)
       assert(pairsOf(pairs2) == pairsOf(full2),
         s"gen-2 pairs: inc=${pairsOf(pairs2)} full=${pairsOf(full2)}")
-      assert(ccOf(cc2) == ccOf(D.dedupClustersStar(corpus2, full2)),
+      assert(ccOf(cc2) == ccOf(D.dedupClusters(corpus2, full2)),
         s"gen-2 cc: inc=${ccOf(cc2)}")
     }
   }

@@ -102,7 +102,7 @@ class RefreshSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pk(pairs) == pk(truthPairs),
       "orchestrated pair set must equal the full recompute")
-    val truthCC = Dedup.dedupClustersStar(refreshed.select("doc_id", "text"),
+    val truthCC = Dedup.dedupClusters(refreshed.select("doc_id", "text"),
       truthPairs)
     def ck(df: DataFrame) = df.select("doc_id", "cluster_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -633,7 +633,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // from the initial build, arrivals as the changed set, no deletions
     val oldPairs = graft.pipeline.Dedup.ngramJaccardPairs(initial, k = 3,
       threshold = 0.5).localCheckpoint(true)
-    val oldCC = graft.pipeline.Dedup.dedupClustersStar(initial, oldPairs)
+    val oldCC = graft.pipeline.Dedup.dedupClusters(initial, oldPairs)
       .localCheckpoint(true)
     val noTomb = Seq.empty[(Long, Long)].toDF("doc_id", "before_seg")
     val (cc, pairs) = graft.pipeline.PairMaintenance.incrementalClusters(
@@ -650,7 +650,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ps(pairs) == ps(fullPairs), s"${ps(pairs)} vs ${ps(fullPairs)}")
     def cs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cs(cc) == cs(graft.pipeline.Dedup.dedupClustersStar(all, fullPairs)))
+    assert(cs(cc) == cs(graft.pipeline.Dedup.dedupClusters(all, fullPairs)))
     // each micro-batch landed as its own segment, sizes sidecar included
     val segs = sp.read.parquet(s"$tmp/idx").select("seg").distinct()
       .collect().map(_.getLong(0)).toSet

@@ -10,10 +10,17 @@ the driver. The p41/p54 interpolated-tercile flip (r11) was exactly the
 class this catches: green at the fixed SFs, red on the one corpus that
 put a doc on the cut.
 
-Usage: python3 tools/fuzz_gate.py [nSeeds] [querySubset]
-Defaults: 5 seeds; the cut/bin/threshold rows.
+Modes:
+  python3 tools/fuzz_gate.py [nSeeds [querySubset]]
+      oracle sweep: nSeeds resampled corpora (default 5), each gated on
+      querySubset (default: the cut/bin/threshold rows in SENSITIVE)
+  python3 tools/fuzz_gate.py mm
+      the two 10x multimodal pathological corpora, gated on m06-m08
+
+Any other argument prints this usage and exits 2. The index-lifecycle
+differentials (term, shingle, IVF and refresh) run in the unit suite as
+`LifecycleSpec`.
 """
-import json
 import os
 import subprocess
 import sys
@@ -50,7 +57,7 @@ SENSITIVE = ("p41,p54,p57,p58,p59,p60,p67,p68,p70,p73,p77,p78,p79,p80,"
              "p91,p92,p93,p94,p95,"
              # r15: term autocomplete (fresh prefix-vocabulary df/tie
              # structure every resample; p96 has no oracle — its lifecycle
-             # runs under `fuzz_gate pairs` + the PipelineSpec gates)
+             # runs under LifecycleSpec + the PipelineSpec gates)
              "p97")
 
 
@@ -216,184 +223,26 @@ def main_mm() -> int:
     return 1 if failures else 0
 
 
-def main_mor(n_seeds: int) -> int:
-    """Merge-on-read lifecycle differential (r14): a seeded sequence of
-    random append/edit/delete batches against one term index, every
-    retrieval consumer (boolean AND/OR, BM25, phrase) compared — scores
-    included — against a fresh rebuild of the final corpus state, and
-    again after compaction. The differential runs in-JVM (graft.MoRFuzz:
-    exit 0 = identical); this mode supplies fresh corpora per seed, so
-    segment histories, tombstone layouts and delta-only term structure
-    all vary."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    failures = 0
-    for seed in range(1, n_seeds + 1):
-        sf_dir = f"/tmp/graft_fuzz/corpus_{seed}"
-        gen_corpus(seed, sf_dir)
-        try:
-            r = subprocess.run(
-                ["sbt", "-batch", f"runMain graft.MoRFuzz {sf_dir} {seed}"],
-                cwd=repo, capture_output=True, text=True, timeout=1800)
-        except subprocess.TimeoutExpired:
-            print(f"mor seed {seed}: TIMED OUT (1800s)")
-            failures += 1
-            continue
-        tail = [l for l in r.stdout.splitlines() if "[morfuzz" in l]
-        print(f"mor seed {seed}: " +
-              (tail[-1] if tail else "<no morfuzz output>"))
-        if r.returncode != 0:
-            print(r.stdout[-3000:])
-            print(r.stderr[-2000:])
-            failures += 1
-    print(f"mor fuzz: {n_seeds - failures}/{n_seeds} seeds clean")
-    return 1 if failures else 0
-
-
-def main_pairs(n_seeds: int) -> int:
-    """Shingle-index pair-set/cluster lifecycle differential (r15): three
-    seeded edit/delete/add generations against one maintained shingle
-    index, each refreshed with incrementalClusters over the PREVIOUS
-    generation's own outputs (compaction between gens 2 and 3), compared
-    pair-for-pair and label-for-label against a full recompute
-    (graft.PairFuzz: exit 0 = identical)."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    failures = 0
-    for seed in range(1, n_seeds + 1):
-        sf_dir = f"/tmp/graft_fuzz/corpus_{seed}"
-        gen_corpus(seed, sf_dir)
-        try:
-            r = subprocess.run(
-                ["sbt", "-batch", f"runMain graft.PairFuzz {sf_dir} {seed}"],
-                cwd=repo, capture_output=True, text=True, timeout=1800)
-        except subprocess.TimeoutExpired:
-            print(f"pairs seed {seed}: TIMED OUT (1800s)")
-            failures += 1
-            continue
-        tail = [l for l in r.stdout.splitlines() if "[pairfuzz" in l]
-        print(f"pairs seed {seed}: " +
-              (tail[-1] if tail else "<no pairfuzz output>"))
-        if r.returncode != 0:
-            print(r.stdout[-3000:])
-            print(r.stderr[-2000:])
-            failures += 1
-    print(f"pairs fuzz: {n_seeds - failures}/{n_seeds} seeds clean")
-    return 1 if failures else 0
-
-
-
-def main_ivf(n_seeds: int) -> int:
-    """IVF-PQ vector-index MoR lifecycle differential (r15): seeded random
-    re-embed/delete/add segments against one maintained index, the
-    tombstone-aware serve compared exactly (ids/ranks/rerank distances)
-    against a same-quantizer re-encode of the live corpus, post-compaction
-    and post-compaction-append included (graft.VecFuzz: exit 0 =
-    identical)."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    failures = 0
-    for seed in range(1, n_seeds + 1):
-        sf_dir = f"/tmp/graft_fuzz/corpus_{seed}"
-        gen_corpus(seed, sf_dir)
-        try:
-            r = subprocess.run(
-                ["sbt", "-batch", f"runMain graft.VecFuzz {sf_dir} {seed}"],
-                cwd=repo, capture_output=True, text=True, timeout=1800)
-        except subprocess.TimeoutExpired:
-            print(f"ivf seed {seed}: TIMED OUT (1800s)")
-            failures += 1
-            continue
-        tail = [l for l in r.stdout.splitlines() if "[vecfuzz" in l]
-        print(f"ivf seed {seed}: " +
-              (tail[-1] if tail else "<no vecfuzz output>"))
-        if r.returncode != 0:
-            print(r.stdout[-3000:])
-            print(r.stderr[-2000:])
-            failures += 1
-    print(f"ivf fuzz: {n_seeds - failures}/{n_seeds} seeds clean")
-    return 1 if failures else 0
-
-
-def main_refresh(n_seeds: int) -> int:
-    """Cross-index orchestrated-refresh differential (r16): one seeded
-    random delta stream drives the term + shingle + IVF indexes through
-    Refresh.refreshCorpus each generation (consolidation before gen 3),
-    and /search over the maintained artifact set is compared
-    byte-for-byte against /search over a full rebuild of the current
-    corpus state, every generation (graft.RefreshFuzz: exit 0 =
-    identical)."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    failures = 0
-    for seed in range(1, n_seeds + 1):
-        sf_dir = f"/tmp/graft_fuzz/corpus_{seed}"
-        gen_corpus(seed, sf_dir)
-        try:
-            r = subprocess.run(
-                ["sbt", "-batch", f"runMain graft.RefreshFuzz {sf_dir} {seed}"],
-                cwd=repo, capture_output=True, text=True, timeout=1800)
-        except subprocess.TimeoutExpired:
-            print(f"refresh seed {seed}: TIMED OUT (1800s)")
-            failures += 1
-            continue
-        tail = [l for l in r.stdout.splitlines() if "[refreshfuzz" in l]
-        print(f"refresh seed {seed}: " +
-              (tail[-1] if tail else "<no refreshfuzz output>"))
-        if r.returncode != 0:
-            print(r.stdout[-3000:])
-            print(r.stderr[-2000:])
-            failures += 1
-    print(f"refresh fuzz: {n_seeds - failures}/{n_seeds} seeds clean")
-    return 1 if failures else 0
+USAGE = """usage: python3 tools/fuzz_gate.py [nSeeds [querySubset]]
+       python3 tools/fuzz_gate.py mm"""
 
 
 def main() -> int:
-    if len(sys.argv) > 1 and sys.argv[1] == "mm":
+    args = sys.argv[1:]
+    if args == ["mm"]:
         return main_mm()
-    if len(sys.argv) > 1 and sys.argv[1] == "pairs":
-        return main_pairs(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
-    if len(sys.argv) > 1 and sys.argv[1] == "ivf":
-        return main_ivf(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
-    if len(sys.argv) > 1 and sys.argv[1] == "refresh":
-        return main_refresh(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
-    if len(sys.argv) > 1 and sys.argv[1] == "mor":
-        return main_mor(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
-    n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-    subset = sys.argv[2] if len(sys.argv) > 2 else SENSITIVE
+    if args and not args[0].isdigit() or len(args) > 2:
+        print(USAGE, file=sys.stderr)
+        return 2
+    n_seeds = int(args[0]) if args else 5
+    subset = args[1] if len(args) > 1 else SENSITIVE
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     failures = 0
     for seed in range(1, n_seeds + 1):
         sf_dir = f"/tmp/graft_fuzz/corpus_{seed}"
-        out_dir = f"/tmp/graft_fuzz/out_{seed}"
         gen_corpus(seed, sf_dir)
-        env = dict(os.environ, SPARK_GRAFT_ONLY=subset)
-        # timeouts so a hung sbt/DuckDB can never block the fuzz gate
-        # forever; the pass/fail signal is gate.py's EXIT CODE (0 = all
-        # compared rows ok), not a stdout substring that silently flips
-        # if the output format changes
-        try:
-            r = subprocess.run(
-                ["sbt", "-batch", f'set run/envVars := Map("SPARK_GRAFT_ONLY" -> "{subset}")',
-                 f"runMain graft.Verify {sf_dir} {out_dir}"],
-                cwd=repo, env=env, capture_output=True, text=True,
-                timeout=1800)
-        except subprocess.TimeoutExpired:
-            print(f"seed {seed}: Verify TIMED OUT (1800s)")
-            failures += 1
-            continue
-        if r.returncode != 0:
-            print(f"seed {seed}: Verify FAILED\n{r.stdout[-2000:]}")
-            failures += 1
-            continue
-        try:
-            g = subprocess.run(
-                [sys.executable, f"{repo}/tools/gate.py", out_dir, sf_dir, subset],
-                capture_output=True, text=True, timeout=600)
-        except subprocess.TimeoutExpired:
-            print(f"seed {seed}: gate TIMED OUT (600s)")
-            failures += 1
-            continue
-        line = (g.stdout.strip().splitlines() or ["<no output>"])[-1]
-        print(f"seed {seed}: {line}")
-        if g.returncode != 0:
-            print(g.stdout[-3000:])
+        if not run_gate(repo, sf_dir, f"/tmp/graft_fuzz/out_{seed}", subset,
+                        f"seed {seed}"):
             failures += 1
     print(f"fuzz: {n_seeds - failures}/{n_seeds} seeds clean")
     return 1 if failures else 0
