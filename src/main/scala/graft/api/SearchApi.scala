@@ -27,12 +27,24 @@ import org.apache.spark.sql.functions.col
  *
  * Admission: /search requests past `maxInflight` concurrent answers get an
  * immediate 429 (the reference's limiter.go analog); 200-bodies cache for
- * `cacheTtlSec` keyed on the raw query (immutable artifacts — entries can
+ * `cacheTtlSec` keyed on the raw query (a mount is a snapshot — entries can
  * never be stale, the TTL only bounds memory).
  *
- * Each request is one Spark action over partition-pruned index slices —
- * request cost tracks the query (terms' df, nprobe cells), never the
- * corpus, the property the p84/p87 ScaleBench query arms measure.
+ * The mount contract — like carbonapi resolving its backend routing at
+ * startup, not per request: `start()` opens the artifacts ONCE, as a
+ * [[graft.pipeline.TextStats.TermIndex]] (postings and doclen relations,
+ * bucket count from `.meta`, tombstone-filtered doclen and its corpus
+ * stats) and a [[graft.pipeline.Similarity.IvfIndex]] (corpus relation,
+ * centroids, codebooks, fingerprint check), with the tombstones pinned.
+ * A request then pays only for its own partition-pruned slices — cost
+ * tracks the query (terms' df, nprobe cells), never the corpus, the
+ * property the p84/p87 ScaleBench query arms measure.
+ *
+ * A mount is one consistent SNAPSHOT: the relations keep the file listings
+ * taken at `start()`, so segments a later refresh appends into the same
+ * root stay invisible, exactly like the tombstones that refresh appends.
+ * To serve a refresh, start a new server over the same paths (remount)
+ * and stop the old one.
  *
  * MAINTAINED indexes: a merge-on-read-refreshed index (delta segments +
  * tombstones) serves correctly only when the server knows the tombstones —
@@ -66,10 +78,10 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
   private val inflight = new java.util.concurrent.Semaphore(maxInflight)
 
   // TTL response cache keyed on the raw query string (the reference's
-  // render cache symmetry, render_handler.go:230-247). The mounted
-  // artifacts are immutable, so entries can never be STALE — the TTL and
-  // entry cap only bound memory. 200-bodies only; hits serve without a
-  // limiter permit (no Spark action runs).
+  // render cache symmetry, render_handler.go:230-247). The mount is a
+  // snapshot, so entries can never be STALE — the TTL and entry cap only
+  // bound memory. 200-bodies only; hits serve without a limiter permit
+  // (no Spark action runs).
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
   private val cacheHitCounter = new java.util.concurrent.atomic.AtomicLong(0)
@@ -90,28 +102,26 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
     ivfTombstonesPath.map(p => spark.read.parquet(p)
       .select(col("vec_id"), col("before_seg")).localCheckpoint(true))
 
-  // the hybrid arm's expected query-vector dimension, from the persisted
-  // codebooks (m subspaces × dsub dims) — read once, used to fail a
-  // mis-sized vec= parameter fast instead of deep inside the probe math
-  private lazy val vecDim: Int = {
-    val cb = graft.pipeline.Quantize.readCodebooks(spark, cbPath)
-    cb.length * cb(0)(0).length
-  }
+  // the mounted artifacts (see the class doc), opened by start()
+  private lazy val termIndex = new graft.pipeline.TextStats.TermIndex(
+    spark, termIndexDir, termTombstones)
+  private lazy val ivfIndex = new graft.pipeline.Similarity.IvfIndex(
+    spark, ivfPath, cbPath, ivfTombstones)
 
   /** Index-health snapshot for operators (the /info symmetry for the
-    * corpus surface), computed ONCE on first request — a mounted server's
-    * artifacts are immutable, so segments/counts cannot drift under it.
-    * Metadata-cheap: parquet row counts + distinct-seg scans, never a
-    * vector or postings read. */
+    * corpus surface), computed ONCE on first request — the mount is a
+    * snapshot, so segments/counts cannot drift under it. Metadata-cheap:
+    * parquet row counts + distinct-seg scans, never a vector or postings
+    * read. */
   private lazy val statusJson: String = {
     def segsOf(df: DataFrame): Seq[Long] =
       if (!df.columns.contains("seg")) Seq(0L)
       else df.select("seg").distinct().collect().map(_.getLong(0)).sorted.toSeq
-    val dl = spark.read.parquet(s"$termIndexDir.doclen")
+    val dl = termIndex.doclenRel
     val termSegs = segsOf(dl)
-    val corpus = spark.read.parquet(s"$ivfPath/corpus")
+    val corpus = ivfIndex.corpus
     val ivfSegs = segsOf(corpus)
-    val nlist = spark.read.parquet(s"$ivfPath/centroids").count()
+    val nlist = ivfIndex.centroids.length
     // cross-artifact consistency invariant (the orchestrated-refresh
     // contract, graft.pipeline.Refresh): BOTH indexes must have seen the
     // SAME refresh history — equal segment sets AND equal tombstone
@@ -125,7 +135,7 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
       .map(graft.pipeline.Refresh.tombstoneFingerprint).getOrElse(0L)
     val consistent = termSegs == ivfSegs && termFp == ivfFp
     def arr(xs: Seq[Long]) = xs.mkString("[", ",", "]")
-    s"""{"term_index":{"buckets":${graft.pipeline.TextStats.indexBuckets(spark, termIndexDir, 64)},""" +
+    s"""{"term_index":{"buckets":${termIndex.buckets},""" +
       s""""segments":${arr(termSegs)},"doclen_rows":${dl.count()},""" +
       s""""tombstones":${termTombstones.map(_.count()).getOrElse(0L)},""" +
       s""""tombstone_fp":$termFp},""" +
@@ -147,23 +157,28 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
     require(maxInflight >= 0 && cacheTtlSec >= 0,
       s"SearchApi: maxInflight/cacheTtlSec must be non-negative, got " +
         s"$maxInflight/$cacheTtlSec")
+    // the whole mount happens HERE, so no request pays for it and every
+    // relation's file listing is taken at the same moment (one snapshot):
+    // the term index's relations, bucket count and alive corpus stats, and
+    // the IVF handle — whose opening verifies the code↔codebook pairing
+    // when the index carries a meta fingerprint (a retrained index mounted
+    // with the OLD codebooks would decode wrong distances with no
+    // per-request error)
+    val ti = termIndex
+    val dl = ti.doclenRel
+    ti.buckets
+    ti.stats
     // fail LOUDLY at startup, not silently per query: a multi-segment
     // index without tombstones configured cannot be served correctly
-    require(termTombstones.isDefined ||
-      maxSegOrZero(spark.read.parquet(s"$termIndexDir.doclen")) == 0L,
+    require(termTombstones.isDefined || maxSegOrZero(dl) == 0L,
       s"SearchApi: term index $termIndexDir has delta segments but no " +
         "termTombstonesPath configured — pass the tombstone artifact " +
         "(empty for a pure-append history) or serve the compacted index")
-    require(ivfTombstones.isDefined ||
-      maxSegOrZero(spark.read.parquet(s"$ivfPath/corpus")) == 0L,
+    val ivf = ivfIndex
+    require(ivfTombstones.isDefined || maxSegOrZero(ivf.corpus) == 0L,
       s"SearchApi: IVF index $ivfPath has delta segments but no " +
         "ivfTombstonesPath configured — pass the tombstone artifact " +
         "(empty for a pure-append history) or serve the compacted index")
-    // code↔codebook pairing verified at startup when the index carries a
-    // meta fingerprint: a retrained index mounted with the OLD codebooks
-    // would decode wrong distances with no per-request error
-    graft.pipeline.Similarity.requireCodebookMatch(spark, ivfPath,
-      graft.pipeline.Quantize.readCodebooks(spark, cbPath))
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/search", handleLimited(search))
     server.createContext("/status", handle(_ =>
@@ -276,9 +291,8 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
         require(qs.nonEmpty && qs.forall(_.nonEmpty),
           "bulk needs q1;q2;... with non-empty queries")
         require(qs.size <= 100, s"bulk: at most 100 queries, got ${qs.size}")
-        val rows = graft.pipeline.TextStats.bm25TopKBatch(spark, termIndexDir,
-          qs.zipWithIndex.map { case (t, i) => (i.toLong, t) }, k = k,
-          tombstones = termTombstones).collect()
+        val rows = termIndex.bm25TopKBatch(
+          qs.zipWithIndex.map { case (t, i) => (i.toLong, t) }, k = k).collect()
         val byQ = rows.groupBy(_.getLong(0))
         return qs.indices.map { i =>
           val rs = byQ.getOrElse(i.toLong, Array.empty[org.apache.spark.sql.Row])
@@ -290,19 +304,14 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
     }
     p.get("complete") match {
       case Some(pref) =>
-        val rows = graft.pipeline.TextStats
-          .completeTerms(spark, termIndexDir, pref, k = k,
-            tombstones = termTombstones)
-          .collect()
+        val rows = termIndex.completeTerms(pref, k = k).collect()
         return rows.map(r => s"""{"term":${q(r.getString(0))},"df":${r.getLong(1)}}""")
           .mkString("""{"results":[""", ",", "]}")
       case None => ()
     }
     p.get("glob") match {
       case Some(g) =>
-        val rows = graft.pipeline.TextStats
-          .globSearchTermIndex(spark, termIndexDir, g,
-            tombstones = termTombstones)
+        val rows = termIndex.globSearch(g)
           .orderBy(org.apache.spark.sql.functions.desc("n_hits"),
             org.apache.spark.sql.functions.col("doc_id"))
           .limit(k).collect()
@@ -313,9 +322,7 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
     p.get("phrase") match {
       case Some(ph) =>
         val terms = ph.split("[+ ]").filter(_.nonEmpty).toSeq
-        val rows = graft.pipeline.TextStats
-          .phraseSearch(spark, termIndexDir, terms,
-            tombstones = termTombstones)
+        val rows = termIndex.phraseSearch(terms)
           .orderBy(org.apache.spark.sql.functions.desc("n_occur"),
             org.apache.spark.sql.functions.col("doc_id"))
           .limit(k).collect()
@@ -326,24 +333,19 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
         require(terms.nonEmpty, "missing q, phrase, glob or complete parameter")
         p.getOrElse("mode", "bm25") match {
           case "bm25" =>
-            val rows = graft.pipeline.TextStats
-              .bm25TopK(spark, termIndexDir, terms, k = k,
-                tombstones = termTombstones).collect()
+            val rows = termIndex.bm25TopK(terms, k = k).collect()
             rows.map(r => s"""{"doc_id":${r.getLong(0)},"n_terms":${r.getLong(1)},"score":${r.getDouble(2)}}""")
               .mkString("""{"results":[""", ",", "]}")
           case "hybrid" =>
             val vec = p.getOrElse("vec", "")
             require(vec.nonEmpty, "hybrid mode needs vec=f,f,...")
             val qv = vec.split(",").map(_.trim.toFloat)
-            require(qv.length == vecDim,
-              s"vec has ${qv.length} dims, index expects $vecDim")
+            require(qv.length == ivfIndex.dim,
+              s"vec has ${qv.length} dims, index expects ${ivfIndex.dim}")
             val pool = boundedInt(p, "pool", 20, 1, 1000)
             val nprobe = boundedInt(p, "nprobe", 4, 1, 64)
-            val rows = graft.pipeline.Similarity.hybridServeTopK(spark,
-              termIndexDir, terms, ivfPath, cbPath, qv,
-              k = k, pool = pool, nprobe = nprobe,
-              termTombstones = termTombstones,
-              ivfTombstones = ivfTombstones).collect()
+            val rows = ivfIndex.hybridTopK(termIndex, terms, qv,
+              k = k, pool = pool, nprobe = nprobe).collect()
             rows.map(r => s"""{"doc_id":${r.getLong(0)},"bm_rank":${r.getLong(1)},"ann_rank":${r.getLong(2)},"rrf_x1e6":${r.getLong(3)}}""")
               .mkString("""{"results":[""", ",", "]}")
           case other => throw new IllegalArgumentException(s"bad mode: $other")

@@ -107,21 +107,14 @@ object PairMaintenance {
                           tombstones: DataFrame, outDir: String): Unit = {
     require(outDir != indexDir,
       "compactShingleIndex: outDir must be a fresh location (the scan reads indexDir)")
-    aliveUnder(spark.read.parquet(indexDir), tombstones)
+    TextStats.dropTombstoned(spark.read.parquet(indexDir), Some(tombstones), "doc_id")
       .withColumn("seg", lit(0L))
       .write.mode("overwrite").partitionBy("bucket").parquet(outDir)
-    aliveUnder(spark.read.parquet(s"$indexDir.sizes"), tombstones)
+    TextStats.dropTombstoned(spark.read.parquet(s"$indexDir.sizes"), Some(tombstones), "doc_id")
       .withColumn("seg", lit(0L))
       .write.mode("overwrite").parquet(s"$outDir.sizes")
     val (b, k) = readMeta(spark, indexDir)
     writeMeta(spark, outDir, b, k)
-  }
-
-  private def aliveUnder(rows: DataFrame, tombstones: DataFrame): DataFrame = {
-    val t = tombstones.select(col("doc_id").as("_tid"), col("before_seg"))
-    rows.join(broadcast(t),
-      col("doc_id") === col("_tid") && col("seg") < col("before_seg"),
-      "left_anti")
   }
 
   /**
@@ -308,7 +301,7 @@ object PairMaintenance {
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
     // same alive rule as the index flags, from the same checkpointed fold
-    // (alive iff seg >= max(before_seg)): the old aliveUnder anti-join
+    // (alive iff seg >= max(before_seg)): the old tombstone anti-join
     // re-ran the caller's tombstone derivation per consumer
     val szAll = spark.read.parquet(s"$indexDir.sizes")
       .join(broadcast(bn), Seq("doc_id"), "left")

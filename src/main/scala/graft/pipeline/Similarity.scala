@@ -104,32 +104,55 @@ object Similarity {
                       queryVec: Array[Float], k: Int = 10, pool: Int = 20,
                       nprobe: Int = 4, kRrf: Int = 60,
                       termTombstones: Option[DataFrame] = None,
-                      ivfTombstones: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val bm = TextStats.bm25TopK(spark, termIndexDir, terms, k = pool,
-        tombstones = termTombstones)
-      .select(col("doc_id"), col("score"))
-    val wb = Window.orderBy(desc("score"), col("doc_id")) // ≤pool rows by limit
-    val bmR = bm.withColumn("bm_rank", row_number().over(wb).cast("long"))
-      .select(col("doc_id"), col("bm_rank"))
-    val (index, cents) = readIndex(spark, ivfPath)
-    val cb = Quantize.readCodebooks(spark, codebooksPath)
-    requireCodebookMatch(spark, ivfPath, cb)
-    val annR = ivfPqTopK(index,
-        Seq((-1L, queryVec.toSeq)).toDF("vec_id", "embedding"),
-        cb, cents, k = pool, nprobe = nprobe, tombstones = ivfTombstones)
-      .select(col("neighbor_id").as("doc_id"),
-        col("rank").cast("long").as("ann_rank"))
-    bmR.join(annR, Seq("doc_id"), "full_outer")
-      .withColumn("rrf_x1e6", round((
-        coalesce(lit(1.0) / (col("bm_rank") + kRrf), lit(0.0)) +
-          coalesce(lit(1.0) / (col("ann_rank") + kRrf), lit(0.0))) * 1e6).cast("long"))
-      .select(col("doc_id"),
-        coalesce(col("bm_rank"), lit(0L)).as("bm_rank"),
-        coalesce(col("ann_rank"), lit(0L)).as("ann_rank"),
-        col("rrf_x1e6"))
-      .orderBy(desc("rrf_x1e6"), col("doc_id"))
-      .limit(k)
+                      ivfTombstones: Option[DataFrame] = None): DataFrame =
+    new IvfIndex(spark, ivfPath, codebooksPath, ivfTombstones).hybridTopK(
+      new TextStats.TermIndex(spark, termIndexDir, termTombstones), terms,
+      queryVec, k, pool, nprobe, kRrf)
+
+  /**
+   * An opened IVF-PQ index — what [[hybridServeTopK]] and
+   * [[graft.api.SearchApi]] query. Resolved once, at open: the corpus
+   * relation (its file listing and schema, so the handle is a snapshot of
+   * the segments present then), the centroids, the codebooks and the
+   * code↔codebook fingerprint check ([[requireCodebookMatch]]).
+   * `tombstones` is (vec_id, before_seg), the matching snapshot of the
+   * tombstone table.
+   */
+  final class IvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                       codebooksPath: String,
+                       tombstones: Option[DataFrame] = None) {
+    val (corpus, centroids) = readIndex(spark, path)
+    val codebooks: Array[Array[Array[Double]]] = Quantize.readCodebooks(spark, codebooksPath)
+    requireCodebookMatch(spark, path, codebooks)
+
+    /** The query-vector dimension the codebooks expect (m × dsub). */
+    def dim: Int = codebooks.length * codebooks(0)(0).length
+
+    /** The hybrid RRF fusion of `terms`'s BM25 top-`pool` over `ti` and
+      * the vector's IVF-PQ top-`pool` ([[ivfPqTopK]]) here — see
+      * [[hybridServeTopK]]. */
+    def hybridTopK(ti: TextStats.TermIndex, terms: Seq[String],
+                   queryVec: Array[Float], k: Int = 10, pool: Int = 20,
+                   nprobe: Int = 4, kRrf: Int = 60): DataFrame = {
+      val bm = ti.bm25TopK(terms, k = pool).select(col("doc_id"), col("score"))
+      val wb = Window.orderBy(desc("score"), col("doc_id")) // ≤pool rows by limit
+      val bmR = bm.withColumn("bm_rank", row_number().over(wb).cast("long"))
+        .select(col("doc_id"), col("bm_rank"))
+      val annR = probeAndRerank(corpus, Array((-1L, queryVec.map(_.toDouble))),
+          codebooks, centroids, pool, nprobe, tombstones = tombstones)
+        .select(col("neighbor_id").as("doc_id"),
+          col("rank").cast("long").as("ann_rank"))
+      bmR.join(annR, Seq("doc_id"), "full_outer")
+        .withColumn("rrf_x1e6", round((
+          coalesce(lit(1.0) / (col("bm_rank") + kRrf), lit(0.0)) +
+            coalesce(lit(1.0) / (col("ann_rank") + kRrf), lit(0.0))) * 1e6).cast("long"))
+        .select(col("doc_id"),
+          coalesce(col("bm_rank"), lit(0L)).as("bm_rank"),
+          coalesce(col("ann_rank"), lit(0L)).as("ann_rank"),
+          col("rrf_x1e6"))
+        .orderBy(desc("rrf_x1e6"), col("doc_id"))
+        .limit(k)
+    }
   }
 
   /**
@@ -490,16 +513,10 @@ object Similarity {
   // (the FreshDiskANN split: a fast in-place delta path plus a periodic
   // consolidation rebuild, Singh et al. 2021, arXiv:2105.09613).
 
-  /** Alive index rows under `(vec_id, before_seg)` tombstones — the same
-    * broadcast anti-join contract as the term index (tombstones are
-    * refresh-sized by nature: only CHANGED vectors have one). */
+  /** Alive index rows under `(vec_id, before_seg)` tombstones — the term
+    * index's broadcast anti-join ([[TextStats.dropTombstoned]]). */
   private def aliveVecs(rows: DataFrame, tombstones: Option[DataFrame]): DataFrame =
-    tombstones.fold(rows) { tb =>
-      val t = tb.select(col("vec_id").as("_tid"), col("before_seg"))
-      rows.join(broadcast(t),
-        col("vec_id") === col("_tid") && col("seg") < col("before_seg"),
-        "left_anti")
-    }
+    TextStats.dropTombstoned(rows, tombstones, "vec_id")
 
   /**
    * Delta-sized segment append: the new/edited vectors assign to the
@@ -749,13 +766,23 @@ object Similarity {
                 centroids: Array[(Int, Array[Double])],
                 k: Int, nprobe: Int, shortlist: Int = 50,
                 maxQ: Int = maxDriverQueries,
-                tombstones: Option[DataFrame] = None): DataFrame = {
+                tombstones: Option[DataFrame] = None): DataFrame =
+    probeAndRerank(index,
+      queries.select(col("vec_id"), col("embedding")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)),
+      codebooks, centroids, k, nprobe, shortlist, maxQ, tombstones)
+
+  /** [[ivfPqTopK]] over queries already on the driver. */
+  private def probeAndRerank(index: DataFrame, qs: Array[(Long, Array[Double])],
+                             codebooks: Array[Array[Array[Double]]],
+                             centroids: Array[(Int, Array[Double])],
+                             k: Int, nprobe: Int, shortlist: Int = 50,
+                             maxQ: Int = maxDriverQueries,
+                             tombstones: Option[DataFrame] = None): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
-    val qs = queries.select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
     require(qs.nonEmpty, "ivfPqTopK: empty query set")
     // the driver computes q × nlist probe scores and q × m × ksub ADC
     // doubles — fine while queries are the small side BY CONTRACT; enforce

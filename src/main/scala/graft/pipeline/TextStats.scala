@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Text-quality operators for training-data curation over `documents`.
@@ -461,9 +464,8 @@ object TextStats {
     // doc-cardinality metadata, derived from the postings just written so
     // the corpus never scans twice. The 1-row corpus stats (n_docs,
     // total_tokens) are deliberately NOT persisted: they depend on the
-    // tombstone set, which exists only at query time, so [[bm25TopK]]
-    // folds them from the alive doclen per query (a 2-column agg over a
-    // frame the query already scans for the dl join).
+    // tombstone set, which exists only at query time, so [[TermIndex]]
+    // folds them from the alive doclen once per opened handle.
     val p = docs.sparkSession.read.parquet(dir)
     p.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
       .withColumn("seg", lit(0L))
@@ -482,50 +484,187 @@ object TextStats {
       .write.mode("overwrite").parquet(s"$dir.meta")
   }
 
-  private[graft] def indexBuckets(spark: SparkSession, dir: String,
-                                  fallback: Int): Int =
+  private def indexBuckets(spark: SparkSession, dir: String,
+                           fallback: Int): Int =
     try spark.read.parquet(s"$dir.meta").select("buckets").head().getInt(0)
     catch { case _: org.apache.spark.sql.AnalysisException => fallback }
 
-  /** Alive doclen rows: the same tombstone semantics as the postings
-    * ((doc_id, before_seg) kills rows with seg < before_seg). Under the
-    * maintenance contract (every edit appends AND tombstones its prior
-    * segments — the same rule that keeps the postings duplicate-free)
-    * exactly one row per alive doc survives. */
-  private def aliveDoclen(spark: SparkSession, dir: String,
-                          tombstones: Option[DataFrame]): DataFrame = {
-    val dl = spark.read.parquet(s"$dir.doclen")
-    tombstones.fold(dl) { tb =>
-      val t = tb.select(col("doc_id").as("_tid"), col("before_seg"))
-      dl.join(broadcast(t),
-        col("doc_id") === col("_tid") && col("seg") < col("before_seg"),
+  /** The one tombstone rule of every merge-on-read artifact: a
+    * `(key, before_seg)` tombstone kills the key's rows with
+    * seg < before_seg. Tombstones are refresh-sized by nature (only
+    * CHANGED docs have one), so they broadcast into a left-anti keyed on
+    * `key` with the segment range as the residual. */
+  private[pipeline] def dropTombstoned(rows: DataFrame,
+                                       tombstones: Option[DataFrame],
+                                       key: String): DataFrame =
+    tombstones.fold(rows) { tb =>
+      val t = tb.select(col(key).as("_tid"), col("before_seg"))
+      rows.join(broadcast(t),
+        col(key) === col("_tid") && col("seg") < col("before_seg"),
         "left_anti")
-    }.select(col("doc_id"), col("dl"))
-  }
+    }
 
-  /** The shared query-side scan: the query terms' buckets computed
-    * driver-side (k values — bounded by the query, the documented collect
-    * contract) land in the scan as partition-pruning literals; the term
-    * equality disjunction pushes into the parquet row groups; tombstones
-    * (refresh-sized by nature — only CHANGED docs have one) broadcast into
-    * a left-anti keyed on doc_id with the segment range as the residual,
-    * applied only to the pruned slices. The bucket count resolves from the
-    * index's own meta sidecar, never trusted from the caller. */
-  private def prunedAlivePostings(spark: SparkSession, indexDir: String,
-                                  q: Seq[String], buckets: Int,
-                                  tombstones: Option[DataFrame]): DataFrame = {
-    import spark.implicits._
-    val b = indexBuckets(spark, indexDir, buckets)
-    val bucketVals = spark.createDataset(q).toDF("term")
-      .select(pmod(hash(col("term")), lit(b)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val idx = spark.read.parquet(indexDir)
-      .where(col("bucket").isin(bucketVals: _*) && col("term").isin(q: _*))
-    tombstones.fold(idx) { tb =>
-      val t = tb.select(col("doc_id").as("_tid"), col("before_seg"))
-      idx.join(broadcast(t),
-        col("doc_id") === col("_tid") && col("seg") < col("before_seg"),
-        "left_anti")
+  /**
+   * An opened term index — the one implementation of every term-index
+   * reader: each dir-based function below ([[bm25TopK]], [[phraseSearch]],
+   * ...; their docs give the scale shape) opens one and calls its
+   * like-named method. A long-lived reader ([[graft.api.SearchApi]]) opens
+   * one per mount, so a request pays only for its own postings slices.
+   * Resolved once each: the postings relation (at open) and the doclen
+   * relation (first use) — one DataFrame keeps its file listing and
+   * schema, so the handle is a SNAPSHOT of the segments present then, and
+   * `tombstones` must be the matching snapshot; the bucket count, from
+   * `.meta` (`fallbackBuckets` only for a pre-meta index); the alive
+   * doclen and its corpus stats, which enter BM25 as literals. A term's
+   * bucket is computed on the driver ([[bucketOf]]), starting no job.
+   */
+  final class TermIndex(spark: SparkSession, dir: String,
+                        tombstones: Option[DataFrame] = None,
+                        fallbackBuckets: Int = 64) {
+
+    val postingsRel: DataFrame = spark.read.parquet(dir)
+    lazy val doclenRel: DataFrame = spark.read.parquet(s"$dir.doclen")
+    lazy val buckets: Int = indexBuckets(spark, dir, fallbackBuckets)
+
+    /** `rows` minus the tombstoned ones (the mount's tombstone snapshot). */
+    def alive(rows: DataFrame): DataFrame = dropTombstoned(rows, tombstones, "doc_id")
+
+    /** Alive (doc_id, dl) rows. Under the maintenance contract (every edit
+      * appends AND tombstones its prior segments — the rule that keeps the
+      * postings duplicate-free) exactly one row per alive doc survives. */
+    lazy val doclen: DataFrame = alive(doclenRel).select(col("doc_id"), col("dl"))
+
+    /** (n_docs, total_tokens) over the alive doclen — folded here, never
+      * persisted, because they depend on the tombstone set. A mount whose
+      * every doc is tombstoned has no rows, and the sum over them is null:
+      * it reads 0 (every score is then null, over no hits). */
+    lazy val stats: (Long, Long) = {
+      val r = doclen.agg(count(lit(1)), sum(col("dl"))).head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+
+    /** The partition a term's postings were written to: the Murmur3 (seed
+      * 42) that `hash()` applies, then `pmod` by the bucket count. */
+    def bucketOf(term: String): Int =
+      Math.floorMod(Murmur3HashFunction.hash(
+        UTF8String.fromString(term), StringType, 42L).toInt, buckets)
+
+    /** Alive postings of the query terms: their buckets land in the scan
+      * as partition-pruning literals, the term equality disjunction
+      * pushes into the parquet row groups, and the tombstone anti-join
+      * runs on the pruned slices only. */
+    private def postings(terms: Seq[String]): DataFrame =
+      alive(postingsRel.where(
+        col("bucket").isin(terms.map(bucketOf).distinct: _*) &&
+          col("term").isin(terms: _*)))
+
+    private def perDoc(rows: DataFrame): DataFrame =
+      rows.groupBy("doc_id")
+        .agg(countDistinct(col("term")).as("n_terms"), sum(col("tf")).as("n_hits"))
+
+    /** Per alive (term, doc) posting of the (distinct) `terms`: the BM25
+      * contribution `_c`, quantized to a 1e-6-scaled integer before any sum. */
+    private def contributions(terms: Seq[String], k1: Double, b: Double): DataFrame = {
+      val (nDocs, totalTokens) = stats
+      val hits = postings(terms).select(col("term"), col("doc_id"), col("tf"))
+      val dfs = hits.groupBy("term").agg(count(lit(1)).as("df"))
+      val idf = log(lit(1.0) +
+        (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+      val norm = col("tf") * lit(k1 + 1.0) /
+        (col("tf") + lit(k1) * (lit(1.0 - b) +
+          lit(b) * (col("dl") * lit(nDocs)).cast("double") / lit(totalTokens)))
+      hits.join(broadcast(dfs), "term")
+        .join(doclen, "doc_id")
+        .withColumn("_c", round(idf * norm * 1e6).cast("long"))
+    }
+
+    private val score = (round(col("_s").cast("double") / 1e6 * 1e4) / 1e4).as("score")
+
+    def bm25TopK(terms: Seq[String], k: Int = 10,
+                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      require(terms.nonEmpty, "bm25TopK: empty query")
+      contributions(terms.distinct, k1, b)
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_terms"), sum(col("_c")).as("_s"))
+        .select(col("doc_id"), col("n_terms"), score)
+        .orderBy(desc("score"), col("doc_id"))
+        .limit(k)
+    }
+
+    def bm25TopKBatch(queries: Seq[(Long, Seq[String])], k: Int = 10,
+                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      import spark.implicits._
+      require(queries.nonEmpty, "bm25TopKBatch: empty query set")
+      require(queries.forall(_._2.nonEmpty), "bm25TopKBatch: empty query")
+      val qTerms = broadcast(queries
+        .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
+        .toDF("query_id", "term"))
+      contributions(queries.flatMap(_._2).distinct, k1, b)
+        .join(qTerms, "term")
+        .groupBy("query_id", "doc_id")
+        .agg(count(lit(1)).as("n_terms"), sum(col("_c")).as("_s"))
+        .select(col("query_id"), col("doc_id"), col("n_terms"), score)
+        .withColumn("rank", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+            .orderBy(desc("score"), col("doc_id"))))
+        .where(col("rank") <= k)
+        .select("query_id", "doc_id", "n_terms", "score")
+        .orderBy(col("query_id"), desc("score"), col("doc_id"))
+    }
+
+    def phraseSearch(phrase: Seq[String]): DataFrame = {
+      require(phrase.size >= 2, "phraseSearch: need at least 2 terms")
+      val idx = postings(phrase.distinct)
+        .select(col("term"), col("doc_id"), col("positions"))
+      var acc = idx.where(col("term") === phrase.head)
+        .select(col("doc_id"), col("positions").as("starts"))
+      for ((t, i) <- phrase.zipWithIndex.drop(1)) {
+        val p = idx.where(col("term") === t)
+          .select(col("doc_id"), col("positions").as(s"_p$i"))
+        acc = acc.join(p, "doc_id")
+          .withColumn("starts",
+            filter(col("starts"), s => array_contains(col(s"_p$i"), s + lit(i))))
+          .where(size(col("starts")) > 0)
+          .drop(s"_p$i")
+      }
+      acc.select(col("doc_id"), size(col("starts")).cast("long").as("n_occur"))
+    }
+
+    def search(terms: Seq[String], mode: String = "and"): DataFrame = {
+      require(terms.nonEmpty, "searchTermIndex: empty query")
+      val q = terms.distinct
+      val hits = perDoc(postings(q))
+      mode match {
+        case "and" => hits.where(col("n_terms") === q.size)
+          .select(col("doc_id"), col("n_hits"))
+        case "or" => hits.select(col("doc_id"), col("n_terms"), col("n_hits"))
+        case other => throw new IllegalArgumentException(
+          s"searchTermIndex: bad mode $other")
+      }
+    }
+
+    def prefixSearch(prefix: String): DataFrame = {
+      require(prefix.nonEmpty, "prefixSearchTermIndex: empty prefix")
+      perDoc(alive(postingsRel.where(col("term").startsWith(prefix))))
+    }
+
+    def completeTerms(prefix: String, k: Int = 10): DataFrame = {
+      require(prefix.nonEmpty, "completeTerms: empty prefix")
+      // alive postings are unique per (term, doc) under the maintenance
+      // contract (same as bm25TopK's df), so count(*) IS the doc frequency
+      alive(postingsRel.where(col("term").startsWith(prefix))).groupBy("term")
+        .agg(count(lit(1)).as("df"))
+        .orderBy(desc("df"), col("term"))
+        .limit(k)
+    }
+
+    def globSearch(glob: String): DataFrame = {
+      require(glob.nonEmpty, "globSearchTermIndex: empty glob")
+      val prefix = graft.core.Glob.literalPrefix(glob)
+      val pruned =
+        if (prefix.nonEmpty) postingsRel.where(col("term").startsWith(prefix))
+        else postingsRel
+      perDoc(alive(pruned.where(col("term").rlike(graft.core.Glob.toRegex(glob)))))
     }
   }
 
@@ -588,24 +727,8 @@ object TextStats {
    */
   def phraseSearch(spark: SparkSession, indexDir: String,
                    phrase: Seq[String], buckets: Int = 64,
-                   tombstones: Option[DataFrame] = None): DataFrame = {
-    require(phrase.size >= 2, "phraseSearch: need at least 2 terms")
-    val q = phrase.distinct
-    val idx = prunedAlivePostings(spark, indexDir, q, buckets, tombstones)
-      .select(col("term"), col("doc_id"), col("positions"))
-    var acc = idx.where(col("term") === phrase.head)
-      .select(col("doc_id"), col("positions").as("starts"))
-    for ((t, i) <- phrase.zipWithIndex.drop(1)) {
-      val p = idx.where(col("term") === t)
-        .select(col("doc_id"), col("positions").as(s"_p$i"))
-      acc = acc.join(p, "doc_id")
-        .withColumn("starts",
-          filter(col("starts"), s => array_contains(col(s"_p$i"), s + lit(i))))
-        .where(size(col("starts")) > 0)
-        .drop(s"_p$i")
-    }
-    acc.select(col("doc_id"), size(col("starts")).cast("long").as("n_occur"))
-  }
+                   tombstones: Option[DataFrame] = None): DataFrame =
+    new TermIndex(spark, indexDir, tombstones, buckets).phraseSearch(phrase)
 
   /**
    * BM25 ranked retrieval over the persisted index (Robertson et al.,
@@ -621,43 +744,22 @@ object TextStats {
    * tombstones applied by the shared broadcast anti-join (so a merge-on-
    * read-maintained index ranks appended docs and never ranks deleted
    * ones); df is counted on the alive pruned postings (k rows, broadcast
-   * back); dl is the alive doc-length sidecar joined on doc_id; the 1-row
-   * corpus stats fold from the SAME alive doclen at query time (the only
-   * tombstone-exact place — a 2-col columnar agg over a frame the query
-   * already reads) and ride a 1-row broadcast; the top-k is TakeOrdered.
+   * back); dl is the alive doc-length sidecar joined on doc_id; the
+   * corpus stats (n_docs, total_tokens) fold from the SAME alive doclen
+   * once per opened [[TermIndex]] (the only tombstone-exact place) and
+   * enter the formula as literals; the top-k is TakeOrdered.
    * The dl·N product stays under 2^63 for dl·N < 9.2e18 (e.g. 10^4-token
    * docs in a 10^13-doc corpus) — the g105 bound rule, documented not
    * assumed.
+   * This overload opens a [[TermIndex]] per call, so its corpus-stats job
+   * runs when it is CALLED, not when the returned frame runs (likewise
+   * [[bm25TopKBatch]] and `Similarity.hybridServeTopK`).
    */
   def bm25TopK(spark: SparkSession, indexDir: String, terms: Seq[String],
                k: Int = 10, buckets: Int = 64,
                k1: Double = 1.2, b: Double = 0.75,
-               tombstones: Option[DataFrame] = None): DataFrame = {
-    require(terms.nonEmpty, "bm25TopK: empty query")
-    val q = terms.distinct
-    val hits = prunedAlivePostings(spark, indexDir, q, buckets, tombstones)
-      .select(col("term"), col("doc_id"), col("tf"))
-    val dfs = hits.groupBy("term").agg(count(lit(1)).as("df"))
-    val dl = aliveDoclen(spark, indexDir, tombstones)
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_tokens"))
-    val idf = log(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val norm = col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) +
-        lit(b) * (col("dl") * col("n_docs")).cast("double") / col("total_tokens")))
-    hits
-      .join(broadcast(dfs), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("_c", round(idf * norm * 1e6).cast("long"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("_c")).as("_s"))
-      .select(col("doc_id"), col("n_terms"),
-        (round(col("_s").cast("double") / 1e6 * 1e4) / 1e4).as("score"))
-      .orderBy(desc("score"), col("doc_id"))
-      .limit(k)
-  }
+               tombstones: Option[DataFrame] = None): DataFrame =
+    new TermIndex(spark, indexDir, tombstones, buckets).bm25TopK(terms, k, k1, b)
 
   /**
    * Batched multi-query BM25 — the fetchMulti lesson applied to retrieval
@@ -678,42 +780,8 @@ object TextStats {
   def bm25TopKBatch(spark: SparkSession, indexDir: String,
                     queries: Seq[(Long, Seq[String])], k: Int = 10,
                     buckets: Int = 64, k1: Double = 1.2, b: Double = 0.75,
-                    tombstones: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    require(queries.nonEmpty, "bm25TopKBatch: empty query set")
-    require(queries.forall(_._2.nonEmpty), "bm25TopKBatch: empty query")
-    val allTerms = queries.flatMap(_._2).distinct
-    val hits = prunedAlivePostings(spark, indexDir, allTerms, buckets, tombstones)
-      .select(col("term"), col("doc_id"), col("tf"))
-    val dfs = hits.groupBy("term").agg(count(lit(1)).as("df"))
-    val dl = aliveDoclen(spark, indexDir, tombstones)
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_tokens"))
-    val qTerms = broadcast(queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-      .toDF("query_id", "term"))
-    val idf = log(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val norm = col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) +
-        lit(b) * (col("dl") * col("n_docs")).cast("double") / col("total_tokens")))
-    hits
-      .join(qTerms, "term")
-      .join(broadcast(dfs), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("_c", round(idf * norm * 1e6).cast("long"))
-      .groupBy("query_id", "doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("_c")).as("_s"))
-      .select(col("query_id"), col("doc_id"), col("n_terms"),
-        (round(col("_s").cast("double") / 1e6 * 1e4) / 1e4).as("score"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(desc("score"), col("doc_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "doc_id", "n_terms", "score")
-      .orderBy(col("query_id"), desc("score"), col("doc_id"))
-  }
+                    tombstones: Option[DataFrame] = None): DataFrame =
+    new TermIndex(spark, indexDir, tombstones, buckets).bm25TopKBatch(queries, k, k1, b)
 
   /** The offline janitor completing the merge-on-read lifecycle: rewrite
     * the ALIVE postings (tombstones applied across every segment) as a
@@ -730,41 +798,23 @@ object TextStats {
                        tombstones: DataFrame, outDir: String): Unit = {
     require(outDir != indexDir,
       "compactTermIndex: outDir must be a fresh location (the scan reads indexDir)")
-    val t = tombstones.select(col("doc_id").as("_tid"), col("before_seg"))
-    spark.read.parquet(indexDir)
-      .join(broadcast(t),
-        col("doc_id") === col("_tid") && col("seg") < col("before_seg"),
-        "left_anti")
+    val ti = new TermIndex(spark, indexDir, Some(tombstones))
+    ti.alive(ti.postingsRel)
       .withColumn("seg", lit(0L))
       .sortWithinPartitions("bucket", "term")
       .write.mode("overwrite").partitionBy("bucket").parquet(outDir)
-    aliveDoclen(spark, indexDir, Some(tombstones))
+    ti.doclen
       .withColumn("seg", lit(0L))
       .write.mode("overwrite").parquet(s"$outDir.doclen")
-    writeIndexMeta(spark, outDir, indexBuckets(spark, indexDir, 64))
+    writeIndexMeta(spark, outDir, ti.buckets)
   }
 
   /** Retrieval over a maintained index: [[searchTermIndex]] plus the
-    * tombstone anti-join. `tombstones` is (doc_id, before_seg) — refresh-
-    * sized by nature (only CHANGED docs have one), so it broadcasts; the
-    * anti-join keys on doc_id with the segment range as the join residual,
-    * applied only to the ≤ k pruned postings partitions. */
+    * tombstone anti-join ([[dropTombstoned]]) on the pruned postings. */
   def searchTermIndexMoR(spark: SparkSession, indexDir: String,
                          tombstones: DataFrame, terms: Seq[String],
-                         mode: String = "and", buckets: Int = 64): DataFrame = {
-    require(terms.nonEmpty, "searchTermIndexMoR: empty query")
-    val q = terms.distinct
-    val alive = prunedAlivePostings(spark, indexDir, q, buckets, Some(tombstones))
-    val hits = alive.groupBy("doc_id")
-      .agg(countDistinct(col("term")).as("n_terms"), sum(col("tf")).as("n_hits"))
-    mode match {
-      case "and" => hits.where(col("n_terms") === q.size)
-        .select(col("doc_id"), col("n_hits"))
-      case "or" => hits.select(col("doc_id"), col("n_terms"), col("n_hits"))
-      case other => throw new IllegalArgumentException(
-        s"searchTermIndexMoR: bad mode $other")
-    }
-  }
+                         mode: String = "and", buckets: Int = 64): DataFrame =
+    new TermIndex(spark, indexDir, Some(tombstones), buckets).search(terms, mode)
 
   /**
    * Prefix (`term LIKE 'foo%'`) retrieval over the persisted index — the
@@ -787,20 +837,8 @@ object TextStats {
    */
   def prefixSearchTermIndex(spark: SparkSession, indexDir: String,
                             prefix: String,
-                            tombstones: Option[DataFrame] = None): DataFrame = {
-    require(prefix.nonEmpty, "prefixSearchTermIndex: empty prefix")
-    val idx = spark.read.parquet(indexDir)
-      .where(col("term").startsWith(prefix))
-    val alive = tombstones.fold(idx) { tb =>
-      val t = tb.select(col("doc_id").as("_tid"), col("before_seg"))
-      idx.join(broadcast(t),
-        col("doc_id") === col("_tid") && col("seg") < col("before_seg"),
-        "left_anti")
-    }
-    alive.groupBy("doc_id")
-      .agg(countDistinct(col("term")).as("n_terms"),
-        sum(col("tf")).as("n_hits"))
-  }
+                            tombstones: Option[DataFrame] = None): DataFrame =
+    new TermIndex(spark, indexDir, tombstones).prefixSearch(prefix)
 
   /**
    * Term autocomplete over the persisted index — the content-side twin of
@@ -819,23 +857,8 @@ object TextStats {
    */
   def completeTerms(spark: SparkSession, indexDir: String, prefix: String,
                     k: Int = 10,
-                    tombstones: Option[DataFrame] = None): DataFrame = {
-    require(prefix.nonEmpty, "completeTerms: empty prefix")
-    val idx = spark.read.parquet(indexDir)
-      .where(col("term").startsWith(prefix))
-    val alive = tombstones.fold(idx) { tb =>
-      val t = tb.select(col("doc_id").as("_tid"), col("before_seg"))
-      idx.join(broadcast(t),
-        col("doc_id") === col("_tid") && col("seg") < col("before_seg"),
-        "left_anti")
-    }
-    // alive postings are unique per (term, doc) under the maintenance
-    // contract (same as bm25TopK's df), so count(*) IS the doc frequency
-    alive.groupBy("term")
-      .agg(count(lit(1)).as("df"))
-      .orderBy(desc("df"), col("term"))
-      .limit(k)
-  }
+                    tombstones: Option[DataFrame] = None): DataFrame =
+    new TermIndex(spark, indexDir, tombstones).completeTerms(prefix, k)
 
   /**
    * Glob term retrieval — the reference's full glob grammar
@@ -852,47 +875,19 @@ object TextStats {
    */
   def globSearchTermIndex(spark: SparkSession, indexDir: String,
                           glob: String,
-                          tombstones: Option[DataFrame] = None): DataFrame = {
-    require(glob.nonEmpty, "globSearchTermIndex: empty glob")
-    val prefix = graft.core.Glob.literalPrefix(glob)
-    val rx = graft.core.Glob.toRegex(glob)
-    val base = spark.read.parquet(indexDir)
-    val pruned = if (prefix.nonEmpty) base.where(col("term").startsWith(prefix)) else base
-    val idx = pruned.where(col("term").rlike(rx))
-    val alive = tombstones.fold(idx) { tb =>
-      val t = tb.select(col("doc_id").as("_tid"), col("before_seg"))
-      idx.join(broadcast(t),
-        col("doc_id") === col("_tid") && col("seg") < col("before_seg"),
-        "left_anti")
-    }
-    alive.groupBy("doc_id")
-      .agg(countDistinct(col("term")).as("n_terms"),
-        sum(col("tf")).as("n_hits"))
-  }
+                          tombstones: Option[DataFrame] = None): DataFrame =
+    new TermIndex(spark, indexDir, tombstones).globSearch(glob)
 
   /**
    * Boolean retrieval against the persisted index: mode `and` returns
    * docs containing EVERY query term (relevance = summed tf), `or` docs
    * containing ANY (with how many distinct terms matched). The query
-   * terms' buckets are computed driver-side (k values — bounded by the
-   * query, the documented collect contract) and land in the scan as
-   * partition-pruning literals; the term equality disjunction pushes into
-   * the parquet row groups.
+   * terms' buckets are computed on the driver ([[TermIndex.bucketOf]], no
+   * job) and land in the scan as partition-pruning literals; the term
+   * equality disjunction pushes into the parquet row groups.
    */
   def searchTermIndex(spark: SparkSession, indexDir: String,
                       terms: Seq[String], mode: String = "and",
-                      buckets: Int = 64): DataFrame = {
-    require(terms.nonEmpty, "searchTermIndex: empty query")
-    val q = terms.distinct
-    val hits = prunedAlivePostings(spark, indexDir, q, buckets, None)
-      .groupBy("doc_id")
-      .agg(countDistinct(col("term")).as("n_terms"), sum(col("tf")).as("n_hits"))
-    mode match {
-      case "and" => hits.where(col("n_terms") === q.size)
-        .select(col("doc_id"), col("n_hits"))
-      case "or" => hits.select(col("doc_id"), col("n_terms"), col("n_hits"))
-      case other => throw new IllegalArgumentException(
-        s"searchTermIndex: bad mode $other")
-    }
-  }
+                      buckets: Int = 64): DataFrame =
+    new TermIndex(spark, indexDir, None, buckets).search(terms, mode)
 }

@@ -2,8 +2,9 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.SearchApi
@@ -48,12 +49,13 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (spark != null) spark.stop()
   }
 
-  private def get(pathAndQuery: String): (Int, String) = {
+  private def via(p: Int, pathAndQuery: String): (Int, String) = {
     val resp = client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$pathAndQuery")).GET().build(),
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$pathAndQuery")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), resp.body())
   }
+  private def get(pathAndQuery: String): (Int, String) = via(port, pathAndQuery)
 
   test("/search bm25 equals the direct bm25TopK call over the same artifacts") {
     val (code, body) = get("/search?q=window+scan+merge&k=5")
@@ -268,12 +270,6 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("admission control: a zero-permit server 429s /search but keeps /lb_check and /status up; the TTL cache serves repeats byte-identically") {
-    def via(p: Int, pq: String): (Int, String) = {
-      val resp = client.send(
-        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$pq")).GET().build(),
-        HttpResponse.BodyHandlers.ofString())
-      (resp.statusCode(), resp.body())
-    }
     val closed = new SearchApi(spark, tiDir, ivfDir, cbDir, port = 0,
       maxInflight = 0, cacheTtlSec = 0)
     val p2 = closed.start()
@@ -369,6 +365,15 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bad = new SearchApi(spark, tiDir, ivf3r, cbDir, port = 0)
     val ex = intercept[IllegalArgumentException] { bad.start() }
     assert(ex.getMessage.contains("fingerprint"), ex.getMessage)
+    // ... and so does a mount with tombstones configured, which skips the
+    // multi-segment probe of the IVF corpus: the pairing check must not
+    // hang off that probe
+    val ivf3Tomb = s"$root/ivf3tomb"
+    tomb.write.parquet(ivf3Tomb)
+    val badT = new SearchApi(spark, tiDir, ivf3r, cbDir, port = 0,
+      ivfTombstonesPath = Some(ivf3Tomb))
+    val exT = intercept[IllegalArgumentException] { badT.start() }
+    assert(exT.getMessage.contains("fingerprint"), exT.getMessage)
   }
 
   test("racing mixed requests equal their serial answers (the HttpApi 12-way gate, search edition)") {
@@ -392,5 +397,212 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(got == want(r), s"racing $r diverged: $got vs ${want(r)}")
       }
     } finally pool.shutdown()
+  }
+
+  test("a mount whose every doc is tombstoned answers empty results, not an error") {
+    val sp = spark
+    import sp.implicits._
+    val tombDir = s"$root/tomb_all"
+    spark.read.parquet(s"$tiDir.doclen").select(col("doc_id"))
+      .withColumn("before_seg", lit(Long.MaxValue))
+      .write.mode("overwrite").parquet(tombDir)
+    Seq.empty[(Long, Long)].toDF("vec_id", "before_seg")
+      .write.mode("overwrite").parquet(s"$root/ivftomb_none")
+    val dead = new SearchApi(spark, tiDir, ivfDir, cbDir, port = 0,
+      termTombstonesPath = Some(tombDir),
+      ivfTombstonesPath = Some(s"$root/ivftomb_none"))
+    val p = dead.start()
+    try {
+      for (pq <- Seq("/search?q=window+scan+merge&k=5", "/search?phrase=table+scan+merge",
+                     "/search?complete=sc", "/search?glob=sc*",
+                     "/search?bulk=window;scan+merge")) {
+        val (c, b) = via(p, pq)
+        assert(c == 200, s"$pq: $b")
+        assert(b == """{"results":[]}""" ||
+          b == """{"batches":[{"query":0,"results":[]},{"query":1,"results":[]}]}""", s"$pq: $b")
+      }
+    } finally dead.stop()
+  }
+
+  test("driver-side term buckets equal the written bucket partition for every term; the .meta count wins over the caller's") {
+    val sp = spark
+    import sp.implicits._
+    val long = "q" * 4000 + "z"
+    val extra = Seq(
+      (9000001L, "naïve café Straße ΩMEGA ωmega tōkyō 東京 данные ünïcödé"),
+      (9000002L, s"$long ${long}x çà ñandú 가나다 αβγ"))
+      .toDF("doc_id", "text")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text").unionByName(extra)
+    for (b <- Seq(7, 64)) {
+      val dir = s"$root/ti_hash$b"
+      graft.pipeline.TextStats.writeTermIndex(docs, dir, buckets = b)
+      val ti = new graft.pipeline.TextStats.TermIndex(spark, dir, fallbackBuckets = 13)
+      assert(ti.buckets == b, s"meta says $b, handle resolved ${ti.buckets}")
+      val rows = ti.postingsRel.select("term", "bucket").distinct().collect()
+        .map(r => (r.getString(0), r.getInt(1)))
+      val terms = rows.map(_._1).toSet
+      for (t <- Seq("naïve", "straße", "ωmega", "東京", "данные", "가나다", long, long + "x"))
+        assert(terms.contains(t), s"term ${t.take(20)} missing from the index")
+      val wrong = rows.filter { case (t, bk) => ti.bucketOf(t) != bk }
+      assert(wrong.isEmpty,
+        s"${wrong.length} of ${rows.length} terms hash off their partition at $b buckets, " +
+          s"e.g. ${wrong.take(3).map { case (t, bk) => s"${t.take(20)}→$bk vs ${ti.bucketOf(t)}" }.mkString(", ")}")
+    }
+  }
+
+  // ------------------------------------------------ orchestrated mount
+
+  /** An orchestrated artifact root (sf0.001 build + one refresh: delta
+    * segments and tombstones) — shared by the two tests below; the
+    * snapshot test refreshes it again, so it runs last. */
+  private lazy val orch: graft.pipeline.Refresh.CorpusArtifacts = {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val corpus0 = docs.join(emb, "doc_id").select("doc_id", "text", "embedding")
+    val r = s"$root/orch"
+    graft.pipeline.Refresh.buildAll(spark, corpus0.select("doc_id", "text"),
+      corpus0.select(col("doc_id").as("vec_id"), col("embedding")), r,
+      nlist = 8, m = 16, ksub = 16, trainIters = 3, sampleN = 2000)
+    val (edited, added, removed) = Queries.corpusRefreshDelta(corpus0)
+    graft.pipeline.Refresh.refreshCorpus(spark, r, edited, added, removed).artifacts
+  }
+
+  private def mountOrch(): SearchApi =
+    new SearchApi(spark, orch.termIndexDir, orch.ivfPath, port = 0,
+      termTombstonesPath = Some(orch.termTombstonesPath),
+      ivfTombstonesPath = Some(orch.ivfTombstonesPath), cacheTtlSec = 0)
+
+  private lazy val vec7: String = spark.read.parquet(s"$sf/embeddings.parquet")
+    .where(col("vec_id") === 7L).select("embedding")
+    .head().getSeq[Float](0).map(_.toString).mkString(",")
+
+  private def routes: Seq[(String, String)] = Seq(
+    "bm25" -> "/search?q=window+scan+merge&k=10",
+    "phrase" -> "/search?phrase=table+scan+merge&k=10",
+    "complete" -> "/search?complete=sc&k=8",
+    "glob" -> "/search?glob=sc%5Bae%5Dn*&k=10",
+    "hybrid" -> s"/search?q=window+scan+merge&mode=hybrid&k=10&vec=$vec7")
+
+  /** Spark jobs started while `f` runs. Marker jobs (tagged by a local
+    * property) bracket it, so every job between them on the ordered
+    * listener bus is `f`'s, whenever the bus delivers the events. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val events = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        events.put(Option(e.properties).flatMap(p => Option(p.getProperty("jobs.marker"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setLocalProperty("jobs.marker", name)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("jobs.marker", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start"); f; marker("end")
+      var seen = Vector.empty[String]
+      while (!seen.contains("end")) {
+        val e = events.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(e != null, "listener bus never delivered the end marker")
+        seen :+= e
+      }
+      seen.dropWhile(_ != "start").drop(1).takeWhile(_ != "end").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a warm /search starts at most the pinned number of Spark jobs per route (mount with tombstones)") {
+    // the mount resolves postings/doclen relations, bucket count, corpus
+    // stats, centroids and codebooks once; a request runs only its own
+    // slices. Measured on this corpus: bm25 6, phrase 4, complete 3,
+    // glob 4, hybrid 14 (14 / 9 / 4 / 5 / 29 when every request
+    // re-resolved them)
+    val pinned = Map("bm25" -> 6, "phrase" -> 4, "complete" -> 3, "glob" -> 4, "hybrid" -> 14)
+    val api = mountOrch()
+    val p = api.start()
+    try {
+      val counts = routes.map { case (name, pq) =>
+        assert(via(p, pq)._1 == 200, pq) // warm: plan shapes and codegen
+        var code = 0
+        val n = jobsDuring { code = via(p, pq)._1 }
+        assert(code == 200, pq)
+        name -> n
+      }.toMap
+      info(s"jobs per warm request: ${routes.map(r => s"${r._1} ${counts(r._1)}").mkString(", ")}")
+      for ((name, n) <- counts)
+        assert(n <= pinned(name), s"$name started $n jobs, pinned at ${pinned(name)}")
+    } finally api.stop()
+  }
+
+  test("a mount is a snapshot: an in-place refresh leaves its answers unchanged; a fresh mount equals the direct call") {
+    val terms = Seq("window", "scan", "merge")
+    val qv = vec7.split(",").map(_.toFloat)
+    def bm25Body(rows: Array[org.apache.spark.sql.Row]): String =
+      rows.map(r => s"""{"doc_id":${r.getLong(0)},"n_terms":${r.getLong(1)},"score":${r.getDouble(2)}}""")
+        .mkString("""{"results":[""", ",", "]}")
+    def hybridBody(rows: Array[org.apache.spark.sql.Row]): String =
+      rows.map(r => s"""{"doc_id":${r.getLong(0)},"bm_rank":${r.getLong(1)},"ann_rank":${r.getLong(2)},"rrf_x1e6":${r.getLong(3)}}""")
+        .mkString("""{"results":[""", ",", "]}")
+    /** The direct bm25 and hybrid answers over the root as it is now. */
+    def direct(): (String, String) = {
+      val tomb = Some(spark.read.parquet(orch.termTombstonesPath))
+      val ivfTomb = Some(spark.read.parquet(orch.ivfTombstonesPath))
+      (bm25Body(graft.pipeline.TextStats.bm25TopK(spark, orch.termIndexDir,
+        terms, k = 10, tombstones = tomb).collect()),
+        hybridBody(graft.pipeline.Similarity.hybridServeTopK(spark,
+          orch.termIndexDir, terms, orch.ivfPath, s"${orch.ivfPath}/codebooks",
+          qv, k = 10, termTombstones = tomb, ivfTombstones = ivfTomb).collect()))
+    }
+    val (bm25Before, hybridBefore) = direct()
+
+    val old = mountOrch()
+    val oldPort = old.start()
+    // a second mount that serves nothing until after the refresh: its
+    // FIRST answers must still be those of the root at its start()
+    val cold = mountOrch()
+    val coldPort = cold.start()
+    try {
+      val before = routes.map { case (_, pq) => pq -> via(oldPort, pq) }
+      before.foreach { case (pq, (c, b)) => assert(c == 200, s"$pq: $b") }
+      assert(before.head._2._2 == bm25Before && before.last._2._2 == hybridBefore)
+
+      // a second refresh into the SAME root: edits that add the query
+      // terms, new ids, removals — all of them alive before it
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+        .select(col("vec_id").as("doc_id"), col("embedding"))
+      val corpus0 = docs.join(emb, "doc_id").select("doc_id", "text", "embedding")
+      val alive = col("doc_id") % 7 =!= 0
+      val edited = corpus0.where(alive && col("doc_id") % 3 === 0)
+        .withColumn("text", concat(col("text"), lit(" window scan merge table scan rev3")))
+      val added = corpus0.where(col("doc_id") % 17 === 0)
+        .withColumn("doc_id", col("doc_id") + 3000000L)
+      val removed = corpus0.where(alive && col("doc_id") % 3 =!= 0 && col("doc_id") % 11 === 0)
+        .select("doc_id")
+      graft.pipeline.Refresh.refreshCorpus(spark, orch.root, edited, added, removed)
+
+      for ((pq, want) <- before)
+        assert(via(oldPort, pq) == want, s"the old mount's $pq moved after the refresh")
+      assert(via(coldPort, routes.last._2) == (200, hybridBefore),
+        "the cold mount's first hybrid answer must be the root's at its start()")
+      assert(via(coldPort, routes.head._2) == (200, bm25Before))
+      val (cs, coldStatus) = via(coldPort, "/status")
+      assert(cs == 200 && coldStatus.contains("\"segments\":[0,1]") &&
+        coldStatus.contains("\"consistent\":true"), coldStatus)
+
+      val fresh = mountOrch()
+      val freshPort = fresh.start()
+      try {
+        val (bm25, hybrid) = direct()
+        assert(via(freshPort, routes.head._2) == (200, bm25))
+        assert(bm25 != bm25Before, "the refresh must move the bm25 answer")
+        assert(via(freshPort, routes.last._2) == (200, hybrid))
+        val (sc, status) = via(freshPort, "/status")
+        assert(sc == 200 && status.contains("\"segments\":[0,1,2]") &&
+          status.contains("\"consistent\":true"), status)
+      } finally fresh.stop()
+    } finally { old.stop(); cold.stop() }
   }
 }
