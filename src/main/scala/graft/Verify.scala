@@ -19,7 +19,7 @@ object Verify {
     }
     // warm the shared fixture cache BEFORE snapshotting the keep-set, then
     // sweep each query's new persists (incl. the evaluator's request-scoped
-    // fetch pins on cold stores) so they don't accumulate across the
+    // pins on cold stores) so they don't accumulate across the
     // catalog — same protocol as Bench
     new graft.store.EventSeriesStore(sfDir).allSeries(spark).count()
     val keep = spark.sparkContext.getPersistentRDDs.keySet

@@ -18,9 +18,11 @@ import graft.store.SeriesStore
  *   /tags/autoComplete/values?tag=T&valuePrefix=P&limit=N
  *   /functions            /version            /lb_check
  *
- * Each request is one Spark action; concurrent requests ride Spark's own
- * scheduler (FAIR pools), with the optional `concurency` semaphore
- * bounding how many data requests run at once (the reference's limiter).
+ * A render starts a few Spark jobs: each target's collect, plus the
+ * small build-time actions of data-dependent operators (name and count
+ * collects). Concurrent requests share Spark's default FIFO job scheduler,
+ * with the optional `concurency` semaphore bounding how many data
+ * requests run at once (the reference's limiter).
  */
 class HttpApi(spark: SparkSession, store: SeriesStore, port: Int = 8081,
               maxQueryLength: Int = 0,

@@ -20,8 +20,9 @@ case class RenderedSeries(
 /**
  * The /render surface: evaluate targets, collect, glob-order sort,
  * maxDataPoints consolidation, and the reference's wire formats
- * (json / csv / raw). One Spark action per request; everything after the
- * collect is O(output), exactly like the reference's marshal layer.
+ * (json / csv / raw). One collect per target, plus whatever build-time
+ * actions its operators run (name and count collects); everything after
+ * the collects is O(output), exactly like the reference's marshal layer.
  */
 object Render {
 

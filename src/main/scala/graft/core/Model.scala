@@ -50,10 +50,18 @@ object SeriesFrame {
 
   /** Exploded long view: (name, ts, value). NaN points retained when
     * keepNaN, else filtered. Derived lazily — only operators that need
-    * cross-series point-wise grouping pay for the explode. */
+    * cross-series point-wise grouping pay for the explode.
+    *
+    * The NaN-dropping view explodes with `posexplode_outer`: its null row
+    * for an empty array fails the NaN filter like any dropped point, and
+    * an outer explode gives Catalyst no inferred `size(values) > 0`
+    * filter to push below the input's projections, where it would
+    * recompute the expression behind `values` (a store stitch, a
+    * per-element percentile) once more per series. */
   def toPoints(df: DataFrame, keepNaN: Boolean = false): DataFrame = {
+    val explode = if (keepNaN) posexplode(col("values")) else posexplode_outer(col("values"))
     val exploded = df
-      .select(col("name"), col("tags"), col("start"), col("step"), posexplode(col("values")).as(Seq("pos", "value")))
+      .select(col("name"), col("tags"), col("start"), col("step"), explode.as(Seq("pos", "value")))
       .withColumn("ts", col("start") + col("pos") * col("step"))
       .select(col("name"), col("tags"), col("ts"), col("step"), col("value"))
     if (keepNaN) exploded else exploded.where(!isnan(col("value")))

@@ -279,10 +279,12 @@ object AnalyticsOps {
    * old shape ranked every pooled point through an unpartitioned window —
    * a single-task funnel at 100× name cardinality.
    */
-  def tukey(df: DataFrame, basis: Double, n: Int, above: Boolean,
+  def tukey(df0: DataFrame, basis: Double, n: Int, above: Boolean,
             interval: Option[Either[Long, Int]] = None): DataFrame = {
     require(n >= 1, "tukey: n must be larger or equal to 1")
-    if (basis <= 0) return df.limit(0)
+    if (basis <= 0) return df0.limit(0)
+    // the quartile jobs and the returned top-n both read the input
+    val df = Eval.pin(df0)
     val winVals = interval match {
       case None => col("values")
       case Some(iv) =>

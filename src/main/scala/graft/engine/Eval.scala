@@ -10,8 +10,9 @@ import graft.store.SeriesStore
  * The expression→DataFrame compiler: walks the parsed target bottom-up and
  * emits transformations over the series store scan. This replaces the
  * reference's tree-walking interpreter (ref expr/expr.go:163-214) — here the
- * "evaluation" only BUILDS a logical plan; Catalyst optimizes it and the one
- * Spark action per request executes it.
+ * "evaluation" only BUILDS a logical plan; Catalyst optimizes it and the
+ * target's collect executes it. Operators whose plan depends on the data
+ * (name and count collects) run their own small actions while building.
  *
  * Fetch-range widening (the reference's `expr.Metrics()` pre-pass,
  * ref pkg/parser/parser.go:155-330) is handled in-line: window functions
@@ -38,14 +39,14 @@ object Eval {
                    scala.collection.mutable.ArrayBuffer.empty) {
     def widen(by: Long): Ctx = copy(from = from - by)
 
-    /** Run `body` with this context's [[rddPins]] installed as the
-      * thread's RDD-pin sink: operator-internal RDD persists created
-      * inside (PairOps.indexByName's sorted cache) register here and
-      * [[release]] drops them at request end, instead of lingering until
-      * an arbitrary ContextCleaner GC and pressuring the block store
-      * invisibly to the request-scoped pin accounting. Saves/restores any
-      * enclosing sink, so nested evals stay correct. */
-    def tracked[T](body: => T): T = Eval.withRddPins(rddPins)(body)
+    /** Run `body` with this context installed as the thread's request:
+      * [[Eval.pin]] and [[Eval.trackRdd]] calls inside register their
+      * persists here and [[release]] drops them at request end, instead
+      * of lingering until an arbitrary ContextCleaner GC and pressuring
+      * the block store invisibly to the request-scoped pin accounting.
+      * Saves/restores any enclosing context, so nested evals stay
+      * correct. */
+    def tracked[T](body: => T): T = Eval.withRequest(this)(body)
 
     /** Store fetch with the render tier's error masking: when an error sink
       * is installed, a failed fetch records its error and contributes an
@@ -54,33 +55,24 @@ object Eval {
       * rides the response-code logic; ref expr.FetchAndEvalExp). Without a
       * sink (direct engine use) the failure propagates.
       *
-      * Cold (non-scanCached) stores: the fetched request-sized frame is
-      * persisted, so every ACTION an operator chain runs (minMax's stats
-      * pass, asPercent's align stats, holtWinters' bootstrap) reads the
-      * store once instead of re-running scan+stitch per action — the
-      * reference fetches into per-request memory exactly once
-      * (ref expr/expr.go:30-125). [[release]] drops the pins when the
-      * request's results are collected; Bench/Verify sweep persists per
-      * query anyway. Measured: the partitioned-store graphite sweep read
-      * 2.8× the cached-store wall before this, with multi-action rows
-      * (g63 minMax +6.5 s) carrying most of it. */
+      * The fetched frame is NOT pinned: most requests read it in exactly
+      * one action (the target's collect), and a persist there only adds a
+      * cache-building job. The reference fetches into per-request memory
+      * once (ref expr/expr.go:30-125); here the frames a SECOND action
+      * reads are pinned where that second action arises — the batched
+      * [[prefetch]], and operators that run a build-time action on their
+      * input and then return a plan over it (name/count collects, tukey's
+      * quartiles, asPercent's total count) — through [[Eval.pin]]. */
     def fetch(pathExpr: String): DataFrame =
       fetchMemo.getOrElseUpdate((pathExpr, from, until),
-        try {
-          val df = store.fetch(spark, pathExpr, from, until)
-          if (store.scanCached) df
-          else {
-            val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            pinned += p
-            p
-          }
-        } catch {
+        try store.fetch(spark, pathExpr, from, until)
+        catch {
           case e: graft.store.StoreFetchException if fetchErrors.isDefined =>
             fetchErrors.get.getOrElseUpdate(pathExpr, e)
             emptyFrame(spark)
         })
 
-    /** Unpin every request-scoped fetch persist. Call AFTER the request's
+    /** Unpin every request-scoped persist. Call AFTER the request's
       * actions have run (post-collect); dropped pins recompute if re-used. */
     def release(): Unit = {
       pinned.foreach(df => try df.unpersist(false) catch { case _: Exception => () })
@@ -95,16 +87,18 @@ object Eval {
      * round-trip (ref expr/expr.go:36-96); per-pattern scans cost k
      * parquet scans per request instead (measured 5.9–7.0× slower at 10
      * targets on the routed/flat layouts — BASELINE.md r10 "multi-target
-     * scan batching"). The batched frame is pinned request-scoped and
-     * each leaf's memo entry is a pathExpression view of it, so [[fetch]]
-     * serves from memory. Cold stores only (a scan-cached store's
-     * per-pattern fetch is already a memory filter); leaves later fetched
-     * at a SHIFTED range (timeShift/moving widen) miss the memo by key
-     * and fetch normally. Any prefetch failure falls back silently to
-     * per-pattern fetching, keeping error masking on the per-pattern
-     * path; an ACTION-time store failure inside the shared batch is
-     * handled by evalWithErrors via [[dropPrefetch]] + per-target retry,
-     * so the per-pattern isolation contract survives batching.
+     * scan batching"). The batched frame is pinned request-scoped (each
+     * target's collect reads it) and each leaf's memo entry is a
+     * pathExpression view of it, so [[fetch]] serves from memory. Cold
+     * stores only (a scan-cached store's per-pattern fetch is already a
+     * memory filter); leaves later fetched at a SHIFTED range
+     * (timeShift/moving widen) miss the memo by key and fetch normally.
+     * Any prefetch failure falls back silently to per-pattern fetching,
+     * keeping error masking on the per-pattern path; an ACTION-time store
+     * failure inside the shared batch is handled by evalWithErrors via
+     * [[dropPrefetch]] + per-target retry, so the per-pattern isolation
+     * contract survives batching. Call inside [[tracked]], so the pin
+     * registers with this request.
      *
      * Concurrency decision (r11): the batch is REQUEST-scoped on
      * purpose — two concurrent renders over the same store+window each
@@ -123,9 +117,7 @@ object Eval {
         p.startsWith("seriesByTag(") || fetchMemo.contains((p, from, until)))
       if (store.scanCached || todo.size < 2) return
       try {
-        val batched = store.fetchMulti(spark, todo, from, until)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pinned += batched
+        val batched = Eval.pin(store.fetchMulti(spark, todo, from, until))
         todo.foreach { p =>
           val key = (p, from, until)
           fetchMemo(key) = batched.where(col("pathExpression") === lit(p))
@@ -153,26 +145,45 @@ object Eval {
     }
   }
 
-  /** Thread-local sink for operator-internal RDD persists (see
-    * [[Ctx.tracked]]). Null when no request context is installed — then
-    * [[trackRdd]] is a no-op and the persist falls back to
-    * ContextCleaner GC reclamation (direct engine/test use). */
-  private val currentRddPins =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]]
+  /** The request context [[Ctx.tracked]] installed on this thread; null
+    * outside one (direct engine/test use). */
+  private val currentRequest = new ThreadLocal[Ctx]
 
-  /** Register an operator-internal RDD persist with the active request's
-    * pin buffer, if one is installed on this thread. */
-  private[graft] def trackRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    val b = currentRddPins.get()
-    if (b != null) b += rdd
+  private[engine] def withRequest[T](ctx: Ctx)(body: => T): T = {
+    val prev = currentRequest.get()
+    currentRequest.set(ctx)
+    try body
+    finally { if (prev == null) currentRequest.remove() else currentRequest.set(prev) }
   }
 
-  private[engine] def withRddPins[T](
-      buf: scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]])(body: => T): T = {
-    val prev = currentRddPins.get()
-    currentRddPins.set(buf)
-    try body
-    finally { if (prev == null) currentRddPins.remove() else currentRddPins.set(prev) }
+  /** Pin `df` for the rest of the active request: for a frame that a
+    * second Spark action reads — an operator that collects names or
+    * counts from its input at build time and then returns a plan over
+    * that same input, or the batched prefetch every target reads. The
+    * persist registers with the request's [[Ctx.pinned]] and
+    * [[Ctx.release]] drops it. Returns `df` unchanged on a scan-cached
+    * store (its fetches already serve from memory) and outside a request
+    * context (nothing would release the pin; the second action
+    * recomputes instead). */
+  private[graft] def pin(df: DataFrame): DataFrame = {
+    val ctx = currentRequest.get()
+    // an already-cached plan (the same glob pinned on both sides of a
+    // pairwise op) stays with its first pin
+    if (ctx == null || ctx.store.scanCached ||
+        df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      ctx.pinned += p
+      p
+    }
+  }
+
+  /** Register an operator-internal RDD persist with the active request's
+    * pin buffer, if a request context is installed on this thread —
+    * otherwise the persist falls back to ContextCleaner GC reclamation. */
+  private[graft] def trackRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+    val ctx = currentRequest.get()
+    if (ctx != null) ctx.rddPins += rdd
   }
 
   def evalTarget(spark: SparkSession, store: SeriesStore, target: String,
@@ -552,8 +563,11 @@ object Eval {
       // defaultOnAbsent: when the series arg matched NOTHING, emit a
       // constantLine-shaped 2-point default named with the full expression
       // text (ref transformNull/function.go:44,109-125) — the emptiness
-      // probe is a tiny job, gated on the flag being passed at all
-      if (!boolArg(fc, 3, "defaultOnAbsent") || !filled.isEmpty) filled
+      // probe is a tiny job, gated on the flag being passed at all; the
+      // probed frame is what the target then reads, so it is pinned
+      lazy val probed = pin(filled)
+      if (!boolArg(fc, 3, "defaultOnAbsent")) filled
+      else if (!probed.isEmpty) probed
       else {
         val sp = ctx.spark
         import sp.implicits._
@@ -1020,11 +1034,13 @@ object Eval {
         .drop("_rn", "_gk")
     } else {
       // callback aggregated the frame away (dropped _gk) — fall back to
-      // the reference's literal per-group re-eval
-      val keys = df.select(keyCol.as("_gk")).distinct().collect().map(_.getString(0)).sorted
+      // the reference's literal per-group re-eval; the key collect and
+      // every group read the input, so it is pinned
+      val input = pin(df)
+      val keys = input.select(keyCol.as("_gk")).distinct().collect().map(_.getString(0)).sorted
       require(keys.nonEmpty, "group callback: no series to group")
       keys.map { k =>
-        val group = df.where(keyCol === k)
+        val group = input.where(keyCol === k)
         val res = eval(FuncCall(callback, Seq(graft.parser.FrameExpr(group, k)), Map.empty), ctx)
         SeriesOps.alias(res.orderBy(col("name")).limit(1), k)
       }.reduce(_ unionByName _)

@@ -64,7 +64,9 @@ object PairOps {
       val w = Window.partitionBy(lit(0)).orderBy(orderCols.map(col): _*)
       df.withColumn("_i", row_number().over(w).cast("long"))
     } else {
-      val sorted = df.sort(orderCols.map(col): _*)
+      // the range sort's sampling job and the offset-count job both read
+      // the input
+      val sorted = Eval.pin(df).sort(orderCols.map(col): _*)
       val cached = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Eval.trackRdd(cached)
       val indexed = cached.zipWithIndex.map { case (r, i) =>
@@ -101,8 +103,11 @@ object PairOps {
     * empty right list with `default` pairs every left series with the
     * constant. The counts driving the mode choice cost two series-row
     * jobs — same cardinality the reference materializes. */
-  def seriesLists(a: DataFrame, b: DataFrame, func: String, fnName: String,
+  def seriesLists(a0: DataFrame, b0: DataFrame, func: String, fnName: String,
                   default: Double = Double.NaN, matchingOpt: Option[Boolean] = None): DataFrame = {
+    // the count job and the returned zip both read each side
+    val a = Eval.pin(a0)
+    val b = Eval.pin(b0)
     val op = binOp(func)
     val hasDefault = !default.isNaN
     val defStr = graft.engine.SeriesOps.fmtNum(default)
@@ -165,8 +170,11 @@ object PairOps {
     * its quirk of naming every output row `aggregateSeriesLists(rawArgs)`
     * (ref aggregateSeriesLists/function.go:58-75, helper/helper.go:151-188).
     * xff defaults to each left series' own xFilesFactor tag. */
-  def aggregateSeriesLists(a: DataFrame, b: DataFrame, func: String, rawArgs: String,
+  def aggregateSeriesLists(a0: DataFrame, b0: DataFrame, func: String, rawArgs: String,
                            xff: Option[Double]): DataFrame = {
+    // the count job and the returned pairing both read each side
+    val a = Eval.pin(a0)
+    val b = Eval.pin(b0)
     // one fused series-row count (r18) feeds both small-list index gates
     val cnts = a.select(lit(0).as("_s")).unionByName(b.select(lit(1).as("_s")))
       .groupBy("_s").agg(count(lit(1)).as("_c")).collect()
@@ -279,7 +287,9 @@ object PairOps {
     * zero-initializes each output vector); above `valuesLimit` distinct
     * values the whole result collapses to one zero series named
     * `valuesLimitReached` (ref countValues/function.go:30-80). */
-  def countValues(df: DataFrame, valuesLimit: Int = 32): DataFrame = {
+  def countValues(df0: DataFrame, valuesLimit: Int = 32): DataFrame = {
+    // the grid and distinct-key jobs and the returned counts all read it
+    val df = Eval.pin(df0)
     val spark = df.sparkSession
     val geo = df.agg(min(col("start")), max(col("start") + size(col("values")) * col("step")),
       min(col("step"))).head()

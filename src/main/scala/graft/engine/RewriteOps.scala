@@ -68,7 +68,8 @@ object RewriteOps {
     * value) — N series cost one job, not N (ref aliasQuery/function.go). */
   def aliasQuery(ctx: Eval.Ctx, listExpr: Ast, search: String, replace: String,
                  newName: String): DataFrame = {
-    val src = Eval.eval(listExpr, ctx)
+    // pinned: the names collect below and the returned rename both read it
+    val src = Eval.pin(Eval.eval(listExpr, ctx))
     // names-only collect: the regex rewrite that derives each lookup target
     // runs on the driver because targets feed plan CONSTRUCTION
     val names = src.select(col("name")).distinct().collect().map(_.getString(0))
@@ -264,16 +265,10 @@ object RewriteOps {
   def seriesByTag(ctx: Eval.Ctx, target: String): DataFrame = {
     val specs = parseTagSpecs(target)
     require(specs.nonEmpty, s"seriesByTag: no tag specs in $target")
-    // same request-scoped pinning as Ctx.fetch: on a cold store the tag
-    // scan must read once per request, however many actions follow
-    val raw = ctx.store.fetchAll(ctx.spark, ctx.from, ctx.until)
-    val all =
-      if (ctx.store.scanCached) raw
-      else {
-        val p = raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ctx.pinned += p
-        p
-      }
+    // the tag scan is an unpruned full-range read of the store: pinned
+    // request-scoped, so a cold store reads it once per request however
+    // many actions follow
+    val all = Eval.pin(ctx.store.fetchAll(ctx.spark, ctx.from, ctx.until))
     // graphite tagdb semantics: an `=`/`!=` value containing `*` is a
     // wildcard (any run of characters), not an exact string — `tag2=value*`
     // matches value21 (graphite-web tags/base.py; exercised by the

@@ -334,12 +334,14 @@ object SeriesOps {
     // (ref asPercent/function.go:60); a timeShifted total would otherwise
     // pair values from different timestamps. Metadata-gated like every
     // other align: uniform-step stores with a shared fixture grid skip it.
+    // the total count and the returned division both read the totals
+    // (with align, the common-grid union of both sides)
     val (d2, t2) =
-      if (!align) (df, totals)
+      if (!align) (df, Eval.pin(totals))
       else {
-        val both = Align.scaleToCommonStep(
+        val both = Eval.pin(Align.scaleToCommonStep(
           df.withColumn("_ap_side", lit(0))
-            .unionByName(totals.withColumn("_ap_side", lit(1)), allowMissingColumns = true))
+            .unionByName(totals.withColumn("_ap_side", lit(1)), allowMissingColumns = true)))
         (both.where(col("_ap_side") === 0).drop("_ap_side"),
           both.where(col("_ap_side") === 1).drop("_ap_side"))
       }

@@ -122,6 +122,9 @@ class RoutedSeriesStore(
 
 object RoutedSeriesStore {
 
+  /** The routed layout's row schema, declared on every read like
+    * [[TimePartitionedSeriesStore.shardedSchema]]: `troute` stays the
+    * STRING the writer cut from the name, even when it is all digits. */
   private[store] val routedSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
       "name STRING, tags MAP<STRING,STRING>, start BIGINT, step BIGINT, " +

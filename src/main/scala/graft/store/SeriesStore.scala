@@ -34,10 +34,11 @@ trait SeriesStore {
       .select(col("name"), col("tags")).dropDuplicates("name")
   /** True when this store's scan already serves from cached blocks (e.g. a
     * derived in-memory fixture). For cold stores (Parquet layouts) the
-    * evaluator pins each fetched request-sized frame in request-scoped
-    * storage instead, so multi-action operators (minMax, asPercent,
-    * holtWinters bootstrap) read the store ONCE per request — the
-    * reference always fetches into per-request memory exactly once. */
+    * evaluator pins, request-scoped, the frames a second Spark action
+    * reads (the batched prefetch, the inputs of operators that collect
+    * names or counts at build time — [[graft.engine.Eval.pin]]), so those
+    * read the store once per request; a frame read by one action is not
+    * pinned. */
   def scanCached: Boolean = false
 
   /**

@@ -101,28 +101,31 @@ class TimePartitionedSeriesStore(
 
 object TimePartitionedSeriesStore {
 
-  /** The sharded layout's row schema, for reading a store that is
-    * currently EMPTY: a retention rollover that moves every window
-    * deletes all `pwin=` partition dirs, and `spark.read.parquet` on a
-    * dir with no data files throws "unable to infer schema" instead of
-    * returning an empty relation. The schema is fixed (SURVEY §1.4), so
-    * an empty store reads as an empty frame. */
+  /** The sharded layout's row schema (fixed, SURVEY §1.4). Every read
+    * declares it: Spark then neither runs a footer-inference job per
+    * read nor guesses partition types from directory names (a route dir
+    * `troute=007` would otherwise read as the integer 7 and match no
+    * `00*` glob). It also types an EMPTY store: a retention rollover that
+    * moves every window deletes all `pwin=` partition dirs, and such a
+    * store reads as an empty frame. */
   private[store] val shardedSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
       "name STRING, tags MAP<STRING,STRING>, start BIGINT, step BIGINT, " +
         "values ARRAY<DOUBLE>, pwin BIGINT")
 
-  /** Read the sharded dir, or an empty canonical frame when no partition
-    * dir exists (fresh store, or a fully-rolled fine tier). The partition
-    * check is any `col=` subdir, covering both the `pwin=` layout and the
-    * routed `troute=`/`pwin=` one. */
+  /** Read the sharded dir with the layout's declared `schema`, or an
+    * empty frame of it when no partition dir exists (fresh store, or a
+    * fully-rolled fine tier). The partition check is any `col=` subdir,
+    * covering both the `pwin=` layout and the routed `troute=`/`pwin=`
+    * one. Files are still listed on every call, so windows and routes
+    * written since the last read are visible without a remount. */
   private[store] def readShardedOrEmpty(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType = shardedSchema): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasShards = fs.exists(root) &&
       fs.listStatus(root).exists(st => st.isDirectory && st.getPath.getName.contains("="))
-    if (hasShards) spark.read.parquet(path)
+    if (hasShards) spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }

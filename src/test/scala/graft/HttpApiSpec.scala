@@ -475,6 +475,45 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally rApi.stop()
   }
 
+  test("a warm /render over a cold routed store starts at most the pinned number of Spark jobs per shape") {
+    // a plain glob is one fetch read by one collect: no schema-inference
+    // job at read, no cache-building job for a pin nobody re-reads.
+    // Measured here: plain glob 2, sumSeries 3 (4 and 5 when every read
+    // inferred the schema and every fetch was pinned)
+    val sp = spark
+    import sp.implicits._
+    val base = java.nio.file.Files.createTempDirectory("httpjobs").toString
+    graft.store.RoutedSeriesStore.write(
+      (for (dc <- Seq("east", "west"); h <- 1 to 4) yield {
+        val n = s"$dc.host$h.cpu"
+        graft.core.Series(n, Map("name" -> n), 0L, 3600L, Array.tabulate(24)(i => h * 100.0 + i))
+      }).toDF(),
+      s"$base/routed", windowSec = 86400L)
+    val routed = new graft.store.RoutedSeriesStore(s"$base/routed", 86400L, 1, Some(3600L))
+    val api = new HttpApi(spark, routed, port = 0)
+    val port = api.start()
+    val pinned = Map("east.*.cpu" -> 2, "sumSeries(east.*.cpu)" -> 3)
+    try {
+      def render(target: String): (Int, String) = {
+        val r = client.send(HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/render?target=${java.net.URLEncoder.encode(target, "UTF-8")}" +
+            "&from=0&until=86400&format=json&noCache=1")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        (r.statusCode(), r.body())
+      }
+      val counts = pinned.keys.toSeq.sorted.map { t =>
+        val (c0, warm) = render(t) // warm: plan shapes and codegen
+        assert(c0 == 200 && warm.contains("\"datapoints\":[["), warm.take(300))
+        var out = (0, "")
+        val n = SparkJobs.during(spark) { out = render(t) }
+        assert(out == (c0, warm), s"$t: the counted request must answer like the warm one")
+        t -> n
+      }.toMap
+      info(s"jobs per warm render: ${counts.toSeq.sorted.map { case (t, n) => s"$t $n" }.mkString(", ")}")
+      for ((t, n) <- counts) assert(n <= pinned(t), s"$t started $n jobs, pinned at ${pinned(t)}")
+    } finally api.stop()
+  }
+
   test("/render applyByNode over a cold routed store: rewritten targets batch into one scan and the result is exact") {
     val sp = spark
     import sp.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.BeforeAndAfterAll
@@ -485,33 +484,7 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     "glob" -> "/search?glob=sc%5Bae%5Dn*&k=10",
     "hybrid" -> s"/search?q=window+scan+merge&mode=hybrid&k=10&vec=$vec7")
 
-  /** Spark jobs started while `f` runs. Marker jobs (tagged by a local
-    * property) bracket it, so every job between them on the ordered
-    * listener bus is `f`'s, whenever the bus delivers the events. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val events = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        events.put(Option(e.properties).flatMap(p => Option(p.getProperty("jobs.marker"))).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      sc.setLocalProperty("jobs.marker", name)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("jobs.marker", null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("start"); f; marker("end")
-      var seen = Vector.empty[String]
-      while (!seen.contains("end")) {
-        val e = events.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-        assert(e != null, "listener bus never delivered the end marker")
-        seen :+= e
-      }
-      seen.dropWhile(_ != "start").drop(1).takeWhile(_ != "end").size
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(f: => Unit): Int = SparkJobs.during(spark)(f)
 
   test("a warm /search starts at most the pinned number of Spark jobs per route (mount with tombstones)") {
     // the mount resolves postings/doclen relations, bucket count, corpus

@@ -137,6 +137,40 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"*.* over window 1 must read (events,1)+(other,1), read ${fan.selectedPartitions.partitionCount}")
   }
 
+  test("routed store: all-digit and leading-zero route segments stay strings — exact and prefix globs match the flat store") {
+    // the route dir names are `troute=007`, `troute=10`, ...; a read that
+    // inferred partition types would turn them into integers (007 -> 7), so
+    // the `00*` prefix predicate and the name filter would select nothing
+    val sp = spark
+    import sp.implicits._
+    def series(names: Seq[String]) = names.zipWithIndex.map { case (n, i) =>
+      Series(n, Map("name" -> n), 0L, 60L, Array.tabulate(120)(j => i * 1000.0 + j))
+    }.toDF()
+    val digits = Seq("007.cpu.a", "007.cpu.b", "10.cpu.a", "2020.disk.x", "0.cpu.a")
+    val mixed = digits ++ Seq("web.cpu.a", "0x1f.cpu.a", "7a.cpu.b")
+    val globs = Seq("00*.cpu.*", "0*.cpu.a", "007.cpu.*", "007.cpu.a", "007.*.b",
+      "10.cpu.a", "1*.*.*", "2020.*.*", "20*.disk.x", "0.cpu.a", "{007,10}.cpu.a",
+      "*.cpu.a", "0x*.cpu.*", "7*.cpu.b", "web.cpu.a")
+    for ((label, names) <- Seq("all-digit routes" -> digits, "mixed routes" -> mixed)) {
+      val base = java.nio.file.Files.createTempDirectory("numroutes").toString
+      series(names).write.mode("overwrite").parquet(s"$base/flat")
+      graft.store.RoutedSeriesStore.write(series(names), s"$base/routed", windowSec = 3600L)
+      val flatSt = new ParquetSeriesStore(s"$base/flat", uniformStep = Some(60L))
+      val routedSt = new graft.store.RoutedSeriesStore(s"$base/routed", 3600L, 1, Some(60L))
+      def matching(gs: String*) = names.filter(n => gs.exists(graft.core.Glob.matcher(_)(n))).sorted
+      // a range cutting both windows: the pwin bounds apply too
+      for (glob <- globs) {
+        val want = canon(flatSt.fetch(spark, glob, 1800L, 5400L))
+        assert(canon(routedSt.fetch(spark, glob, 1800L, 5400L)) == want,
+          s"$label: routed != flat for $glob")
+        assert(want.map(_._1) == matching(glob), s"$label: flat fetch of $glob")
+      }
+      assert(matching("00*.cpu.*") == Seq("007.cpu.a", "007.cpu.b"))
+      assert(canon(routedSt.fetchMulti(spark, Seq("0*.cpu.a", "2020.*.*"), 0L, 7200L))
+        .map(_._1) == matching("0*.cpu.a", "2020.*.*"), label)
+    }
+  }
+
   test("routed store at depth 2 routes per event type, and a partial literal prefix prunes by startsWith") {
     val dir = java.nio.file.Files.createTempDirectory("routed2").toString
     graft.store.RoutedSeriesStore.write(fixture(spark), dir, windowSec = 3600L, routeDepth = 2)
