@@ -26,9 +26,9 @@ object Bench {
     // several operators persist intermediates (signatures, shingle tables,
     // CC labels); left cached they accumulate across the full catalog suite
     // and evict each other, making in-suite numbers order-dependent
-    // (observed 10x inflation on late queries). Drop each query's NEW
-    // persists after timing it; the shared warm fixtures stay.
-    val keep = spark.sparkContext.getPersistentRDDs.keySet
+    // (observed 10x inflation on late queries). Each rep owns one scope,
+    // released after its timing, so no rep reads what an earlier rep
+    // cached; the shared fixture memo stays.
     val fixture = new graft.store.EventSeriesStore(sfDir).allSeries(spark)
     val results = catalog.map { case (name, fn) =>
       // untimed fixture re-warm: a heavy query's persists can evict the
@@ -38,7 +38,7 @@ object Bench {
       fixture.count()
       // fail loudly: a swallowed error would REDUCE the published total
       // (r5 recorded -1 s per failed rep) — breakage must break the bench
-      def timeOnce(): Double = {
+      def timeOnce(): Double = graft.core.Scope { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
           case e: Throwable =>
@@ -54,8 +54,6 @@ object Bench {
       // quiet total on identical plans)
       val times = if (reps >= 2 && times0.max > 1.5 * times0.min)
         times0 :+ timeOnce() else times0
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) => if (!keep.contains(id)) rdd.unpersist(false) }
       name -> times.min
     }
     // millisecond precision: full-precision doubles made the one-liner

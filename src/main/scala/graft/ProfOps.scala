@@ -21,9 +21,8 @@ object ProfOps {
     }
     def sink(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    def sweep(keep: Set[Int] = Set.empty): Unit =
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-        if (!keep.contains(id)) r.unpersist(false) }
+    // one scope per section and rep: it releases what the rep cached
+    def scoped(body: => Unit): Unit = graft.core.Scope { _ => body }
 
     // per-job wall clock: find which of the many eager actions eats the time
     val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -66,16 +65,17 @@ object ProfOps {
         val added = d.where(col("doc_id") % 13 === 0)
           .withColumn("doc_id", col("doc_id") + 1000000L)
         val deletedIds = d.where(col("doc_id") % 7 === 0).select("doc_id")
-        PairMaintenance.writeShingleIndex(d, shxPath)
-        PairMaintenance.appendToShingleIndex(
-          edited.unionByName(added).select("doc_id", "text"), shxPath, seg = 1L)
-        sweep()
+        scoped {
+          PairMaintenance.writeShingleIndex(d, shxPath)
+          PairMaintenance.appendToShingleIndex(
+            edited.unionByName(added).select("doc_id", "text"), shxPath, seg = 1L)
+        }
 
-        for (rep <- 1 to 2) {
+        for (rep <- 1 to 2) scoped {
           val oldPairs = spark.read.parquet(pairsPath)
           val t0 = System.nanoTime()
           val oldCC = time(s"r$rep oldCC star")(
-            Dedup.dedupClusters(d, oldPairs).localCheckpoint(true))
+            graft.core.Scope.checkpoint(Dedup.dedupClusters(d, oldPairs)))
           val changed = edited.unionByName(added).select("doc_id", "text")
           val noTomb = d.select(col("doc_id"), lit(0L).as("before_seg")).limit(0)
           val tomb = deletedIds.select(col("doc_id"),
@@ -103,12 +103,11 @@ object ProfOps {
             sink(Assembly.splitMoves(assignOf(oldCC, d), assignOf(newCC, newSnap))
               .orderBy("split_from", "split_to")))
           println(f"[prof] r$rep p91 total ${(System.nanoTime() - t0) / 1e9}%.2fs")
-          sweep()
         }
       case "pq" =>
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         emb.count()
-        for (rep <- 1 to 2) {
+        for (rep <- 1 to 2) scoped {
           val t0 = System.nanoTime()
           val cents = time(s"r$rep trainCentroids")(
             graft.pipeline.Similarity.trainCentroids(emb, nlist = 8, iters = 3, sampleN = 2000))
@@ -129,17 +128,15 @@ object ProfOps {
             sink(graft.pipeline.Quantize.pqTopKReranked(
               graft.pipeline.Quantize.pqEncode(emb, cb), emb.where(col("vec_id") < 10), cb, k = 5, shortlist = 50)))
           println(f"[prof] r$rep pq total ${(System.nanoTime() - t0) / 1e9}%.2fs")
-          sweep()
         }
       case q if q.startsWith("q:") =>
         val name = q.drop(2)
         val fn = SparkEntry.queries(name)
         new graft.store.EventSeriesStore(sfDir).allSeries(spark).count()
-        for (rep <- 1 to 2) {
+        for (rep <- 1 to 2) scoped {
           jobLog.clear()
           time(s"r$rep $name")(fn(spark, sfDir).count())
           if (rep == 2) dumpJobs(s"r$rep", minSec = 0.10)
-          sweep()
         }
       // phase split per catalog row: plan BUILD (driver Scala), analysis,
       // optimization, physical planning, then the action — where does a
@@ -148,7 +145,7 @@ object ProfOps {
         val names = g.drop(3).split(",").map(_.trim)
         new graft.store.EventSeriesStore(sfDir).allSeries(spark).count()
         SparkEntry.entry(spark).count()
-        for (name <- names; rep <- 1 to 3) {
+        for (name <- names; rep <- 1 to 3) scoped {
           val fn = SparkEntry.queries(name)
           jobLog.clear()
           val t0 = System.nanoTime()
@@ -166,7 +163,6 @@ object ProfOps {
             f"analyze=${(t2 - t1) / 1e9}%.3f optimize=${(t3 - t2) / 1e9}%.3f " +
             f"plan=${(t4 - t3) / 1e9}%.3f exec=${(t5 - t4) / 1e9}%.3f rows=$n")
           if (rep == 3) dumpJobs(s"$name-r$rep", minSec = 0.0)
-          sweep()
         }
       case other => println(s"unknown GRAFT_PROF=$other")
     }

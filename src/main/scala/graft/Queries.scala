@@ -939,12 +939,11 @@ object Queries {
     // the threshold rides a broadcast 1-row cross join; cents-exact
     "q11_revenue_share_parts" -> ((s, dir) => {
       val li = s.read.parquet(s"$dir/lineitem.parquet")
-      val perPart = li
+      val perPart = graft.core.Scope.persist(li
         .select(col("l_partkey"),
           round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100)
             .cast("long").as("_cents"))
-        .groupBy("l_partkey").agg(sum(col("_cents")).as("_rev"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy("l_partkey").agg(sum(col("_cents")).as("_rev")))
       val total = perPart.agg(sum(col("_rev")).as("_total"))
       perPart.crossJoin(broadcast(total))
         .where(col("_rev") * 1000L > col("_total"))
@@ -958,10 +957,9 @@ object Queries {
       val li = s.read.parquet(s"$dir/lineitem.parquet")
       val brandParts = s.read.parquet(s"$dir/part.parquet")
         .where(col("p_brand") === "Brand#4").select(col("p_partkey"))
-      val filtered = li
+      val filtered = graft.core.Scope.persist(li
         .join(broadcast(brandParts), col("l_partkey") === col("p_partkey"))
-        .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice")))
       val cuts = filtered.groupBy("l_partkey")
         .agg((lit(0.2) * avg(col("l_quantity"))).as("cut"))
       filtered.join(cuts, "l_partkey")
@@ -1647,11 +1645,11 @@ object Queries {
       // (guide §2.6; r17). Results are unchanged: each chain is the same
       // deterministic computation, just not serialized behind the other.
       locally {
-        import scala.concurrent.{Await, Future}
+        import scala.concurrent.Await
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val fa = Future(assign(d))
-        val fb = Future(assign(newSnap))
+        val fa = graft.core.Scope.future(assign(d))
+        val fb = graft.core.Scope.future(assign(newSnap))
         Assembly.splitMoves(Await.result(fa, Duration.Inf),
             Await.result(fb, Duration.Inf))
           .orderBy("split_from", "split_to")
@@ -1689,10 +1687,10 @@ object Queries {
       // tokenCount scan) is independent of the incremental refresh — run
       // it on a concurrent driver thread so it back-fills executors while
       // incrementalClusters' control-plane steps leave them idle
-      import scala.concurrent.{Await, Future}
+      import scala.concurrent.Await
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fOld = Future(assignOf(oldCC, d).localCheckpoint(true))
+      val fOld = graft.core.Scope.future(graft.core.Scope.checkpoint(assignOf(oldCC, d)))
       val (newCC, _) = PairMaintenance.incrementalClusters(s, path,
         oldPairs, oldCC, changedIds = changed.select("doc_id"),
         removedIds = deletedIds, tombstonesOld = noTomb,

@@ -159,59 +159,44 @@ object ScaleBench {
       .write.mode("overwrite").parquet(s"$workDir/documents.parquet")
   }
 
-  /** p77 on one documents dir (docmult axis): untimed scan+codegen warm,
-    * best-of-reps, persist sweep — the rowmult harness shape. */
-  private def runDocMult(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    val qs = Seq("p77_quality_ensemble")
-    spark.read.parquet(s"$dir/documents.parquet").count() // untimed scan warm
-    qs.foreach(q => SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()) // codegen warm
-    val keep = spark.sparkContext.getPersistentRDDs.keySet
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    qs.map { name =>
-      val times = (1 to reps).flatMap { _ =>
+  /** Best-of-`reps` seconds of `run`, each rep in its own scope, so a rep
+    * never reads what an earlier rep cached and per-query persists never
+    * accumulate and evict each other (in-suite numbers would turn
+    * order-dependent). A failed rep contributes NO timing — elapsed-to-
+    * exception would let a fast failure publish itself as the best-of
+    * number; if every rep fails, the -1 sentinel rides into the emitted
+    * JSON where a ratio consumer can't miss it (stderr alone is droppable). */
+  private def bestOf(name: String, reps: Int)(run: => Unit): Double = {
+    val times = (1 to reps).flatMap { _ =>
+      graft.core.Scope { _ =>
         val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count(); true }
-          catch { case e: Throwable => System.err.println(s"[scale] $name failed: $e"); false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs
-          .foreach { case (id, rdd) => if (!keep.contains(id)) rdd.unpersist(false) }
-        if (ok) Some(dt) else None
+        try { run; Some((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => System.err.println(s"[scale] $name failed: $e"); None }
       }
-      name -> (if (times.isEmpty) -1.0 else times.min)
     }
+    if (times.isEmpty) -1.0 else times.min
   }
 
-  /** The q12/q13 pair on one events dir: lean warm-up (the rowmult dir
-    * carries only events.parquet), best-of-reps timing, persist sweep.
+  /** p77 on one documents dir (docmult axis) or the q12/q13 pair on one
+    * events dir (rowmult axis — that dir carries only events.parquet):
+    * untimed scan and codegen warm-up of `table`, then best-of-reps.
     * Timed action is toRdd.count(), NOT Dataset.count(): count() lets
     * Catalyst prune every feature column, which deletes the as-of window
-    * and the bucketed join body — the exact work this axis exists to
-    * measure. toRdd executes the full physical plan (all output columns,
-    * including the catalog entry's determinism orderBy — present equally
-    * at 1× and N×, so the ratio still isolates growth). */
-  private def runRowMult(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    val qs = Seq("q12_pit_features", "q13_window_features")
-    spark.read.parquet(s"$dir/events.parquet").count() // untimed scan warm
-    qs.foreach(q => SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()) // codegen warm
-    val keep = spark.sparkContext.getPersistentRDDs.keySet
+    * and the bucketed join body — the exact work the rowmult axis exists
+    * to measure. toRdd executes the full physical plan (all output
+    * columns, including the catalog entry's determinism orderBy — present
+    * equally at 1× and N×, so the ratio still isolates growth). */
+  private def runMult(spark: SparkSession, dir: String, table: String,
+                      qs: Seq[String]): Seq[(String, Double)] = {
+    def full(q: String): Unit = SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()
+    spark.read.parquet(s"$dir/$table.parquet").count() // untimed scan warm
+    qs.foreach(q => graft.core.Scope(_ => full(q))) // codegen warm
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    qs.map { name =>
-      // failed reps excluded from best-of; all-fail → -1 sentinel (see
-      // runAll)
-      val times = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count(); true }
-          catch { case e: Throwable => System.err.println(s"[scale] $name failed: $e"); false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs
-          .foreach { case (id, rdd) => if (!keep.contains(id)) rdd.unpersist(false) }
-        if (ok) Some(dt) else None
-      }
-      name -> (if (times.isEmpty) -1.0 else times.min)
-    }
+    qs.map(name => name -> bestOf(name, reps)(full(name)))
   }
+  private val DocMult = Seq("p77_quality_ensemble")
+  private val RowMult = Seq("q12_pit_features", "q13_window_features")
+
 
   /** Headline subset: the scan/agg/window graphite shapes plus every
     * pipeline operator whose growth curve the scale claim rests on. */
@@ -271,10 +256,9 @@ object ScaleBench {
     // untimed codegen/scan warm-up per dir (like Bench): without it the
     // first timed query absorbs the whole-stage-codegen compile and the
     // base-vs-10x ratios of cheap queries read as <1
-    SparkEntry.queries("g01_sum_series")(spark, dir).count()
+    graft.core.Scope { _ => SparkEntry.queries("g01_sum_series")(spark, dir).count() }
     spark.read.parquet(s"$dir/documents.parquet").count()
     spark.read.parquet(s"$dir/embeddings.parquet").count()
-    val keep = spark.sparkContext.getPersistentRDDs.keySet
     val fixture = new graft.store.EventSeriesStore(dir).allSeries(spark)
     // single-shot timings are GC/cache-pressure-sensitive (a one-off pause
     // once measured p15 at 30 s where a re-run shows 2.3 s); best-of-REPS
@@ -301,7 +285,7 @@ object ScaleBench {
     // (r13). Measured into separate synthetic rows on a split-off index
     // path so the catalog row's own index stays untouched.
     val p52Split: Seq[(String, Double)] =
-      if (selected.contains("p52_neardup_incremental")) {
+      if (selected.contains("p52_neardup_incremental")) graft.core.Scope { _ =>
         val d = spark.read.parquet(s"$dir/documents.parquet")
         val path = Queries.ndIndexPath(dir) + "_split"
         // untimed warm pass on a 50-doc sample: the suite warm-up covers
@@ -323,7 +307,7 @@ object ScaleBench {
     // p84's catalog row also times build + query together; the curve wants
     // the steady-state query alone (the build is one-time ingest work)
     val p84Split: Seq[(String, Double)] =
-      if (selected.contains("p84_term_search")) {
+      if (selected.contains("p84_term_search")) graft.core.Scope { _ =>
         val d = spark.read.parquet(s"$dir/documents.parquet")
         val path = Queries.ndIndexPath(dir) + "_ti_split"
         // untimed warm pass for the explode/agg codegen
@@ -368,7 +352,7 @@ object ScaleBench {
     // + re-encode + rewrite + serve. The base build is untimed (the
     // previous build's artifact, the p91 convention).
     val p96Split: Seq[(String, Double)] =
-      if (selected.contains("p34_ivf_pq_serve")) {
+      if (selected.contains("p34_ivf_pq_serve")) graft.core.Scope { _ =>
         val S = graft.pipeline.Similarity
         val Q = graft.pipeline.Quantize
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -406,14 +390,13 @@ object ScaleBench {
     // scale claim is refresh-only (the old artifacts are the previous
     // build's outputs) — timed against p83's full recompute row
     val p91Split: Seq[(String, Double)] =
-      if (selected.contains("p83_cluster_split_moves")) {
+      if (selected.contains("p83_cluster_split_moves")) graft.core.Scope { _ =>
         import org.apache.spark.sql.functions._
         val d = spark.read.parquet(s"$dir/documents.parquet")
         val path = Queries.ndIndexPath(dir) + "_shx_split"
-        val oldPairs = graft.pipeline.Dedup
-          .ngramJaccardPairs(d, k = 3, threshold = 0.5).localCheckpoint(true)
-        val oldCC = graft.pipeline.Dedup.dedupClusters(d, oldPairs)
-          .localCheckpoint(true)
+        val oldPairs = graft.core.Scope.checkpoint(graft.pipeline.Dedup
+          .ngramJaccardPairs(d, k = 3, threshold = 0.5))
+        val oldCC = graft.core.Scope.checkpoint(graft.pipeline.Dedup.dedupClusters(d, oldPairs))
         graft.pipeline.PairMaintenance.writeShingleIndex(d, path)
         val edited = d.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 5 === 0)
           .withColumn("text", concat(col("text"), lit(" rev2")))
@@ -467,27 +450,10 @@ object ScaleBench {
       // the next timed query pays the rebuild — the documented g18 7.57 s
       // in-suite vs 0.60 s isolated reading)
       fixture.count()
-      // a failed rep contributes NO timing — recording elapsed-to-exception
-      // would let a fast failure publish itself as the best-of number; if
-      // every rep fails, the -1 sentinel rides into the emitted JSON where
-      // a ratio consumer can't miss it (stderr alone is droppable)
-      val times = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            val df = SparkEntry.queries(name)(spark, dir)
-            if (forceFullEval(name)) df.queryExecution.toRdd.count() else df.count()
-            true
-          }
-          catch { case e: Throwable => System.err.println(s"[scale] $name failed: $e"); false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // per-query persists otherwise accumulate and evict each other,
-        // making in-suite numbers order-dependent (see Bench)
-        spark.sparkContext.getPersistentRDDs
-          .foreach { case (id, rdd) => if (!keep.contains(id)) rdd.unpersist(false) }
-        if (ok) Some(dt) else None
+      name -> bestOf(name, reps) {
+        val df = SparkEntry.queries(name)(spark, dir)
+        if (forceFullEval(name)) df.queryExecution.toRdd.count() else df.count()
       }
-      name -> (if (times.isEmpty) -1.0 else times.min)
     }
   }
 
@@ -578,10 +544,10 @@ object ScaleBench {
     * the r15 verdict's composed-refresh arm: the delta path must track the
     * CHANGE, the rebuild the corpus. The base build is untimed (it is the
     * previous round's artifact). */
-  private def refreshArm(spark: SparkSession, dir: String): Seq[(String, Double)] = {
+  private def refreshArm(spark: SparkSession, dir: String): Seq[(String, Double)] = graft.core.Scope { _ =>
     import org.apache.spark.sql.functions._
     val R = graft.pipeline.Refresh
-    val d = Queries.orchCorpus(spark, dir).localCheckpoint(true)
+    val d = graft.core.Scope.checkpoint(Queries.orchCorpus(spark, dir))
     val root = Queries.ndIndexPath(dir) + "_orch_arm"
     R.buildAll(spark, d.select("doc_id", "text"),
       d.select(col("doc_id").as("vec_id"), col("embedding")), root,
@@ -590,8 +556,9 @@ object ScaleBench {
     val t0 = System.nanoTime()
     R.refreshCorpus(spark, root, edited, added, removed)
     val tRefresh = (System.nanoTime() - t0) / 1e9
-    val refreshed = d.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 5 =!= 0)
-      .unionByName(edited).unionByName(added).localCheckpoint(true)
+    val refreshed = graft.core.Scope.checkpoint(
+      d.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 5 =!= 0)
+        .unionByName(edited).unionByName(added))
     val t1 = System.nanoTime()
     R.buildAll(spark, refreshed.select("doc_id", "text"),
       refreshed.select(col("doc_id").as("vec_id"), col("embedding")),
@@ -606,14 +573,14 @@ object ScaleBench {
     * segments, the measured advice firing `retrain`, and recall RECOVERY
     * after the retrain janitor runs. Truth per state is the exact top-k
     * (ADC with an everything-sized shortlist reranks exactly). */
-  private def driftArm(spark: SparkSession, dir: String): String = {
+  private def driftArm(spark: SparkSession, dir: String): String = graft.core.Scope { _ =>
     import org.apache.spark.sql.functions._
     val S = graft.pipeline.Similarity
     val Q = graft.pipeline.Quantize
     val sp = spark
     import sp.implicits._
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select("vec_id", "embedding").localCheckpoint(true)
+    val emb = graft.core.Scope.checkpoint(spark.read.parquet(s"$dir/embeddings.parquet")
+      .select("vec_id", "embedding"))
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val n = emb.count()
     val path = Queries.ndIndexPath(dir) + "_drift_ivf"
@@ -631,11 +598,10 @@ object ScaleBench {
     // degenerate cluster makes the exact top-5 a n_drifted-way near-tie
     // that NO shortlist can match — the measurement would then read
     // tie-resolution noise, not quantizer quality)
-    val drifted = emb.limit((n / 5 * 2).toInt)
+    val drifted = graft.core.Scope.checkpoint(emb.limit((n / 5 * 2).toInt)
       .withColumn("vec_id", col("vec_id") + 5000000L)
       .withColumn("embedding",
-        transform(col("embedding"), x => (x * lit(0.3f) + lit(15.0f)).cast("float")))
-      .localCheckpoint(true)
+        transform(col("embedding"), x => (x * lit(0.3f) + lit(15.0f)).cast("float"))))
     def recall(idx: DataFrame, dcents: Array[(Int, Array[Double])],
                dcb: Array[Array[Array[Double]]], corpus: DataFrame,
                queries: DataFrame): Double = {
@@ -692,8 +658,8 @@ object ScaleBench {
       // the p77 signals-constant doc-growth axis (see generateDocMult)
       val dmDir = s"${workDir}_docmult"
       generateDocMult(spark, baseDir, dmDir)
-      val base = runDocMult(spark, baseDir)
-      val big = runDocMult(spark, dmDir).toMap
+      val base = runMult(spark, baseDir, "documents", DocMult)
+      val big = runMult(spark, dmDir, "documents", DocMult).toMap
       def fmtD(xs: Seq[(String, Double)]) =
         xs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
       val ratios = base.map { case (k, v) => k -> (if (v > 0) big(k) / v else -1.0) }
@@ -705,8 +671,8 @@ object ScaleBench {
       // the q12/q13 per-key row-growth axis (see generateRowMult)
       val rmDir = s"${workDir}_rowmult"
       generateRowMult(spark, baseDir, rmDir)
-      val base = runRowMult(spark, baseDir)
-      val big = runRowMult(spark, rmDir).toMap
+      val base = runMult(spark, baseDir, "events", RowMult)
+      val big = runMult(spark, rmDir, "events", RowMult).toMap
       def fmtR(xs: Seq[(String, Double)]) =
         xs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
       val ratios = base.map { case (k, v) => k -> (if (v > 0) big(k) / v else -1.0) }

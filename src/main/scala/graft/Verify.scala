@@ -17,20 +17,18 @@ object Verify {
       case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
       case None => SparkEntry.queries
     }
-    // warm the shared fixture cache BEFORE snapshotting the keep-set, then
-    // sweep each query's new persists (incl. the evaluator's request-scoped
-    // pins on cold stores) so they don't accumulate across the
-    // catalog — same protocol as Bench
+    // warm the shared fixture memo, then give each query one scope: it
+    // owns the query's persists and checkpoints (incl. the evaluator's
+    // pins) and releases them after the dump, so they don't accumulate
+    // across the catalog — same protocol as Bench
     new graft.store.EventSeriesStore(sfDir).allSeries(spark).count()
-    val keep = spark.sparkContext.getPersistentRDDs.keySet
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.core.Scope { _ =>
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally spark.sparkContext.getPersistentRDDs.foreach {
-        case (id, rdd) => if (!keep.contains(id)) rdd.unpersist(false)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Glob
+import graft.core.{Glob, Scope}
 import graft.store.SeriesStore
 
 /** One /metrics/find result node. (ref find_handlers.go treejson shaping) */
@@ -32,7 +32,9 @@ object Catalog {
    */
   @volatile var ttlSeconds: Long = 10L
 
-  private case class CatEntry(df: DataFrame, builtNanos: Long, ttlNanos: Long)
+  /** One TTL entry; its scope owns the persisted frame and expiry closes
+    * it. */
+  private case class CatEntry(scope: Scope, df: DataFrame, builtNanos: Long, ttlNanos: Long)
   private val catCache =
     scala.collection.concurrent.TrieMap.empty[(SeriesStore, Int), CatEntry]
 
@@ -53,7 +55,7 @@ object Catalog {
     // for exactly this (ref pathcache/pathcache.go:25). Each entry expires
     // on the TTL it was built with.
     catCache.foreach { case (k, e) =>
-      if (now - e.builtNanos >= e.ttlNanos) { dropEntry(e); catCache.remove(k) }
+      if (now - e.builtNanos >= e.ttlNanos) { e.scope.close(); catCache.remove(k) }
     }
     catCache.get(key) match {
       // a surviving entry must ALSO satisfy the caller's own freshness
@@ -61,23 +63,18 @@ object Catalog {
       // with a longer-TTL one still sees data no staler than ITS TTL
       case Some(e) if now - e.builtNanos < ttlSec * 1000000000L => e.df
       case stale =>
-        stale.foreach { e => dropEntry(e); catCache.remove(key) }
-        val fresh = store.catalog(spark)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        catCache.put(key, CatEntry(fresh, now, ttlSec * 1000000000L))
+        stale.foreach { e => e.scope.close(); catCache.remove(key) }
+        val scope = Scope.open()
+        val fresh = scope.persist(store.catalog(spark))
+        catCache.put(key, CatEntry(scope, fresh, now, ttlSec * 1000000000L))
         fresh
     }
   }
 
-  /** Best-effort unpersist: the entry's SparkSession may already be
-    * stopped (its blocks died with it) — expiry must not throw then. */
-  private def dropEntry(e: CatEntry): Unit =
-    try e.df.unpersist(false) catch { case _: Exception => () }
-
   /** Drop every cached catalog (tests; or after an out-of-band store write
     * the caller wants visible before the TTL lapses). */
   def invalidateCatalogCache(): Unit = synchronized {
-    catCache.values.foreach(dropEntry)
+    catCache.values.foreach(_.scope.close())
     catCache.clear()
   }
 

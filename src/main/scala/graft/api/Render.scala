@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import graft.core.{Glob, Kernels}
+import graft.core.{Glob, Kernels, Scope}
 import graft.engine.Eval
 import graft.store.SeriesStore
 
@@ -29,16 +29,17 @@ object Render {
   /** Evaluate one or more targets over [from, until). ONE request-scoped
     * context spans every target, so the batched leaf prefetch (and the
     * fetch memo) is shared across targets — a 10-panel dashboard reads the
-    * store once, not 10 times; pins release after the last collect. */
+    * store once, not 10 times. One [[graft.core.Scope]] owns the request's
+    * pins and releases them after the last collect. */
   def eval(spark: SparkSession, store: SeriesStore, targets: Seq[String],
            from: Long, until: Long): Seq[RenderedSeries] = {
     val asts = targets.map(t =>
       graft.parser.Defines.expand(graft.parser.Parser.parse(t)))
     val ctx = Eval.Ctx(spark, store, from, until)
-    try ctx.tracked {
+    Scope { _ =>
       ctx.prefetch(asts.flatMap(Eval.fetchLeaves))
       asts.flatMap(a => collect(Eval.eval(a, ctx)))
-    } finally ctx.release()
+    }
   }
 
   /**
@@ -58,11 +59,12 @@ object Render {
     val rows = Seq.newBuilder[RenderedSeries]
     // one base context spans the request: the batched prefetch and fetch
     // memo are shared, each target gets its own error sink via copy (the
-    // memo/pin buffers are constructor params, so copies share them).
+    // memo is a constructor param, so copies share it; one scope owns the
+    // request's pins).
     // A target that fails to PARSE contributes no leaves here — the parse
     // error surfaces on its own target below, exactly as before.
     val base = Eval.Ctx(spark, store, from, until)
-    try base.tracked {
+    Scope { _ =>
       base.prefetch(targets.flatMap(t =>
         try Eval.fetchLeaves(graft.parser.Defines.expand(graft.parser.Parser.parse(t)))
         catch { case scala.util.control.NonFatal(_) => Nil }))
@@ -104,7 +106,7 @@ object Render {
           if (requireSuccessAll && e.httpCode != 200 && e.httpCode != 404) stop = true
         }
       }
-    } finally base.release()
+    }
     (rows.result(), errors.result())
   }
 

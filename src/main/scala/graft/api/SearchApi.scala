@@ -93,14 +93,18 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
   @volatile private var server: HttpServer = _
   @volatile private var pool: java.util.concurrent.ExecutorService = _
 
+  // the mount's one scope: it owns every block the mount pins, and
+  // stop() releases them
+  private val mount = graft.core.Scope.open()
+
   // tombstones read ONCE (refresh-sized by contract, eagerly pinned):
   // every request reuses the materialized frame instead of re-reading
   private lazy val termTombstones: Option[DataFrame] =
-    termTombstonesPath.map(p => spark.read.parquet(p)
-      .select(col("doc_id"), col("before_seg")).localCheckpoint(true))
+    termTombstonesPath.map(p => mount.checkpoint(spark.read.parquet(p)
+      .select(col("doc_id"), col("before_seg"))))
   private lazy val ivfTombstones: Option[DataFrame] =
-    ivfTombstonesPath.map(p => spark.read.parquet(p)
-      .select(col("vec_id"), col("before_seg")).localCheckpoint(true))
+    ivfTombstonesPath.map(p => mount.checkpoint(spark.read.parquet(p)
+      .select(col("vec_id"), col("before_seg"))))
 
   // the mounted artifacts (see the class doc), opened by start()
   private lazy val termIndex = new graft.pipeline.TextStats.TermIndex(
@@ -202,6 +206,7 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
     // that stopped the server still never exits (caught by the r15
     // ScaleBench servearm run hanging its forked JVM)
     if (pool != null) pool.shutdown()
+    mount.close()
   }
 
   private def handle(f: Map[String, String] => String)(ex: HttpExchange): Unit = {

@@ -301,16 +301,15 @@ object AnalyticsOps {
     }
     val withW = df.withColumn("_w", winVals)
     val pts = withW.select(explode(col("_w")).as("_v")).where(!isnan(col("_v")))
-    val hist = pts.groupBy("_v").agg(count(lit(1)).as("_c")).sort("_v")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (q1, q3) =
-      try {
-        val partSums = hist.rdd
-          .mapPartitionsWithIndex((i, it) =>
-            Iterator.single((i, it.map(_.getLong(1)).sum)))
-          .collect().sortBy(_._1).map(_._2)
-        val total = partSums.sum
-        if (total == 0) return df.limit(0)
+    val quartiles = graft.core.Scope { s =>
+      val hist = s.persist(pts.groupBy("_v").agg(count(lit(1)).as("_c")).sort("_v"))
+      val partSums = hist.rdd
+        .mapPartitionsWithIndex((i, it) =>
+          Iterator.single((i, it.map(_.getLong(1)).sum)))
+        .collect().sortBy(_._1).map(_._2)
+      val total = partSums.sum
+      if (total == 0) None
+      else {
         // positional quartiles, 1-indexed ranks k+1 in the sorted multiset
         // (ref function.go:96-101: sort + values[len/4], values[3*len/4])
         val targets = Array((0.25 * total).toLong + 1, (0.75 * total).toLong + 1)
@@ -323,8 +322,11 @@ object AnalyticsOps {
             targets.filter(t => t > lo && t <= cum).map(t => (t, r.getDouble(0)))
           }
         }.collect().toMap
-        (quart(targets(0)), quart(targets(1)))
-      } finally hist.unpersist(false)
+        Some((quart(targets(0)), quart(targets(1))))
+      }
+    }
+    if (quartiles.isEmpty) return df.limit(0)
+    val (q1, q3) = quartiles.get
     val fence = if (above) q3 + basis * (q3 - q1) else q1 - basis * (q3 - q1)
     val cnt = size(filter(col("_w"),
       v => !isnan(v) && (if (above) v >= lit(fence) else v <= lit(fence))))

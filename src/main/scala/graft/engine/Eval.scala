@@ -31,22 +31,18 @@ object Eval {
                  fetchMemo: scala.collection.mutable.Map[(String, Long, Long), DataFrame] =
                    scala.collection.mutable.Map.empty,
                  fetchErrors: Option[scala.collection.mutable.Map[String, graft.store.StoreFetchException]] = None,
-                 pinned: scala.collection.mutable.ArrayBuffer[DataFrame] =
-                   scala.collection.mutable.ArrayBuffer.empty,
                  prefetched: scala.collection.mutable.ArrayBuffer[(String, Long, Long)] =
-                   scala.collection.mutable.ArrayBuffer.empty,
-                 rddPins: scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]] =
                    scala.collection.mutable.ArrayBuffer.empty) {
     def widen(by: Long): Ctx = copy(from = from - by)
 
-    /** Run `body` with this context installed as the thread's request:
-      * [[Eval.pin]] and [[Eval.trackRdd]] calls inside register their
-      * persists here and [[release]] drops them at request end, instead
-      * of lingering until an arbitrary ContextCleaner GC and pressuring
-      * the block store invisibly to the request-scoped pin accounting.
-      * Saves/restores any enclosing context, so nested evals stay
-      * correct. */
-    def tracked[T](body: => T): T = Eval.withRequest(this)(body)
+    /** For a caller that drives the evaluator itself and brackets a
+      * request with `tracked { … }` then `release()`: `tracked` installs
+      * this context's own [[graft.core.Scope]] as the thread's current
+      * scope and `release` closes it. [[graft.api.Render]] opens its own
+      * scope instead. */
+    private lazy val own = graft.core.Scope.open()
+    def tracked[T](body: => T): T = graft.core.Scope.within(own)(body)
+    def release(): Unit = own.close()
 
     /** Store fetch with the render tier's error masking: when an error sink
       * is installed, a failed fetch records its error and contributes an
@@ -72,15 +68,6 @@ object Eval {
             emptyFrame(spark)
         })
 
-    /** Unpin every request-scoped persist. Call AFTER the request's
-      * actions have run (post-collect); dropped pins recompute if re-used. */
-    def release(): Unit = {
-      pinned.foreach(df => try df.unpersist(false) catch { case _: Exception => () })
-      pinned.clear()
-      rddPins.foreach(r => try r.unpersist(false) catch { case _: Exception => () })
-      rddPins.clear()
-    }
-
     /**
      * Batch-prefetch a request's plain fetch leaves into ONE store scan —
      * the reference batches all of a request's leaves into one zipper
@@ -97,13 +84,13 @@ object Eval {
      * keeping error masking on the per-pattern path; an ACTION-time store
      * failure inside the shared batch is handled by evalWithErrors via
      * [[dropPrefetch]] + per-target retry, so the per-pattern isolation
-     * contract survives batching. Call inside [[tracked]], so the pin
-     * registers with this request.
+     * contract survives batching. Call inside the request's
+     * [[graft.core.Scope]], so the pin registers with it.
      *
      * Concurrency decision (r11): the batch is REQUEST-scoped on
      * purpose — two concurrent renders over the same store+window each
      * materialize their own batch rather than sharing one. Sharing would
-     * need cross-request refcounting of the pin (release() currently
+     * need cross-request refcounting of the pin (the request's scope
      * drops exactly what this request created) and a (store, patterns,
      * range) cache key whose hit rate is low outside same-window
      * dashboard bursts; the metadata path, where racing requests DO
@@ -133,8 +120,8 @@ object Eval {
       * every target of the request, where per-pattern fetches confine the
       * failure to targets referencing the failing pattern). Returns
       * whether there was a prefetch to drop, i.e. whether a retry can
-      * behave differently. The poisoned batch pin stays in [[pinned]] —
-      * nothing references it again and [[release]] drops it. */
+      * behave differently. The poisoned batch pin stays with the request's
+      * scope — nothing references it again and the scope drops it. */
     def dropPrefetch(): Boolean = {
       if (prefetched.isEmpty) false
       else {
@@ -145,55 +132,34 @@ object Eval {
     }
   }
 
-  /** The request context [[Ctx.tracked]] installed on this thread; null
-    * outside one (direct engine/test use). */
-  private val currentRequest = new ThreadLocal[Ctx]
-
-  private[engine] def withRequest[T](ctx: Ctx)(body: => T): T = {
-    val prev = currentRequest.get()
-    currentRequest.set(ctx)
-    try body
-    finally { if (prev == null) currentRequest.remove() else currentRequest.set(prev) }
-  }
-
   /** Pin `df` for the rest of the active request: for a frame that a
     * second Spark action reads — an operator that collects names or
     * counts from its input at build time and then returns a plan over
     * that same input, or the batched prefetch every target reads. The
-    * persist registers with the request's [[Ctx.pinned]] and
-    * [[Ctx.release]] drops it. Returns `df` unchanged on a scan-cached
-    * store (its fetches already serve from memory) and outside a request
-    * context (nothing would release the pin; the second action
-    * recomputes instead). */
-  private[graft] def pin(df: DataFrame): DataFrame = {
-    val ctx = currentRequest.get()
-    // an already-cached plan (the same glob pinned on both sides of a
-    // pairwise op) stays with its first pin
-    if (ctx == null || ctx.store.scanCached ||
-        df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ctx.pinned += p
-      p
-    }
-  }
+    * persist registers with the thread's current [[graft.core.Scope]],
+    * which releases it. Returns `df` unchanged when it already serves
+    * from memory — a scan-cached store's fetch, or a view of a frame
+    * already pinned — and outside an open scope (nothing would release the
+    * pin; the second action recomputes instead). */
+  private[graft] def pin(df: DataFrame): DataFrame =
+    if (graft.core.Scope.current.isDefined && readsFiles(df)) graft.core.Scope.persist(df)
+    else df
 
-  /** Register an operator-internal RDD persist with the active request's
-    * pin buffer, if a request context is installed on this thread —
-    * otherwise the persist falls back to ContextCleaner GC reclamation. */
-  private[graft] def trackRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    val ctx = currentRequest.get()
-    if (ctx != null) ctx.rddPins += rdd
-  }
+  /** Whether a second action over `df` would scan files again: some leaf
+    * of its cache-substituted plan is a file relation rather than cached
+    * data, a checkpoint or a local relation. */
+  private def readsFiles(df: DataFrame): Boolean =
+    df.queryExecution.withCachedData.exists {
+      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
+      case _ => false
+    }
 
   def evalTarget(spark: SparkSession, store: SeriesStore, target: String,
                  from: Long = Long.MinValue / 4, until: Long = Long.MaxValue / 4): DataFrame = {
     val ast = graft.parser.Defines.expand(Parser.parse(target))
     val ctx = Ctx(spark, store, from, until)
-    ctx.tracked {
-      ctx.prefetch(fetchLeaves(ast))
-      eval(ast, ctx)
-    }
+    ctx.prefetch(fetchLeaves(ast))
+    eval(ast, ctx)
   }
 
   /** Plain fetch leaves of an AST — the patterns a request pulls at the
@@ -583,8 +549,10 @@ object Eval {
     }),
     "removeBelowValue" -> ((ctx, fc) => SeriesOps.removeBelowValue(seriesArg(ctx, fc), numArg(fc, 1))),
     "removeAboveValue" -> ((ctx, fc) => SeriesOps.removeAboveValue(seriesArg(ctx, fc), numArg(fc, 1))),
-    "removeBelowPercentile" -> ((ctx, fc) => SeriesOps.removeBelowPercentile(seriesArg(ctx, fc), numArg(fc, 1))),
-    "removeAbovePercentile" -> ((ctx, fc) => SeriesOps.removeAbovePercentile(seriesArg(ctx, fc), numArg(fc, 1))),
+    "removeBelowPercentile" -> ((ctx, fc) =>
+      SeriesOps.removePercentile(seriesArg(ctx, fc), numArg(fc, 1), above = false)),
+    "removeAbovePercentile" -> ((ctx, fc) =>
+      SeriesOps.removePercentile(seriesArg(ctx, fc), numArg(fc, 1), above = true)),
     // time args go through the full at-time grammar first ("00:03 19700101",
     // "today-1h"), falling back to a POSITIVE interval treated as an absolute
     // epoch — the reference's retrocompat path (ref timeSlice/function.go:

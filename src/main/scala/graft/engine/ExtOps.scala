@@ -298,6 +298,10 @@ object ExtOps {
     * (ref reduce/function.go:72-115). */
   def reduceSeries(df: DataFrame, reduceFn: String, reduceNode: Int, matchers: Seq[String]): DataFrame = {
     require(matchers.length >= 2, "reduceSeries needs at least two matchers")
+    // nondeterministic so Catalyst evaluates it only on the series that
+    // reach this operator: pushed below an upstream filter (the batched
+    // prefetch's per-pattern view of a shared scan) it would also see the
+    // other patterns' rows, and its out-of-range error would fire on them
     val keyU = udf((n: String) => {
       val nodes = graft.core.Names.extractName(n).split("\\.", -1)
       val idx = if (reduceNode < 0) reduceNode + nodes.length else reduceNode
@@ -307,7 +311,7 @@ object ExtOps {
       val key = nodes(idx)
       nodes(idx) = "reduce." + reduceFn
       (key, nodes.mkString("."))
-    })
+    }).asNondeterministic()
     val tagged = df.withColumn("_rk", keyU(col("name")))
     val a = tagged.where(col("_rk._1") === matchers.head)
       .select(col("_rk._2").as("k"), col("tags"), col("start"), col("step"),

@@ -28,10 +28,8 @@ object PairOps {
     * populates the cache, so the upstream plan (possibly an expensive
     * store-read chain) executes ONCE per call instead of once for the
     * count and again per downstream action. The persist registers with
-    * the active request's RDD-pin buffer (Eval.trackRdd), so a render
-    * releases it at request end; without an installed request context
-    * (direct engine/test use) it falls back to ContextCleaner GC
-    * reclamation when the derived frame is garbage collected. */
+    * the current [[graft.core.Scope]], so a render releases it at request
+    * end. */
   private[engine] def indexByName(df: DataFrame, orderCol: String = "name",
                                   knownSize: Option[Long] = None): DataFrame =
     indexByOrder(df, Seq(orderCol), knownSize)
@@ -67,8 +65,7 @@ object PairOps {
       // the range sort's sampling job and the offset-count job both read
       // the input
       val sorted = Eval.pin(df).sort(orderCols.map(col): _*)
-      val cached = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Eval.trackRdd(cached)
+      val cached = graft.core.Scope.persistRdd(sorted.rdd)
       val indexed = cached.zipWithIndex.map { case (r, i) =>
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L)) }
       sorted.sparkSession.createDataFrame(indexed,

@@ -551,18 +551,22 @@ object SeriesOps {
     rewrap(mapPointwise(df, v => when(v > lit(n), lit(Double.NaN)).otherwise(v)),
       "removeAboveValue", Seq(" " + fmtNum(n)))
 
-  def removeBelowPercentile(df: DataFrame, n: Double): DataFrame = {
-    val pc = vecScalar(v => Kernels.percentile(v, n, interpolate = false))(col("values"))
-    rewrap(df.withColumn("_p", pc)
-      .withColumn("values", transform(col("values"), v => when(v < col("_p"), lit(Double.NaN)).otherwise(v)))
-      .drop("_p"), "removeBelowPercentile", Seq(" " + fmtNum(n)))
-  }
-  def removeAbovePercentile(df: DataFrame, n: Double): DataFrame = {
-    val pc = vecScalar(v => Kernels.percentile(v, n, interpolate = false))(col("values"))
-    rewrap(df.withColumn("_p", pc)
-      .withColumn("values", transform(col("values"), v => when(v > col("_p"), lit(Double.NaN)).otherwise(v)))
-      .drop("_p"), "removeAbovePercentile", Seq(" " + fmtNum(n)))
-  }
+  /** removeAbovePercentile / removeBelowPercentile: NaN every point above
+    * (below) the series' own n-th percentile. One UDF over the whole array
+    * computes the percentile ONCE per series and masks in the same pass —
+    * a threshold column would be inlined by Catalyst into a per-point
+    * `transform` lambda, sorting the series once per point. The compare
+    * keeps Spark's double ordering (NaN above every number, a NaN threshold
+    * included). */
+  def removePercentile(df: DataFrame, n: Double, above: Boolean): DataFrame =
+    rewrap(mapVec(df, v => {
+      val p = Kernels.percentile(v, n, interpolate = false)
+      v.map { x =>
+        val c = if (x == p) 0 else java.lang.Double.compare(x, p)
+        if (if (above) c > 0 else c < 0) Double.NaN else x
+      }
+    }), if (above) "removeAbovePercentile" else "removeBelowPercentile",
+      Seq(" " + fmtNum(n)))
 
   /** round to precision with banker's rounding; name carries the precision
     * only when given (ref round/function.go:47-49, helper.SafeRound). */

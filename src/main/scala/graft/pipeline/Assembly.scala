@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /**
  * Corpus-assembly operators: the steps between a curated document set and a
@@ -15,11 +16,11 @@ import org.apache.spark.sql.functions._
  *
  * Lifecycle note (the [[Dedup]] convention): the scorers whose plans reuse
  * an intermediate (unigram/bigram LM token+vocab frames, nbDomainScore's
- * class-count frames, dsirSelect's word frames) `persist()` it, and the
- * returned plan references the cache — eviction is the CALLER's job
- * (Bench/Verify sweep new persists per query; [[qualityEnsemble]] releases
- * its whole call delta in a finally). A long-lived service looping a bare
- * scorer must evict between calls or the corpus-scale caches accumulate.
+ * class-count frames, dsirSelect's word frames) persist it, and the
+ * returned plan references the cache, so each registers with the caller's
+ * [[graft.core.Scope]]; [[qualityEnsemble]] runs its chains in a nested
+ * scope. A long-lived service calls a bare scorer inside a scope per call,
+ * or the corpus-scale caches stay owned by the enclosing one.
  */
 object Assembly {
 
@@ -71,9 +72,8 @@ object Assembly {
       }
     // doc-count-sized shared intermediate: the bucket-sum action and the
     // final join would otherwise each re-run the token-count scan
-    val withN = docs.select(col("doc_id"), nTokens(col("text")).as("n_tokens"))
-      .withColumn("bucket", floor(col("doc_id") / bw))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val withN = Scope.persist(docs.select(col("doc_id"), nTokens(col("text")).as("n_tokens"))
+      .withColumn("bucket", floor(col("doc_id") / bw)))
     val bucketSums = withN.groupBy("bucket").agg(sum("n_tokens").as("bsum"))
       .orderBy("bucket").as[(Long, Long)].collect()
     val bases = bucketSums.scanLeft((Long.MinValue, 0L)) {
@@ -229,11 +229,11 @@ object Assembly {
     // r17: the tokenized frame feeds the vocab aggregate AND the scoring
     // join, and the vocab feeds the totals AND the join — persist both so
     // the regex+split chain and the word-keyed aggregate each run ONCE
-    // (vocab is Zipf-bounded, tiny state at any scale; same caller-evicts
-    // contract as the Dedup signature tables)
-    val words = docs.select(col("doc_id"), Dedup.wordsOf(col("text")).as("w")).persist()
+    // (vocab is Zipf-bounded, tiny state at any scale; the caller's scope
+    // owns both, like the Dedup signature tables)
+    val words = Scope.persist(docs.select(col("doc_id"), Dedup.wordsOf(col("text")).as("w")))
     val toks = words.select(col("doc_id"), explode(col("w")).as("word"))
-    val vocab = toks.groupBy("word").agg(count(lit(1)).as("c")).persist()
+    val vocab = Scope.persist(toks.groupBy("word").agg(count(lit(1)).as("c")))
     val totals = vocab.agg(sum("c").as("t"), count(lit(1)).as("v"))
     val termQ = round(log((col("c") + 1.0) / (col("t") + col("v"))) * 1e6).cast("long")
     toks.join(vocab, "word")
@@ -263,8 +263,8 @@ object Assembly {
     // vocab count and THREE bigram-stream references — persist it so the
     // regex+split chain runs once, not four times (spills gracefully at
     // scale; recompute is the expensive part per guide §5)
-    val words = Par.spread(docs).select(col("doc_id"), Dedup.wordsOf(col("text")).as("w"))
-      .persist()
+    val words = Scope.persist(Par.spread(docs)
+      .select(col("doc_id"), Dedup.wordsOf(col("text")).as("w")))
     val vocabSize = words.select(explode(col("w")).as("word"))
       .agg(countDistinct(col("word")).as("v"))
     val bigr = words.where(size(col("w")) >= 2)
@@ -323,9 +323,8 @@ object Assembly {
    * `percentile` agg would pool every value into executor memory.
    */
   private[pipeline] def tercileCutsX1e4(vals: DataFrame, qCol: String): (Long, Long) = {
-    val hist = vals.groupBy(col(qCol)).agg(count(lit(1)).as("_c")).sort(qCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope { s =>
+      val hist = s.persist(vals.groupBy(col(qCol)).agg(count(lit(1)).as("_c")).sort(qCol))
       val partSums = hist.rdd
         .mapPartitionsWithIndex((i, it) => Iterator.single((i, it.map(_.getLong(1)).sum)))
         .collect().sortBy(_._1).map(_._2)
@@ -348,17 +347,16 @@ object Assembly {
       val (a1, b1) = (found(i1 + 1), found(math.min(i1 + 1, n - 1) + 1))
       val (a2, b2) = (found(i2 + 1), found(math.min(i2 + 1, n - 1) + 1))
       (a1 + (b1 - a1) * r1 / 3, a2 + (b2 - a2) * r2 / 3)
-    } finally hist.unpersist(false)
+    }
   }
 
   def perplexityBuckets(docs: DataFrame): DataFrame = {
     // doc-count-sized shared intermediate: the tercile-cut action and the
     // bucket projection would otherwise each re-run the LM score chain
-    val scored = unigramLmScore(docs)
+    val scored = Scope.persist(unigramLmScore(docs)
       .withColumn("avg_logp", round(col("avg_logp") * 1e4) / 1e4)
       .withColumn("ppl", round(exp(-col("avg_logp")) * 1e4) / 1e4)
-      .withColumn("_q", round(col("ppl") * 1e4).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_q", round(col("ppl") * 1e4).cast("long")))
     // exact integer cuts (see tercileCutsX1e4) — the double-interpolated
     // percentile classified boundary docs differently per engine
     val (c1f, c2f) = tercileCutsX1e4(scored.select(col("_q")), "_q")
@@ -389,12 +387,12 @@ object Assembly {
     // scoring join; each vocab feeds its totals AND the join — persist
     // the words frame + both vocab-sized aggregates so the regex chain
     // and the word-keyed shuffles run once each
-    val wd = docs.select(col("doc_id"), Dedup.wordsOf(col("text")).as("_w")).persist()
+    val wd = Scope.persist(docs.select(col("doc_id"), Dedup.wordsOf(col("text")).as("_w")))
     val toks = wd.select(col("doc_id"), explode(col("_w")).as("word"))
-    val rawVocab = toks.groupBy("word").agg(count(lit(1)).as("cr")).persist()
+    val rawVocab = Scope.persist(toks.groupBy("word").agg(count(lit(1)).as("cr")))
     val rawTot = rawVocab.agg(sum("cr").as("tr"), count(lit(1)).as("vr"))
-    val tgtVocab = target.select(explode(Dedup.wordsOf(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("ct")).persist()
+    val tgtVocab = Scope.persist(target.select(explode(Dedup.wordsOf(col("text"))).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("ct")))
     val tgtTot = tgtVocab.agg(sum("ct").as("tt"), count(lit(1)).as("vt"))
     toks.join(rawVocab, "word")
       .join(broadcast(tgtVocab), Seq("word"), "left")
@@ -441,15 +439,14 @@ object Assembly {
     // r17: the token stream feeds the class-count aggregate AND the
     // scoring join, and wc feeds the totals AND the join — persist the
     // tokenized frame + the vocab-sized class counts so each computes once
-    val w0 = docs.select(col("doc_id"),
+    val w0 = Scope.persist(docs.select(col("doc_id"),
       (col("source") === targetSource).as("tgt"),
-      Dedup.wordsOf(col("text")).as("_w")).persist()
+      Dedup.wordsOf(col("text")).as("_w")))
     val toks = w0.select(col("doc_id"), col("tgt"), explode(col("_w")).as("word"))
-    val wc = toks.groupBy("word").agg(
+    val wc = Scope.persist(toks.groupBy("word").agg(
       sum(when(col("tgt"), 1L).otherwise(0L)).as("ct"),
       count(lit(1)).as("cw"))
-      .withColumn("cr", col("cw") - col("ct"))
-      .persist()
+      .withColumn("cr", col("cw") - col("ct")))
     val tot = wc.agg(sum("ct").as("nt"), sum("cr").as("nr"), count(lit(1)).as("v"))
     // Guard the prior: if targetSource matches none or all documents the
     // log-ratio goes to ln(0)/ln(inf) and Spark's non-ANSI semantics would
@@ -575,12 +572,11 @@ object Assembly {
     // persist the doc-count-sized score projection: the histogram action
     // plus the three keep branches would otherwise re-run the whole
     // explode + vocab-join + per-doc-agg chain up to four times (the r9
-    // plan audit's shared-intermediate pattern; Bench/Verify sweep
-    // per-query persists)
-    val scored = unigramLmScore(docs)
+    // plan audit's shared-intermediate pattern; the caller's scope owns
+    // the persist)
+    val scored = Scope.persist(unigramLmScore(docs)
       .withColumn("score", round(col("avg_logp") * 1e4) / 1e4)
-      .select(col("doc_id"), col("n_words"), col("score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("n_words"), col("score")))
     val hist = scored.groupBy("score").agg(sum("n_words").as("t")).collect()
       .map(r => (r.getDouble(0), r.getLong(1))).sortBy(-_._1)
     var cum = 0L; var cutoff = 0.0; var rem = 0L; var crossed = false
@@ -989,10 +985,9 @@ object Assembly {
       s"epochPlan: the tercile cut supports 1..3 epochs, got $maxEpochs")
     // doc-count-sized shared intermediate: the cut aggregate and the
     // epoch assignment would otherwise each re-run the quality regexes
-    val scored = TextStats.qualityScore(docs)
+    val scored = Scope.persist(TextStats.qualityScore(docs)
       .select(col("doc_id"),
-        (round(col("quality_score") * 1e4) / 1e4).as("score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (round(col("quality_score") * 1e4) / 1e4).as("score")))
     // cuts round to 4dp; UNLIKE the p41/p57 cuts this rounded form is
     // boundary-safe by construction: a tercile's interpolation fraction
     // is 0, 1/3 or 2/3, so cut·1e4's fractional part is never .5 and a
@@ -1050,11 +1045,12 @@ object Assembly {
    * bounded frame is keyed so the no-partition-window ban holds); ranks
    * broadcast back by score. The fusion is map-side arithmetic.
    *
-   * Eager: the fused result materializes (via localCheckpoint — one
-   * narrow row per doc) so the three persisted score chains unpersist
-   * before returning; a long-lived caller (HTTP tier, repeated pipeline
-   * use) does not accumulate three cached corpus-scale frames per call
-   * (the [[Dedup]] eager-op pattern).
+   * Eager: the three chains run in a nested [[graft.core.Scope]] and the
+   * fused result (one narrow row per doc) is checkpointed into the
+   * caller's scope, so the persisted score chains are released before
+   * returning; a long-lived caller (HTTP tier, repeated pipeline use) does
+   * not accumulate three cached corpus-scale frames per call (the
+   * [[Dedup]] eager-op pattern).
    * Determinism: every input score is 4dp-rounded integer-backed (post
    * r10 quantization), ranks are exact rationals below/(n−1), and the
    * fused mean is a fixed-order 3-term expression — no data-dependent
@@ -1063,16 +1059,7 @@ object Assembly {
   def qualityEnsemble(docs: DataFrame, targetSource: String,
                       tau: Double = 0.5): DataFrame = {
     val r4 = (c: org.apache.spark.sql.Column) => round(c * 1e4) / 1e4
-    // leave-nothing-pinned contract (r18, ADVICE r17): the finally releases
-    // EVERY persist this call created — a before/after snapshot of the
-    // block-store catches the scorer-internal persists too (unigramLmScore's
-    // words/vocab, nbDomainScore's w0/wc), which the old per-rankOf pin list
-    // missed, and the snapshot diff has no shared mutable buffer for the
-    // three concurrent chains to race on
-    val sc = docs.sparkSession.sparkContext
-    val pinsBefore = sc.getPersistentRDDs.keySet
-    def rankOf(scored0: DataFrame, rankName: String): DataFrame = {
-      val scored = scored0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def rankOf(scored: DataFrame, rankName: String): DataFrame = {
       val hist = scored.groupBy("score").agg(count(lit(1)).as("_c"))
         .withColumn("_g", lit(1))
       val w = Window.partitionBy("_g").orderBy("score")
@@ -1089,25 +1076,24 @@ object Assembly {
             .as(rankName))
       scored.join(broadcast(ranks), "score").select(col("doc_id"), col(rankName))
     }
-    try {
+    Scope.local { s =>
       // the three signal chains are independent until the final join — run
       // them as concurrent driver-submitted jobs (guide §2.6: actions are
       // only sequential because the driver calls them sequentially; each
-      // chain's tail otherwise leaves the executor idle). localCheckpoint
-      // materializes each rank table eagerly inside its future; the final
-      // join then reads three tiny materialized frames.
+      // chain's tail otherwise leaves the executor idle). Each future
+      // registers its persists with `s` and checkpoints its rank table
+      // there; the final join then reads three tiny materialized frames.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fq = Future(rankOf(Curation.scoredQuality(docs)
+      def chain(scored: => DataFrame, rankName: String): Future[DataFrame] =
+        Scope.future(s.checkpoint(rankOf(s.persist(scored), rankName)))
+      val fq = chain(Curation.scoredQuality(docs)
         .select(col("doc_id"), col("quality").as("score")), "q_rank")
-        .localCheckpoint(true))
-      val fnb = Future(rankOf(nbDomainScore(docs, targetSource)
+      val fnb = chain(nbDomainScore(docs, targetSource)
         .select(col("doc_id"), r4(col("logodds")).as("score")), "nb_rank")
-        .localCheckpoint(true))
-      val flm = Future(rankOf(unigramLmScore(docs)
+      val flm = chain(unigramLmScore(docs)
         .select(col("doc_id"), r4(col("avg_logp")).as("score")), "lm_rank")
-        .localCheckpoint(true))
       val q = Await.result(fq, Duration.Inf)
       val nb = Await.result(fnb, Duration.Inf)
       val lm = Await.result(flm, Duration.Inf)
@@ -1116,13 +1102,6 @@ object Assembly {
           r4((col("q_rank") + col("nb_rank") + col("lm_rank")) / 3))
         .withColumn("keep", (col("fused") >= tau).cast("long"))
         .select("doc_id", "q_rank", "nb_rank", "lm_rank", "fused", "keep")
-        .localCheckpoint(true)
-    } finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      // checkpointed RDDs are excluded: the three rank tables and the
-      // returned frame ARE their materialized blocks (truncated lineage
-      // cannot recompute); they reclaim via ContextCleaner GC as before
-      if (!pinsBefore.contains(id) && !rdd.isCheckpointed)
-        try rdd.unpersist(false) catch { case _: Exception => () }
     }
   }
 

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Scope
 
 /**
  * Corpus-curation operators a large-scale training-data pipeline needs
@@ -76,11 +77,10 @@ object Curation {
     val corpus = Par.spread(corpus0) // map-side bloom probe battery (r17)
     // bench grams feed the sizing count AND the bloom build — persist so
     // the bench-side shingling runs once (a benchmark is small by
-    // contract; r17, same caller-evicts convention as the LSH tables)
-    val bgrams = bench
+    // contract); the caller's scope owns it
+    val bgrams = Scope.persist(bench
       .select(Dedup.wordsOf(col("text")).as("w"))
-      .select(explode(Dedup.shinglesOf(col("w"), n)).as("gram"))
-      .persist()
+      .select(explode(Dedup.shinglesOf(col("w"), n)).as("gram")))
     val expected = if (expectedGrams > 0) expectedGrams
       else math.max(bgrams.count(), 1L)
     val bloom = bgrams.select(xxhash64(col("gram")).as("g"))
@@ -147,14 +147,12 @@ object Curation {
     // (previously the bloom phase shingled the bench twice and the exact
     // phase a third time). Corpus-side shape unchanged: one map-side bloom
     // scan, then the exact pass over the flagged sliver only.
-    // same caller-evicts convention as contaminationBloom's bench-gram
-    // persist (Bench/Verify sweep new persists per query); the returned
-    // plan's broadcast side reads it, so the operator cannot drop it itself
-    // without materializing the result
-    val bg = bench
+    // the caller's scope owns it, like contaminationBloom's bench grams:
+    // the returned plan's broadcast side reads it, so the operator cannot
+    // drop it itself without materializing the result
+    val bg = Scope.persist(bench
       .select(col("doc_id").as("bench_id"), Dedup.wordsOf(col("text")).as("w"))
-      .select(col("bench_id"), explode(Dedup.shinglesOf(col("w"), n)).as("gram"))
-      .persist()
+      .select(col("bench_id"), explode(Dedup.shinglesOf(col("w"), n)).as("gram")))
     locally {
       val expected = math.max(bg.count(), 1L)
       val bloom = bg.select(xxhash64(col("gram")).as("g"))
@@ -206,11 +204,9 @@ object Curation {
     // per-row distance math + 1e7-quantized centroid folds (r17 spread).
     // vecs is read by iters+2 actions (init take, per-iteration centroid
     // folds, final assignment) — persist so the scan+cast+spread runs once,
-    // not once per action (same caller-evicts contract as the Dedup LSH
-    // signature tables; Bench/Verify sweep new persists per query).
-    val vecs = Par.spread(emb).select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-      .persist()
+    // not once per action; the caller's scope owns it.
+    val vecs = Scope.persist(Par.spread(emb).select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("v")))
     var cents: Array[Array[Double]] = vecs.orderBy(col("vec_id")).limit(k)
       .collect().map(_.getSeq[Double](1).toArray)
     var it = 0
@@ -539,10 +535,9 @@ object Curation {
       s"prototypePrune: pruneFrac must be a 4-decimal fraction in [0,1], got $pruneFrac")
     // vec-count-sized shared intermediate: the per-cluster cut aggregate
     // and the keep join would otherwise each re-run the assignment scan
-    val a = kmeansAssign(emb, k, iters)
+    val a = Scope.persist(kmeansAssign(emb, k, iters)
       .withColumn("dist", round(sqrt(col("dist2")) * 1e4) / 1e4)
-      .withColumn("_dq", round(col("dist") * 1e4).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_dq", round(col("dist") * 1e4).cast("long")))
     val h = a.groupBy(col("cluster"), col("_dq")).agg(count(lit(1)).as("_c"))
     val hh = h
       .withColumn("_cum", sum(col("_c")).over(
@@ -638,12 +633,11 @@ object Curation {
     // re-scored the corpus twice, and ReuseExchange can't dedup it
     // (column pruning diverges the branches). Persist the 3-column
     // projection instead — the repo's standard shared-intermediate
-    // pattern (signatures, shingle tables; Bench/Verify sweep per-query
-    // persists): ONE scan + regex pass, and then NO corpus shuffle at
+    // pattern (signatures, shingle tables; the caller's scope owns the
+    // persist): ONE scan + regex pass, and then NO corpus shuffle at
     // all — the histogram agg moves map-side partials and the join back
     // broadcasts the histogram-sized rank table.
-    val scored = scoredQuality(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val scored = Scope.persist(scoredQuality(docs))
     scored.join(broadcast(sourcePercentileRanks(scored)), Seq("source", "quality"))
       .withColumn("keep", (col("src_pct") >= 0.75).cast("long"))
       .select("doc_id", "source", "quality", "src_pct", "keep")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.Scope
 
 /**
  * Large-scale document deduplication operators over a `documents` table
@@ -16,14 +17,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  * band join's key cardinality scales with corpus size, keeping partitions
  * bounded; skewed buckets (boilerplate text) are handled by AQE skew-join.
  *
- * Lifecycle note: the LSH methods `persist()` their signature table (it
+ * Lifecycle note: the LSH methods persist their signature table (it
  * feeds both sides of the band self-join) and [[sharedSpanPairs]] its
- * positional gram table. Each returned plan references its cache, so
- * eviction is the CALLER's job — in a long-lived server, unpersist via the
- * storage API after consuming the result, or the cached tables accumulate.
- * [[dedupClusters]] persists nothing: it `localCheckpoint`s its canonical
- * edge set (and, above the driver gate, each contraction round), which the
- * context cleaner reclaims once their plans are dropped.
+ * positional gram table. Each returned plan references its cache, so each
+ * registers with the caller's [[graft.core.Scope]], which releases it.
+ * [[dedupClusters]] checkpoints its canonical edge set (and, above the
+ * driver gate, each contraction round) into the same scope.
  */
 object Dedup {
 
@@ -182,10 +181,9 @@ object Dedup {
     // an unpersisted plan would re-shingle + re-hash the corpus per side
     // (and double the codegen'd expression tree). One row per doc — tiny
     // relative to the corpus text it replaces.
-    val sigs = Par.spread(docs)
+    val sigs = Scope.persist(Par.spread(docs)
       .select(col("doc_id"), wordsOf(col("text")).as("_w"))
-      .select(col("doc_id"), minhashFromWords(col("_w"), k, numHashes).as("sig"))
-      .persist()
+      .select(col("doc_id"), minhashFromWords(col("_w"), k, numHashes).as("sig")))
     lshBandPairs(sigs, numHashes, bands, threshold)
   }
 
@@ -197,7 +195,7 @@ object Dedup {
     * rotation-densified, so position-match estimation stays valid). */
   def minhashPairsOph(docs: DataFrame, k: Int = 3, numBins: Int = 64,
                       bands: Int = 16, threshold: Double = 0.8): DataFrame =
-    lshBandPairs(ophSigs(docs, k, numBins).persist(), numBins, bands, threshold)
+    lshBandPairs(Scope.persist(ophSigs(docs, k, numBins)), numBins, bands, threshold)
 
   /** (doc_id, sig) OPH signatures — shared by the pair join, the persisted
     * index writer and the incremental query. */
@@ -239,11 +237,11 @@ object Dedup {
     * produce duplicate CANDIDATES, which the query dedups before scoring). */
   def appendToNearDupIndex(newDocs: DataFrame, dir: String, k: Int = 3,
                            numBins: Int = 64, bands: Int = 16): Unit = {
-    val sigs = ophSigs(newDocs, k, numBins).persist()
-    try {
+    Scope { s =>
+      val sigs = s.persist(ophSigs(newDocs, k, numBins))
       sigs.write.mode("append").parquet(s"$dir/sigs")
       bandRows(sigs, numBins, bands).write.mode("append").parquet(s"$dir/bands")
-    } finally sigs.unpersist()
+    }
   }
 
   /**
@@ -262,21 +260,20 @@ object Dedup {
    * driver (a big re-index batch is legitimate, just not broadcastable —
    * the soft-degrade twin of p34's hard `require`, Similarity.scala).
    *
-   * Eager: the result materializes (via localCheckpoint — pairs scale
-   * with duplicate density, so it is small) so the cached batch
-   * signatures unpersist before returning; a long-running ingestion
+   * Eager: the result is checkpointed into the caller's scope (pairs
+   * scale with duplicate density, so it is small) and the cached batch
+   * signatures are released before returning; a long-running ingestion
    * driver calling this per batch leaks nothing.
    */
   def nearDupAgainstIndex(newDocs: DataFrame, dir: String, k: Int = 3,
                           numBins: Int = 64, bands: Int = 16,
                           threshold: Double = 0.8,
                           maxBroadcastDocs: Long = 4_000_000L): DataFrame = {
-    val newSigs = ophSigs(newDocs, k, numBins).persist()
-    try {
+    Scope.local { s =>
+      val newSigs = s.persist(ophSigs(newDocs, k, numBins))
       val small = newSigs.count() <= maxBroadcastDocs
       indexQueryPlan(newSigs, dir, numBins, bands, threshold, broadcastBatch = small)
-        .localCheckpoint(true)
-    } finally newSigs.unpersist()
+    }
   }
 
   /** The lazy plan behind [[nearDupAgainstIndex]], parameterized on whether
@@ -403,10 +400,9 @@ object Dedup {
     // hash shingles into one array per doc and materialize: the plan below
     // reuses it three ways (postings, both size joins) — without the
     // persist each reuse re-runs the whole shingling expression
-    val hashed = Par.spread(docs)
+    val hashed = Scope.persist(Par.spread(docs)
       .select(col("doc_id"), wordsOf(col("text")).as("_w"))
-      .select(col("doc_id"), transform(shinglesOf(col("_w"), k), s => xxhash64(s)).as("shs"))
-      .persist()
+      .select(col("doc_id"), transform(shinglesOf(col("_w"), k), s => xxhash64(s)).as("shs")))
     val sh = hashed.select(col("doc_id"), explode(col("shs")).as("sh"))
     val sizes = hashed.select(col("doc_id"), size(col("shs")).as("setSize"))
     // posting lists arrive SORTED for df <= maxDocFreq (BoundedCollectLong
@@ -458,11 +454,10 @@ object Dedup {
     val w = docs.select(col("doc_id"), wordsOf(col("text")).as("_w"))
       .where(size(col("_w")) >= spanTokens)
     // (doc_id, pos, gram): gram = the fingerprint of the span at pos (1-based)
-    val grams = w.select(col("doc_id"),
+    val grams = Scope.persist(w.select(col("doc_id"),
         posexplode(transform(sequence(lit(1), size(col("_w")) - (spanTokens - 1)),
           i => xxhash64(slice(col("_w"), i, lit(spanTokens))))).as(Seq("p0", "gram")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("gram"))
-      .persist()
+      .select(col("doc_id"), (col("p0") + 1).as("pos"), col("gram")))
     val keep = grams.select(col("gram"), col("doc_id")).distinct()
       .groupBy("gram").agg(count(lit(1)).as("df"))
       .where(col("df") >= 2 && col("df") <= maxDocFreq)
@@ -552,12 +547,13 @@ object Dedup {
    * oriented (u > v) throughout, so convergence (= the edge set is a fixed
    * point) is one anti-join test per round.
    *
-   * Each round's result is `localCheckpoint`ed: the round plan references
-   * the previous edge set several times, so un-truncated lineage grows
-   * multiplicatively per round and OOMs the driver during analysis after
-   * ~8 rounds. Checkpointing makes every round start from materialized
-   * blocks (dropped rounds are reclaimed by the context cleaner); on a
-   * cluster with executor churn, prefer a real `checkpoint` dir.
+   * Each round's result is checkpointed into the caller's
+   * [[graft.core.Scope]]: the round plan references the previous edge set
+   * several times, so un-truncated lineage grows multiplicatively per
+   * round and OOMs the driver during analysis after ~8 rounds.
+   * Checkpointing makes every round start from materialized blocks; the
+   * edge sets only shrink, and the scope releases every round at once. On
+   * a cluster with executor churn, prefer a real `checkpoint` dir.
    *
    * Throws if the contraction has not converged after `maxIters` rounds —
    * non-converged labels are silently WRONG, so failing loudly is the only
@@ -567,9 +563,9 @@ object Dedup {
     // LAZY checkpoints throughout the loop — the count that follows each
     // checkpoint is its first action, so materialization and count share
     // ONE job per round
-    var edges = pairs
+    var edges = Scope.checkpoint(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"), least(col("doc_a"), col("doc_b")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint(false)
+      .where(col("u") =!= col("v")).distinct(), eager = false)
     // the materialized count carries across rounds (no re-count of the
     // previous edge set)
     var nEdges = edges.count()
@@ -597,9 +593,9 @@ object Dedup {
       // each smaller neighbor and u itself onto u's minimum neighbor
       val mins2 = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
       val withM = ls.join(mins2, "u")
-      val next = withM.select(col("v").as("u"), col("m").as("v"))
+      val next = Scope.checkpoint(withM.select(col("v").as("u"), col("m").as("v"))
         .union(withM.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v")).distinct().localCheckpoint(false)
+        .where(col("u") =!= col("v")).distinct(), eager = false)
       val nNext = next.count()
       // set equality on two DISTINCT sets = equal counts + empty anti join
       // (cheaper than the old exceptAll, which built a counted union)

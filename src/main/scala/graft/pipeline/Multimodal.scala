@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import org.apache.spark.sql.types._
 
 /**
@@ -378,15 +379,14 @@ object Multimodal {
     * shuffle is the growth term at scale and this makes each row 8×
     * smaller.
     *
-    * Eager: the pair set materializes via localCheckpoint (collision-
-    * bounded — it tracks band collision density, never corpus²) so the
-    * signature persist releases before returning; a long-lived server
-    * accumulates NO cache residue across calls (the r11 p77 lesson, same
-    * contract as Dedup.nearDupAgainstIndex). */
+    * Eager: the pair set is checkpointed into the caller's scope
+    * (collision-bounded — it tracks band collision density, never
+    * corpus²) and the signature persist is released before returning; a
+    * long-lived server accumulates NO cache residue across calls (the r11
+    * p77 lesson, same contract as Dedup.nearDupAgainstIndex). */
   private def bandedHammingPairs(signatures: DataFrame, maxHamming: Int): DataFrame = {
-    val sig = signatures
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope.local { s =>
+      val sig = s.persist(signatures)
       val bands = sig.select(col("asset_id"), col("blocks"),
         posexplode(col("blocks")).as(Seq("block", "key")))
       val a = bands.select(col("asset_id").as("asset_a"), col("blocks").as("_pa"),
@@ -403,8 +403,7 @@ object Multimodal {
             lit(0L), (acc, v) => acc + v))
         .where(col("hamming") <= maxHamming)
         .select("asset_a", "asset_b", "hamming")
-        .localCheckpoint(true)
-    } finally sig.unpersist(false)
+    }
   }
 
   /**

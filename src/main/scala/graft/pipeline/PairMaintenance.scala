@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /**
  * Incremental maintenance of the exact n-gram-Jaccard pair set and its
@@ -149,7 +150,8 @@ object PairMaintenance {
     // doc's tombstones) — so one index scan can serve both states, instead
     // of one anti-join scan per state per consumer
 
-    // every small frame below materializes EAGERLY (localCheckpoint):
+    // every small frame below materializes EAGERLY (a checkpoint into the
+    // caller's scope — the returned frames read them):
     // they are referenced 2-4 times each, and a lazy plan would re-run
     // the full index scans feeding them once per reference (measured 35 s
     // → the fix; the frames are churn-gram-df-mass-bounded by contract).
@@ -163,19 +165,18 @@ object PairMaintenance {
     // the gram-keyed slices below scale with the churn's gram-DF MASS —
     // delta-bounded in production, but a pathological churn (every copy
     // of a duplicated family touched) can approach index size, so they
-    // materialize eagerly to DISK_ONLY (no unroll heap — a localCheckpoint
-    // OOM'd the 100× sweep) and unpersist before return (every consumer
-    // below is itself eager, so nothing re-reads them afterwards)
-    def diskEager(df: DataFrame): DataFrame = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      p.count(); p
-    }
-    val bigSlices = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    // materialize eagerly to DISK_ONLY (no unroll heap — a checkpoint
+    // OOM'd the 100× sweep) into their own nested scope, released before
+    // return (every consumer below is itself eager, so nothing re-reads
+    // them afterwards)
+    val slices = Scope.open()
     val sc = spark.sparkContext
     def slice(df: DataFrame, tag: String): DataFrame = {
       sc.setJobDescription(s"incrementalClusters: $tag")
-      val p = try diskEager(df) finally sc.setJobDescription(null)
-      bigSlices += p; p
+      try {
+        val p = slices.persist(df, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        p.count(); p
+      } finally sc.setJobDescription(null)
     }
     def labeled[T](tag: String)(f: => T): T = {
       sc.setJobDescription(s"incrementalClusters: $tag")
@@ -188,12 +189,11 @@ object PairMaintenance {
     // plans re-ran the caller's tombstone derivations (corpus-projection
     // scans) inside EVERY job that touches the index or the sizes sidecar
     // (~8 embedded rescans per refresh before this)
-    val tombF = labeled("tombFold")(
+    val tombF = labeled("tombFold")(Scope.checkpoint(
       tombstonesOld.select(col("doc_id"), col("before_seg"), lit(0).as("_w"))
         .unionByName(tombstonesNew.select(col("doc_id"), col("before_seg"),
           lit(1).as("_w")))
-        .groupBy("doc_id", "_w").agg(max(col("before_seg")).as("_b"))
-        .localCheckpoint(true))
+        .groupBy("doc_id", "_w").agg(max(col("before_seg")).as("_b"))))
     val bo = tombF.where(col("_w") === 0).select(col("doc_id"), col("_b").as("_bo"))
     val bn = tombF.where(col("_w") === 1).select(col("doc_id"), col("_b").as("_bn"))
     val idx = spark.read.parquet(indexDir).select("sh", "doc_id", "seg")
@@ -238,18 +238,17 @@ object PairMaintenance {
     // seeds/touched below): delta-sized in production, but a pathological
     // churn can pull the crossing-gram holder set toward index size, and a
     // forced broadcast then OOMs the driver instead of degrading to a
-    // shuffle join. They are eager localCheckpoints, so AQE knows their
+    // shuffle join. They are eager checkpoints, so AQE knows their
     // true size and broadcasts exactly when they fit — same policy as the
     // gram-keyed joins.
     // r18: probeIds and dropIds (dropIds ⊇ probeIds ∪ removedIds) share ONE
     // materialization job — a probe flag per blast-radius id — instead of
     // two sequential checkpoints over overlapping unions
-    val radius = labeled("radiusIds")(changedIds.select(col("doc_id"))
+    val radius = labeled("radiusIds")(Scope.checkpoint(changedIds.select(col("doc_id"))
       .withColumn("_p", lit(1L))
       .unionByName(expandedIds.withColumn("_p", lit(1L)))
       .unionByName(removedIds.select(col("doc_id")).withColumn("_p", lit(0L)))
-      .groupBy("doc_id").agg(max(col("_p")).as("_p"))
-      .localCheckpoint(true))
+      .groupBy("doc_id").agg(max(col("_p")).as("_p"))))
     val probeIds = radius.where(col("_p") === 1L).select("doc_id")
     val dropIds = radius.select("doc_id")
 
@@ -307,14 +306,13 @@ object PairMaintenance {
       .join(broadcast(bn), Seq("doc_id"), "left")
       .where(col("seg") >= coalesce(col("_bn"), lit(0L)))
       .select(col("doc_id"), col("set_size"))
-    val newPairsRecomputed = labeled("newPairsRecomputed")(inter
+    val newPairsRecomputed = labeled("newPairsRecomputed")(Scope.checkpoint(inter
       .join(szAll.select(col("doc_id").as("doc_a"), col("set_size").as("_sa")), "doc_a")
       .join(szAll.select(col("doc_id").as("doc_b"), col("set_size").as("_sb")), "doc_b")
       .withColumn("jaccard", col("inter").cast("double") /
         (col("_sa") + col("_sb") - col("inter")))
       .where(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-      .localCheckpoint(true))
+      .select("doc_a", "doc_b", "jaccard")))
 
     // 5) the refreshed pair artifact: old pairs not touching the blast
     //    radius + the recomputed radius pairs
@@ -345,8 +343,8 @@ object PairMaintenance {
       .unionByName(newPairsRecomputed.select(col("doc_a").as("doc_id")))
       .unionByName(newPairsRecomputed.select(col("doc_b").as("doc_id")))
       .distinct()
-    val touched = labeled("touched")(oldCC.join(seeds, Seq("doc_id"), "left_semi")
-      .select("cluster_id").distinct().localCheckpoint(true))
+    val touched = labeled("touched")(Scope.checkpoint(
+      oldCC.join(seeds, Seq("doc_id"), "left_semi").select("cluster_id").distinct()))
     // sub-corpus: touched components' surviving members + added docs
     // (changed ids with no old label)
     val subDocs = oldCC.join(touched, Seq("cluster_id"), "left_semi")
@@ -364,7 +362,7 @@ object PairMaintenance {
       .unionByName(newPairsRecomputed)
     // constraint-stripping re-wrap (blast-radius-sized, one deserialization
     // boundary): the composed join/filter constraints riding subDocs/
-    // subPairs survive the star loop's localCheckpoints (LogicalRDD keeps
+    // subPairs survive the star loop's checkpoints (LogicalRDD keeps
     // origin constraints) and trip Catalyst's union constraint rewrite
     // ("key not found: u#N") inside dedupClusters' symmetric union
     def strip(df: DataFrame): DataFrame =
@@ -380,7 +378,6 @@ object PairMaintenance {
     // the returned frames reference only inputs and the eager checkpoints
     // above — the disk slices can release now, whatever the caller does
     (untouched.unionByName(subCC.select("doc_id", "cluster_id")), newPairs)
-    } finally bigSlices.foreach(df =>
-      try df.unpersist(false) catch { case _: Exception => () })
+    } finally slices.close()
   }
 }

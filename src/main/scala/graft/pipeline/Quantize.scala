@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /**
  * Embedding quantization — the memory-compression path for ANN at corpus
@@ -207,9 +208,9 @@ object Quantize {
                      shortlist: Int = 50): DataFrame = {
     // both the ADC scan and the rerank join read `encoded` — persist so the
     // m×ksub argmin encode expression runs once per row, not once per
-    // consumer (r17; same caller-evicts contract as the Dedup signature
-    // tables — Bench/Verify sweep new persists per query)
-    val encoded = encoded0.persist()
+    // consumer (r17); the caller's scope owns it, like the Dedup
+    // signature tables
+    val encoded = Scope.persist(encoded0)
     val cand = pqTopK(encoded, queries, codebooks, shortlist)
       .select("query_id", "neighbor_id")
     val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import org.apache.spark.sql.expressions.Window
 
 /**
@@ -450,9 +451,8 @@ object Similarity {
     val bandKeys = graft.functions.SketchExpressions.srpBandKeys(
       col("embedding"), bitsPerBand, nBands, dim, seed = 42)
     // signatures computed once, reused by both join sides
-    val sigs = Par.spread(emb).select(col("vec_id"), col("label"), col("embedding"),
-        norm(col("embedding")).as("nrm"), bandKeys.as("keys"))
-      .persist()
+    val sigs = Scope.persist(Par.spread(emb).select(col("vec_id"), col("label"), col("embedding"),
+        norm(col("embedding")).as("nrm"), bandKeys.as("keys")))
     // band join on NARROW rows (ids + key only): a pair can collide in up to
     // nBands bands, so carrying the vectors here would shuffle each one
     // nBands× — dedup first, then re-attach embeddings once per surviving

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -698,9 +699,8 @@ object TextStats {
     val b = indexBuckets(docs.sparkSession, dir, buckets)
     // batch-sized persist: the postings feed BOTH the index append and the
     // doclen delta — without it the batch shingles + aggregates twice
-    val p = postings(docs, seg, b, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope { s =>
+      val p = s.persist(postings(docs, seg, b, textCol))
       p.sortWithinPartitions("bucket", "term")
         .write.mode("append").partitionBy("bucket").parquet(dir)
       // the ranking sidecar rides the SAME merge-on-read contract as the
@@ -710,7 +710,7 @@ object TextStats {
       p.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
         .withColumn("seg", lit(seg))
         .write.mode("append").parquet(s"$dir.doclen")
-    } finally p.unpersist(false)
+    }
   }
 
   /**

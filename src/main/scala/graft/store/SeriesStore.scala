@@ -236,12 +236,16 @@ class EventSeriesStore(sfDir: String, step: Long = 3600L) extends SeriesStore {
   override def catalog(spark: SparkSession): DataFrame =
     allSeries(spark).select(col("name"), col("tags")).dropDuplicates("name")
 
-  /** allSeries is .cache()'d — fetches already serve from memory. */
+  /** allSeries is cached — fetches already serve from memory. */
   override def scanCached: Boolean = true
 }
 
 object EventSeriesStore {
   private val cache = scala.collection.concurrent.TrieMap.empty[(String, Long), DataFrame]
+
+  /** Owns the memoized fixture frames for the life of the process: never
+    * closed, so every fetch keeps serving from memory. */
+  private val memo = graft.core.Scope.open()
 
   def cached(spark: SparkSession, sfDir: String, step: Long): DataFrame =
     cache.getOrElseUpdate((sfDir + "@" + spark.hashCode, step), build(spark, sfDir, step))
@@ -268,12 +272,11 @@ object EventSeriesStore {
     // Graphite-style tags per series: the bare name, the event type, and a
     // coarse "kind" (conversion vs engagement) so groupByTags/seriesByTag
     // have real multi-series groups to work with
-    SeriesFrame.fromPoints(pts, t0, t1 + step, step)
+    memo.persist(SeriesFrame.fromPoints(pts, t0, t1 + step, step)
       .withColumn("tags", map(
         lit("name"), col("name"),
         lit("type"), element_at(split(col("name"), "\\."), -1),
         lit("kind"), when(element_at(split(col("name"), "\\."), -1).isin("purchase", "signup"), "conv")
-          .otherwise("eng")))
-      .cache()
+          .otherwise("eng"))))
   }
 }

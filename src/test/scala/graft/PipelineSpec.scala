@@ -1099,25 +1099,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.values.foreach { case (f, _) => assert(f >= 0.0 && f <= 1.0) }
   }
 
-  test("p77: qualityEnsemble leaves no plain persist pinned after N looped calls (leave-nothing-pinned contract)") {
-    val sp = spark
-    import sp.implicits._
-    val d = (1L to 40L).map(i =>
-      (i, s"the alpha beta word$i of alpha and beta text $i", if (i % 2 == 0) "src1" else "src0"))
-      .toDF("doc_id", "text", "source")
-    val before = sp.sparkContext.getPersistentRDDs
-      .filter { case (_, r) => !r.isCheckpointed }.keySet
-    for (_ <- 1 to 3)
-      graft.pipeline.Assembly.qualityEnsemble(d, "src1").collect()
-    // only non-checkpoint blocks count: the returned frames ARE checkpoint
-    // blocks and reclaim via ContextCleaner GC; the contract under test is
-    // that no scorer-internal plain persist (words/vocab/w0/wc/scored)
-    // accumulates per call in a long-lived orchestrator (ADVICE r17)
-    val leaked = sp.sparkContext.getPersistentRDDs
-      .filter { case (_, r) => !r.isCheckpointed }.keySet -- before
-    assert(leaked.isEmpty, s"qualityEnsemble leaked plain persists: $leaked")
-  }
-
   test("q13: bucketed 24h window — a view 23h59m back counts, 24h01m back and 1µs after do not; bin-crossing windows stay exact") {
     val sp = spark
     import sp.implicits._

@@ -941,4 +941,20 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(multiCalls.size == 1, s"expected one fetchMulti, got $multiCalls")
     assert(multiCalls.head.toSet == Set("rate.one", "rate.two"), multiCalls.toString)
   }
+  test("removeAbove/BelowPercentile: no lambda body in the optimized plan calls a UDF (the series percentile runs once per row, not once per point)") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, ScalaUDF}
+    for ((t, want) <- Seq(
+        "removeAbovePercentile(events.click,50)" -> Seq(0.0, 1, 2, 3, 4, 5),
+        "removeBelowPercentile(events.click,50)" -> Seq(5.0, 6, 7, 8, 9))) {
+      val df = Eval.evalTarget(spark, store, t)
+      val plan = df.queryExecution.optimizedPlan
+      val inLambda = plan.flatMap(_.expressions).flatMap(_.collect {
+        case l: LambdaFunction => l.function.collect { case u: ScalaUDF => u }
+      }.flatten)
+      assert(inLambda.isEmpty, s"$t: a per-point lambda calls a UDF:\n$plan")
+      // 10 points 0..9: the non-interpolated 50th percentile is 5
+      val vals = df.select("values").head().getSeq[Double](0)
+      assert(vals.filterNot(_.isNaN) == want, s"$t: $vals")
+    }
+  }
 }

@@ -110,6 +110,22 @@ class RefreshSpec extends AnyFunSuite with BeforeAndAfterAll {
       "orchestrated cluster labels must equal the full recompute")
   }
 
+  test("buildAll + refreshCorpus leave the block store as they found it (each call owns and closes one scope)") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val r = java.nio.file.Files.createTempDirectory("graft-refresh-residue").toString + "/a"
+    Refresh.buildAll(spark, corpus0.select("doc_id", "text"),
+      corpus0.select(col("doc_id").as("vec_id"), col("embedding")), r,
+      nlist = 8, m = 16, ksub = 16, trainIters = 3, sampleN = 2000)
+    val (edited, added, removed) = delta(corpus0)
+    Refresh.refreshCorpus(spark, r, edited, added, removed)
+    val left = sc.getPersistentRDDs
+    assert(left.keySet == before,
+      s"left behind: ${(left.keySet -- before).toSeq.sorted.map(id =>
+        s"$id${if (left(id).isCheckpointed) "(checkpoint)" else ""}")}; " +
+        s"dropped: ${before -- left.keySet}")
+  }
+
   test("the manifest witnesses the refresh and the tombstone fingerprints correspond across artifacts") {
     val m = spark.read.parquet(a.manifestPath).orderBy("seg").collect()
     assert(m.map(_.getLong(0)).toSeq == Seq(0L, 1L), m.mkString(","))

@@ -494,9 +494,11 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // re-resolved them)
     val pinned = Map("bm25" -> 6, "phrase" -> 4, "complete" -> 3, "glob" -> 4, "hybrid" -> 14)
     val api = mountOrch()
+    val rs = routes
+    val blocks = spark.sparkContext.getPersistentRDDs.keySet
     val p = api.start()
     try {
-      val counts = routes.map { case (name, pq) =>
+      val counts = rs.map { case (name, pq) =>
         assert(via(p, pq)._1 == 200, pq) // warm: plan shapes and codegen
         var code = 0
         val n = jobsDuring { code = via(p, pq)._1 }
@@ -507,6 +509,9 @@ class SearchApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       for ((name, n) <- counts)
         assert(n <= pinned(name), s"$name started $n jobs, pinned at ${pinned(name)}")
     } finally api.stop()
+    // the mount's scope owns its pinned tombstones, and stop() closes it
+    val left = spark.sparkContext.getPersistentRDDs.keySet
+    assert(left == blocks, s"start/serve/stop left ${left -- blocks}, dropped ${blocks -- left}")
   }
 
   test("a mount is a snapshot: an in-place refresh leaves its answers unchanged; a fresh mount equals the direct call") {

@@ -654,7 +654,8 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("concurrent renders on one cold store: per-request prefetch batches stay correct and release cleanly under a 12-way race") {
     // the prefetch batch is REQUEST-scoped by design (documented in
     // Eval.Ctx.prefetch): two racing renders each pin their own batch —
-    // no cross-request refcounting, release() stays trivially correct.
+    // no cross-request refcounting, each request's scope drops exactly
+    // what it pinned.
     // This gate pins what the design owes: identical results under the
     // race and zero leaked pins afterwards
     val targets = Seq("sumSeries(events.*)", "scale(other.metric, 2)",
@@ -679,7 +680,7 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("positional ops release their internal RDD cache at request end (indexByName pin accounting)") {
     // PairOps.indexByName persists the sorted RDD; inside a render that
-    // persist must register with the request's rddPins and release with
+    // persist must register with the request's scope and release with
     // the request, not linger until a ContextCleaner GC (ADVICE r11).
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val rows = graft.api.Render.eval(spark, flat,
