@@ -31,8 +31,9 @@ object Queries {
    * The store every graphite (gNN) row evaluates against. Default: the
    * derived event-series fixture. `SPARK_GRAFT_STORE=partitioned|routed`
    * reruns the ENTIRE graphite catalog against the sharded layouts
-   * instead — one day-windowed write per (JVM, fixture, mode) into the
-   * scratch root, then every fetch is a partition-pruned read. The
+   * instead (route depth 0 and 1 of [[graft.store.RoutedSeriesStore]]) —
+   * one day-windowed write per (JVM, fixture, mode) into the scratch
+   * root, then every fetch is a partition-pruned read. The
    * layouts are read-invisible (g146/g148's equivalence gates), so the
    * oracle stays green in any mode; bench records per-mode numbers in
    * BASELINE.md.
@@ -47,13 +48,9 @@ object Queries {
         val frame = store(sfDir).allSeries(spark)
           .select(col("name"), col("tags"), col("start"), col("step"), col("values"))
         val dir = scratchPath(s"gstore_$mode", sfDir)
-        if (mode == "routed") {
-          graft.store.RoutedSeriesStore.write(frame, dir, 86400L)
-          new graft.store.RoutedSeriesStore(dir, 86400L, 1, Some(3600L))
-        } else {
-          graft.store.TimePartitionedSeriesStore.write(frame, dir, 86400L)
-          new graft.store.TimePartitionedSeriesStore(dir, 86400L, Some(3600L))
-        }
+        val depth = if (mode == "routed") 1 else 0
+        graft.store.RoutedSeriesStore.write(frame, dir, 86400L, routeDepth = depth)
+        new graft.store.RoutedSeriesStore(dir, 86400L, depth, Some(3600L))
     })
 
   /** Round like DuckDB does for DOUBLE (`std::round(x*10^n)/10^n`) so both
@@ -297,9 +294,9 @@ object Queries {
   private def ensurePartitionedStore(s: SparkSession, dir: String): String = {
     val path = scratchPath("series_part", dir)
     buildOnce(path) {
-      graft.store.TimePartitionedSeriesStore.write(
+      graft.store.RoutedSeriesStore.write(
         store(dir).allSeries(s).select(col("name"), col("tags"), col("start"), col("step"), col("values")),
-        path, windowSec = 86400L)
+        path, windowSec = 86400L, routeDepth = 0)
     }
     path
   }
@@ -617,7 +614,7 @@ object Queries {
     // measures the FETCH it is named for (r15 verdict, g146 adjudication).
     "g146_partitioned_fetch" -> ((s, dir) => {
       val path = ensurePartitionedStore(s, dir)
-      val st = new graft.store.TimePartitionedSeriesStore(path, 86400L, Some(3600L))
+      val st = new graft.store.RoutedSeriesStore(path, 86400L, routeDepth = 0, Some(3600L))
       SeriesFrame.toPoints(st.fetch(s, "events.*", T0 + 5L * 86400, T0 + 7L * 86400))
         .select(col("name"), col("ts"), dround(col("value"), 4).as("value"))
         .orderBy("name", "ts")

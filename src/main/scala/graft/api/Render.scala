@@ -20,27 +20,14 @@ case class RenderedSeries(
 /**
  * The /render surface: evaluate targets, collect, glob-order sort,
  * maxDataPoints consolidation, and the reference's wire formats
- * (json / csv / raw). One collect per target, plus whatever build-time
- * actions its operators run (name and count collects); everything after
- * the collects is O(output), exactly like the reference's marshal layer.
+ * (json / csv / raw). [[evalWithErrors]] is the one evaluation entry
+ * point — `HttpApi` and the serving benchmark both call it, then
+ * [[consolidate]] and [[formatBytes]]. One collect per target, plus
+ * whatever build-time actions its operators run (name and count
+ * collects); everything after the collects is O(output), exactly like the
+ * reference's marshal layer.
  */
 object Render {
-
-  /** Evaluate one or more targets over [from, until). ONE request-scoped
-    * context spans every target, so the batched leaf prefetch (and the
-    * fetch memo) is shared across targets — a 10-panel dashboard reads the
-    * store once, not 10 times. One [[graft.core.Scope]] owns the request's
-    * pins and releases them after the last collect. */
-  def eval(spark: SparkSession, store: SeriesStore, targets: Seq[String],
-           from: Long, until: Long): Seq[RenderedSeries] = {
-    val asts = targets.map(t =>
-      graft.parser.Defines.expand(graft.parser.Parser.parse(t)))
-    val ctx = Eval.Ctx(spark, store, from, until)
-    Scope { _ =>
-      ctx.prefetch(asts.flatMap(Eval.fetchLeaves))
-      asts.flatMap(a => collect(Eval.eval(a, ctx)))
-    }
-  }
 
   /**
    * Per-target evaluation with the reference's error bookkeeping
@@ -50,7 +37,11 @@ object Render {
    * series) and recorded per target. With `requireSuccessAll` the loop
    * stops at the first target whose failure is not a plain not-found.
    * Parse/argument errors are NOT masked — they throw, and the HTTP tier
-   * maps them to 400 for the whole request.
+   * maps them to 400 for the whole request. ONE request-scoped context
+   * spans every target, so the batched leaf prefetch (and the fetch memo)
+   * is shared across targets — a 10-panel dashboard reads the store once,
+   * not 10 times — and one [[graft.core.Scope]] owns the request's pins,
+   * releasing them after the last collect.
    */
   def evalWithErrors(spark: SparkSession, store: SeriesStore, targets: Seq[String],
                      from: Long, until: Long, requireSuccessAll: Boolean = false)
@@ -219,8 +210,8 @@ object Render {
   /** Process-level render config mirroring the reference's
     * `config.Config.{NudgeStartTimeOnAggregation,
     * UseBucketsHighestTimestampOnAggregation}` (ref expr/types/config;
-    * both default false there too). Set once at startup, read by
-    * [[renderBytes]] for every request. */
+    * both default false there too). Set once at startup, read by the
+    * /render handler for every request. */
   case class RenderConfig(nudgeStartTimeOnAggregation: Boolean = false,
                           useBucketsHighestTimestampOnAggregation: Boolean = false)
   @volatile var config: RenderConfig = RenderConfig(
@@ -343,27 +334,6 @@ object Render {
     sb.toString
   }
 
-  /**
-   * Full /render request: parse at-times, evaluate, consolidate, format.
-   * format ∈ json | csv | raw | pickle | protobuf (carbonapi_v3_pb) |
-   * carbonapi_v2_pb. Returns body bytes + content type (binary formats
-   * can't round-trip through String).
-   */
-  def renderBytes(spark: SparkSession, store: SeriesStore, targets: Seq[String],
-                  from: String = "-24h", until: String = "now",
-                  maxDataPoints: Long = 0, format: String = "json",
-                  noNullPoints: Boolean = false,
-                  tz: java.time.ZoneId = java.time.ZoneOffset.UTC,
-                  now: () => java.time.Instant = () => java.time.Instant.now(),
-                  graphParams: Map[String, Seq[String]] = Map.empty): (Array[Byte], String) = {
-    val nowEpoch = now().getEpochSecond
-    val f = AtTime.toEpoch(from, nowEpoch - 86400, tz, now)
-    val u = AtTime.toEpoch(until, nowEpoch, tz, now)
-    val rows = consolidate(eval(spark, store, targets, f, u), maxDataPoints,
-      config.nudgeStartTimeOnAggregation, config.useBucketsHighestTimestampOnAggregation)
-    formatBytes(rows, format, noNullPoints, tz, graphParams)
-  }
-
   /** Marshal pre-evaluated rows in any supported /render format. */
   def formatBytes(rows: Seq[RenderedSeries], format: String,
                   noNullPoints: Boolean = false,
@@ -404,14 +374,4 @@ object Render {
       case other  => throw new IllegalArgumentException(s"unsupported format: $other")
     }
   }
-
-  /** Text-format convenience over [[renderBytes]]. */
-  def render(spark: SparkSession, store: SeriesStore, targets: Seq[String],
-             from: String = "-24h", until: String = "now",
-             maxDataPoints: Long = 0, format: String = "json",
-             noNullPoints: Boolean = false,
-             tz: java.time.ZoneId = java.time.ZoneOffset.UTC,
-             now: () => java.time.Instant = () => java.time.Instant.now()): String =
-    new String(renderBytes(spark, store, targets, from, until, maxDataPoints,
-      format, noNullPoints, tz, now)._1, java.nio.charset.StandardCharsets.UTF_8)
 }

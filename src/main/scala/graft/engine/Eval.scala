@@ -77,8 +77,9 @@ object Eval {
      * scan batching"). The batched frame is pinned request-scoped (each
      * target's collect reads it) and each leaf's memo entry is a
      * pathExpression view of it, so [[fetch]] serves from memory. Cold
-     * stores only (a scan-cached store's per-pattern fetch is already a
-     * memory filter); leaves later fetched at a SHIFTED range
+     * stores only: a batch that reads no files (the event fixture's cached
+     * frame, an in-memory test store) is skipped, its per-pattern fetch is
+     * already a memory filter; leaves later fetched at a SHIFTED range
      * (timeShift/moving widen) miss the memo by key and fetch normally.
      * Any prefetch failure falls back silently to per-pattern fetching,
      * keeping error masking on the per-pattern path; an ACTION-time store
@@ -102,13 +103,16 @@ object Eval {
     def prefetch(patterns: Seq[String]): Unit = {
       val todo = patterns.distinct.filterNot(p =>
         p.startsWith("seriesByTag(") || fetchMemo.contains((p, from, until)))
-      if (store.scanCached || todo.size < 2) return
+      if (todo.size < 2) return
       try {
-        val batched = Eval.pin(store.fetchMulti(spark, todo, from, until))
-        todo.foreach { p =>
-          val key = (p, from, until)
-          fetchMemo(key) = batched.where(col("pathExpression") === lit(p))
-          prefetched += key
+        val batch = store.fetchMulti(spark, todo, from, until)
+        if (readsFiles(batch)) {
+          val batched = Eval.pin(batch)
+          todo.foreach { p =>
+            val key = (p, from, until)
+            fetchMemo(key) = batched.where(col("pathExpression") === lit(p))
+            prefetched += key
+          }
         }
       } catch { case scala.util.control.NonFatal(_) => () }
     }
@@ -138,7 +142,7 @@ object Eval {
     * that same input, or the batched prefetch every target reads. The
     * persist registers with the thread's current [[graft.core.Scope]],
     * which releases it. Returns `df` unchanged when it already serves
-    * from memory — a scan-cached store's fetch, or a view of a frame
+    * from memory — the event fixture's fetch, or a view of a frame
     * already pinned — and outside an open scope (nothing would release the
     * pin; the second action recomputes instead). */
   private[graft] def pin(df: DataFrame): DataFrame =

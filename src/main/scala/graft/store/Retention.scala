@@ -8,11 +8,13 @@ import graft.engine.Align
  * Retention rollover — the whisper/carbon retention policy as a batch
  * maintenance job (graphite stores 60s:1d,3600s:90d style archives; the
  * reference reads whichever archive covers the request): windows older
- * than a cutoff move from the fine [[TimePartitionedSeriesStore]] layout
- * into a coarse one, consolidated to `coarseStep` through the same
- * ScaleToCommonStep kernel every mixed-step read uses. Reads compose the
- * two dirs with [[TieredSeriesStore]] (fine tier first), so the rollover
- * is invisible to queries apart from the intended resolution drop.
+ * than a cutoff move from a fine time-only layout into a coarse one of
+ * the same shape, consolidated to `coarseStep` through the same
+ * ScaleToCommonStep kernel every mixed-step read uses. Reads open both
+ * dirs as depth-0 [[RoutedSeriesStore]]s and compose them with
+ * [[TieredSeriesStore]] (fine tier first), so the rollover is invisible
+ * to queries apart from the intended resolution drop. The coarse dir
+ * carries no `_store_meta`: open it with the rollover's `windowSec`.
  *
  * Scale shape: the source scan is partition-pruned to exactly the
  * windows being rolled (`pwin < beforeWin`), the consolidation is one

@@ -9,12 +9,14 @@ import graft.core.Glob
  * analog of the reference's pathcache TLD routing
  * (ref pathcache/pathcache.go:18-56: requests are routed to the backend
  * subset whose known top-level name prefixes can match the query) plus
- * its time-range fetch: the layout partitions by `troute` (the first
- * `routeDepth` dot-segments of the series name) and `pwin` (the
- * [[TimePartitionedSeriesStore]] window ordinal), so a fetch for
- * `web.host-1.cpu.*` over the last hour touches exactly the `web…`
- * route dirs of the requested windows and never lists, let alone reads,
- * the rest of a 100 TB store.
+ * its time-range fetch: every series row is sharded at `windowSec`
+ * boundaries ([[TimePartitionedSeriesStore.shard]]) and the layout
+ * partitions by `troute` (the first `routeDepth` dot-segments of the
+ * series name) and `pwin` (the window ordinal), so a fetch for
+ * `web.host-1.cpu.*` over the last hour touches exactly the `web…` route
+ * dirs of the requested windows and never lists, let alone reads, the
+ * rest of a 100 TB store. Route depth 0 is the time-only layout: no
+ * `troute` partition, no route predicate, only the window pruning.
  *
  * Route pruning from the glob: the glob's literal prefix `p` (chars
  * before the first wildcard) constrains the route partition —
@@ -28,95 +30,61 @@ import graft.core.Glob
  * Both predicates are partition filters: Spark evaluates them against
  * directory values at planning time.
  *
- * Reads reuse the sharded stitch (prune → slice → reassemble), so the
+ * Reads go through the one [[ScanStore]] pipeline (prune → name filter →
+ * slice → stitch the window shards back into one row per series), so the
  * layout is read-invisible: fetch returns the same canonical frame as a
- * flat [[ParquetSeriesStore]] over the same rows.
+ * flat [[ParquetSeriesStore]] over the same rows. Missing middle shards
+ * (a series with no row in some window) NaN-fill.
  */
 class RoutedSeriesStore(
     path: String,
     windowSec: Long,
     routeDepth: Int = 1,
-    uniformStep: Option[Long] = None) extends SeriesStore {
-  require(routeDepth >= 1, "routeDepth must be >= 1")
+    uniformStep: Option[Long] = None) extends ScanStore {
+  require(routeDepth >= 0, "routeDepth must be >= 0")
 
   override def stepHint: Option[Long] = uniformStep
 
+  private val schema =
+    if (routeDepth == 0) TimePartitionedSeriesStore.shardedSchema
+    else RoutedSeriesStore.routedSchema
+
   // fail fast when the writer persisted a different routeDepth/windowSec:
   // mismatched troute shapes would make every route predicate silently
-  // select nothing (ADVICE r8)
+  // select nothing, a wrong window prunes the wrong pwin dirs (ADVICE r8)
   @volatile private var metaChecked = false
 
-  private def pruned(spark: SparkSession, pathExpr: Option[String],
-                     from: Long, until: Long): DataFrame =
-    prunedBy(spark,
-      pathExpr.flatMap(RoutedSeriesStore.routePredicate(_, routeDepth)), from, until)
-
-  /** Time-pruned scan with an explicit (possibly multi-pattern) route
-    * predicate — None = full route fan-out. */
-  private def prunedBy(spark: SparkSession, route: Option[Column],
-                       from: Long, until: Long): DataFrame = {
+  /** The pwin range of [from, until) plus the UNION of every pattern's
+    * route dirs — any pattern without a literal route prefix, or no
+    * pattern at all, is full route fan-out. */
+  override protected def read(spark: SparkSession, patterns: Seq[String],
+                              from: Long, until: Long): DataFrame = {
     if (!metaChecked) {
       TimePartitionedSeriesStore.validateMeta(spark, path,
         Map("routeDepth" -> routeDepth.toString, "windowSec" -> windowSec.toString))
       metaChecked = true
     }
-    val df = TimePartitionedSeriesStore.readShardedOrEmpty(
-      spark, path, RoutedSeriesStore.routedSchema)
-    val lo = if (SeriesStore.bounded(from)) Some(Math.floorDiv(from, windowSec)) else None
-    val hi = if (SeriesStore.bounded(until)) Some(Math.floorDiv(until - 1L, windowSec)) else None
-    val timed = (lo, hi) match {
-      case (Some(l), Some(h)) => df.where(col("pwin") >= l && col("pwin") <= h)
-      case (Some(l), None)    => df.where(col("pwin") >= l)
-      case (None, Some(h))    => df.where(col("pwin") <= h)
-      case _                  => df
-    }
-    route.map(timed.where).getOrElse(timed)
-  }
-
-  override def fetch(spark: SparkSession, pathExpr: String, from: Long, until: Long): DataFrame = {
-    val named = SeriesStore.nameFilter(pruned(spark, Some(pathExpr), from, until), pathExpr)
-    TimePartitionedSeriesStore.stitch(
-      SeriesStore.sliceToRange(
-        named.where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-        from, until).drop("troute"))
-      .withColumn("pathExpression", lit(pathExpr))
-  }
-
-  override def fetchAll(spark: SparkSession, from: Long, until: Long): DataFrame =
-    TimePartitionedSeriesStore.stitch(
-      SeriesStore.sliceToRange(
-        pruned(spark, None, from, until)
-          .where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-        from, until).drop("troute"))
-      .withColumn("pathExpression", lit("*"))
-
-  /** Batched: one scan pruned to the UNION of every pattern's route dirs
-    * (any pattern without a literal route prefix = full fan-out, like the
-    * reference broadcasting an uncached query to all backends), the OR of
-    * the per-pattern name predicates, one stitch, per-pattern tagging. */
-  override def fetchMulti(spark: SparkSession, pathExprs0: Seq[String],
-                          from: Long, until: Long): DataFrame = {
-    require(pathExprs0.nonEmpty, "fetchMulti: no patterns")
-    val pathExprs = pathExprs0.distinct
-    if (pathExprs.size == 1) return fetch(spark, pathExprs.head, from, until)
-    val preds = pathExprs.map(RoutedSeriesStore.routePredicate(_, routeDepth))
-    val route = if (preds.forall(_.isDefined)) Some(preds.flatten.reduce(_ || _)) else None
-    val base = prunedBy(spark, route, from, until)
-    val pre = SeriesStore.prefixDisjunction(pathExprs).map(base.where).getOrElse(base)
-    val named = pre.where(
-      pathExprs.map(p => SeriesStore.nameMatch(col("name"), p)).reduce(_ || _))
-    SeriesStore.tagByPattern(
-      TimePartitionedSeriesStore.stitch(
-        SeriesStore.sliceToRange(
-          named.where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-          from, until).drop("troute")),
-      pathExprs)
+    val df = TimePartitionedSeriesStore.readShardedOrEmpty(spark, path, schema)
+    // partition predicate from the request range: floorDiv keeps negative
+    // timestamps on the correct window (SQL DIV is floor division too)
+    val window = Seq(
+      if (SeriesStore.bounded(from)) Some(col("pwin") >= Math.floorDiv(from, windowSec)) else None,
+      if (SeriesStore.bounded(until)) Some(col("pwin") <= Math.floorDiv(until - 1L, windowSec)) else None
+    ).flatten.reduceOption(_ && _)
+    val route =
+      if (routeDepth == 0) None
+      else {
+        val routes = patterns.map(RoutedSeriesStore.routePredicate(_, routeDepth))
+        if (routes.isEmpty || routes.exists(_.isEmpty)) None
+        else Some(routes.flatten.reduce(_ || _))
+      }
+    (window.toSeq ++ route).foldLeft(df)(_ where _)
   }
 
   /** Persisted `_catalog` when present, else the 2-column pruned scan. */
   override def catalog(spark: SparkSession): DataFrame =
     TimePartitionedSeriesStore.readCatalog(spark, path).getOrElse(
-      TimePartitionedSeriesStore.readShardedOrEmpty(spark, path, RoutedSeriesStore.routedSchema)
+      TimePartitionedSeriesStore.readShardedOrEmpty(spark, path, schema)
         .select(col("name"), col("tags")).dropDuplicates("name"))
 }
 
@@ -179,11 +147,13 @@ object RoutedSeriesStore {
   }
 
   /** Shard at window boundaries, key each shard by its name route, and
-    * write partitioned by (troute, pwin). Map-side except the writer's
-    * own partitioning — identical cost shape to the unrouted layout. */
+    * write partitioned by (troute, pwin) — by pwin alone at depth 0.
+    * Map-side except the writer's own partitioning. */
   def write(df: DataFrame, path: String, windowSec: Long, routeDepth: Int = 1): Unit = {
-    TimePartitionedSeriesStore.shard(df, windowSec)
-      .withColumn("troute", routeOf(col("name"), routeDepth))
+    require(routeDepth >= 0, "routeDepth must be >= 0")
+    val shards = TimePartitionedSeriesStore.shard(df, windowSec)
+    if (routeDepth == 0) shards.write.mode("overwrite").partitionBy("pwin").parquet(path)
+    else shards.withColumn("troute", routeOf(col("name"), routeDepth))
       .write.mode("overwrite").partitionBy("troute", "pwin").parquet(path)
     TimePartitionedSeriesStore.writeCatalog(df.select(col("name"), col("tags")), path)
     TimePartitionedSeriesStore.writeMeta(df.sparkSession, path,

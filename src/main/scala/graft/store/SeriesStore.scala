@@ -7,10 +7,13 @@ import graft.core.{Glob, SeriesFrame}
 /**
  * Storage abstraction replacing the reference's zipper/backend fan-out
  * (ref zipper/protocols): a fetch returns the canonical series frame for a
- * name glob and a [from, until) range. In production this is a Parquet store
- * partitioned by time window (partition pruning = the reference's TLD routing
- * cache analog, SURVEY §4); name-glob predicates reach the scan as `rlike`
- * row-group filters.
+ * name glob and a [from, until) range. In production this is a Parquet
+ * store partitioned by time window and, optionally, by name route
+ * ([[RoutedSeriesStore]]; route depth 0 is the time-only layout) —
+ * partition pruning is the reference's TLD routing cache analog, SURVEY
+ * §4. Every Parquet layout and the event fixture serve all three fetches
+ * through one read pipeline ([[ScanStore]]): a single-pattern fetch is a
+ * batch of one, like the reference's one fetch request per render.
  */
 trait SeriesStore {
   def fetch(spark: SparkSession, pathExpr: String, from: Long, until: Long): DataFrame
@@ -32,15 +35,6 @@ trait SeriesStore {
   def catalog(spark: SparkSession): DataFrame =
     fetchAll(spark, Long.MinValue / 4, Long.MaxValue / 4)
       .select(col("name"), col("tags")).dropDuplicates("name")
-  /** True when this store's scan already serves from cached blocks (e.g. a
-    * derived in-memory fixture). For cold stores (Parquet layouts) the
-    * evaluator pins, request-scoped, the frames a second Spark action
-    * reads (the batched prefetch, the inputs of operators that collect
-    * names or counts at build time — [[graft.engine.Eval.pin]]), so those
-    * read the store once per request; a frame read by one action is not
-    * pinned. */
-  def scanCached: Boolean = false
-
   /**
    * Batched multi-target fetch — every leaf pattern of a render in ONE
    * backend round-trip (the reference batches all of a request's leaves
@@ -48,7 +42,7 @@ trait SeriesStore {
    * exact union of per-pattern [[fetch]] frames: a series matching k
    * patterns appears k times, each tagged with its `pathExpression`.
    * Default: per-pattern fetch unioned (one scan subtree per pattern);
-   * Parquet layouts override with a single OR-pruned scan — see
+   * a [[ScanStore]] serves it from its single OR-pruned scan — see
    * BASELINE.md "multi-target scan batching" for the measured win.
    */
   def fetchMulti(spark: SparkSession, pathExprs: Seq[String],
@@ -72,38 +66,24 @@ object SeriesStore {
     * sentinel Eval uses for "whole store" evaluation. */
   def bounded(t: Long): Boolean = math.abs(t) < Long.MaxValue / 8
 
-  /** The glob/exact name predicate every Parquet-backed store shares: the
-    * glob's literal prefix pushes to the reader as StringStartsWith
-    * (row-group pruning on name column stats — rlike alone can't reach the
-    * scan), the full glob applies as rlike on the survivors. Brace
-    * alternations push PER BRANCH — `{prod,staging}.web.*` reaches the
-    * scan as an Or of two StringStartsWith filters instead of losing its
-    * prefix entirely (the bare glob's literal prefix is empty). */
-  def nameFilter(df: DataFrame, pathExpr: String): DataFrame =
-    if (Glob.isGlob(pathExpr)) {
-      val rx = df.where(col("name").rlike(Glob.toRegex(pathExpr)))
-      val prefixes = Glob.expandBraces(pathExpr).getOrElse(Seq(pathExpr))
-        .map(Glob.literalPrefix).distinct
-      if (prefixes.forall(_.nonEmpty))
-        rx.where(prefixes.map(col("name").startsWith).reduce(_ || _))
-      else rx
-    } else df.where(col("name") === pathExpr)
-
-  /** Boolean form of [[nameFilter]]'s exact predicate for ONE pattern —
-    * composable into the OR a batched multi-pattern scan needs. */
+  /** The exact name predicate of ONE pattern: rlike for a glob, equality
+    * for a plain name — composable into the OR a batched scan needs. */
   def nameMatch(nameCol: Column, pathExpr: String): Column =
     if (Glob.isGlob(pathExpr)) nameCol.rlike(Glob.toRegex(pathExpr))
     else nameCol === pathExpr
 
   /** Parquet-pushable prefix disjunction over every brace branch of every
-    * pattern — the multi-pattern analog of nameFilter's StartsWith conjunct.
-    * None when any branch lacks a literal prefix (a leading wildcard means
-    * full fan-out, same as the single-pattern path). */
+    * pattern: rlike alone can't reach the scan, so each glob's literal
+    * prefix pushes to the reader as StringStartsWith (row-group pruning on
+    * name column stats), and `{prod,staging}.web.*` pushes as an Or of two
+    * instead of losing its prefix entirely. None when any branch lacks a
+    * literal prefix (a leading wildcard means full fan-out), and when no
+    * pattern is a glob (the equalities push down themselves). */
   private[store] def prefixDisjunction(pathExprs: Seq[String]): Option[Column] = {
     val prefixes = pathExprs
       .flatMap(p => Glob.expandBraces(p).getOrElse(Seq(p)).map(Glob.literalPrefix))
       .distinct
-    if (prefixes.nonEmpty && prefixes.forall(_.nonEmpty))
+    if (pathExprs.exists(Glob.isGlob) && prefixes.forall(_.nonEmpty))
       Some(prefixes.map(col("name").startsWith).reduce(_ || _))
     else None
   }
@@ -142,49 +122,70 @@ object SeriesStore {
   }
 }
 
+/**
+ * The one read pipeline behind every Parquet layout and the event fixture.
+ * A layout supplies only its pruned `read` (a plain read, or the routed
+ * store's meta check plus partition predicates); [[fetch]], [[fetchAll]]
+ * and [[fetchMulti]] are then one scan: the prefix disjunction and the OR
+ * of every pattern's name predicate, the overlap filter,
+ * [[SeriesStore.sliceToRange]], the stitch of window shards (rows that
+ * carry `pwin`), and the `pathExpression` tag — `"*"` for no pattern,
+ * the literal for one, per matched pattern for several.
+ */
+trait ScanStore extends SeriesStore {
+
+  /** The rows a scan of `patterns` over [from, until) reads: the layout's
+    * pruning, before any name or range filter. */
+  protected def read(spark: SparkSession, patterns: Seq[String], from: Long, until: Long): DataFrame
+
+  override def fetch(spark: SparkSession, pathExpr: String, from: Long, until: Long): DataFrame =
+    scan(spark, Seq(pathExpr), from, until)
+
+  override def fetchAll(spark: SparkSession, from: Long, until: Long): DataFrame =
+    scan(spark, Nil, from, until)
+
+  /** ONE scan filtered by the OR of every pattern's predicate, one stitch
+    * over the matching series (k overlapping patterns stitch a shared
+    * series once, not k times), then per-pattern tagging. */
+  override def fetchMulti(spark: SparkSession, pathExprs: Seq[String],
+                          from: Long, until: Long): DataFrame = {
+    require(pathExprs.nonEmpty, "fetchMulti: no patterns")
+    scan(spark, pathExprs.distinct, from, until)
+  }
+
+  private def scan(spark: SparkSession, patterns: Seq[String], from: Long, until: Long): DataFrame = {
+    val rows = read(spark, patterns, from, until)
+    val named =
+      if (patterns.isEmpty) rows
+      else SeriesStore.prefixDisjunction(patterns).map(rows.where).getOrElse(rows)
+        .where(patterns.map(SeriesStore.nameMatch(col("name"), _)).reduce(_ || _))
+    // the overlap filter drops whole rows outside the request range
+    // before the slice; its `start < until` half pushes to Parquet
+    val sliced = SeriesStore.sliceToRange(
+      named.where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
+      from, until)
+    // only the sharded layouts read a `pwin` column: a series may span
+    // several window rows there, stitched back into one
+    val series =
+      if (rows.columns.contains("pwin")) TimePartitionedSeriesStore.stitch(sliced) else sliced
+    patterns match {
+      case Seq()  => series.withColumn("pathExpression", lit("*"))
+      case Seq(p) => series.withColumn("pathExpression", lit(p))
+      case _      => SeriesStore.tagByPattern(series, patterns)
+    }
+  }
+}
+
 /** Reads a Parquet dataset already in canonical series layout.
   * `uniformStep` declares that every series shares one step (the usual case
   * for a single retention tier) — it lets the planner skip the LCM-alignment
   * pre-scan entirely (see Eval.needAlign). */
-class ParquetSeriesStore(path: String, uniformStep: Option[Long] = None) extends SeriesStore {
+class ParquetSeriesStore(path: String, uniformStep: Option[Long] = None) extends ScanStore {
 
   override def stepHint: Option[Long] = uniformStep
 
-  override def fetch(spark: SparkSession, pathExpr: String, from: Long, until: Long): DataFrame = {
-    val named = SeriesStore.nameFilter(spark.read.parquet(path), pathExpr)
-    // overlap filter prunes whole series rows (and, with time-partitioned
-    // layout, whole partitions) outside the request range
-    SeriesStore.sliceToRange(
-      named.where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-      from, until)
-      .withColumn("pathExpression", lit(pathExpr))
-  }
-
-  override def fetchAll(spark: SparkSession, from: Long, until: Long): DataFrame =
-    SeriesStore.sliceToRange(
-      spark.read.parquet(path)
-        .where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-      from, until)
-      .withColumn("pathExpression", lit("*"))
-
-  /** Batched: ONE scan filtered by the OR of every pattern's predicate
-    * (prefix disjunction stays parquet-pushable), matched rows tagged per
-    * pattern — versus one scan subtree per pattern in the default. */
-  override def fetchMulti(spark: SparkSession, pathExprs0: Seq[String],
-                          from: Long, until: Long): DataFrame = {
-    require(pathExprs0.nonEmpty, "fetchMulti: no patterns")
-    val pathExprs = pathExprs0.distinct
-    if (pathExprs.size == 1) return fetch(spark, pathExprs.head, from, until)
-    val base = spark.read.parquet(path)
-    val pre = SeriesStore.prefixDisjunction(pathExprs).map(base.where).getOrElse(base)
-    val named = pre.where(
-      pathExprs.map(p => SeriesStore.nameMatch(col("name"), p)).reduce(_ || _))
-    SeriesStore.tagByPattern(
-      SeriesStore.sliceToRange(
-        named.where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-        from, until),
-      pathExprs)
-  }
+  override protected def read(spark: SparkSession, patterns: Seq[String],
+                              from: Long, until: Long): DataFrame = spark.read.parquet(path)
 
   /** Persisted `_catalog` when the store was written through
     * [[ParquetSeriesStore.write]] (catalog-sized read — the pathcache
@@ -214,30 +215,19 @@ object ParquetSeriesStore {
  * arrays on the global [min,max] hour grid. Deterministic — this is the
  * fixture source for the DuckDB-oracle correctness gate (FIXTURES.md §4).
  */
-class EventSeriesStore(sfDir: String, step: Long = 3600L) extends SeriesStore {
+class EventSeriesStore(sfDir: String, step: Long = 3600L) extends ScanStore {
 
   override def stepHint: Option[Long] = Some(step)
 
   /** Build the full canonical frame (all event types). Cached per (spark, dir). */
   def allSeries(spark: SparkSession): DataFrame = EventSeriesStore.cached(spark, sfDir, step)
 
-  override def fetch(spark: SparkSession, pathExpr: String, from: Long, until: Long): DataFrame = {
-    val base = allSeries(spark)
-    val named =
-      if (Glob.isGlob(pathExpr)) base.where(col("name").rlike(Glob.toRegex(pathExpr)))
-      else base.where(col("name") === pathExpr)
-    SeriesStore.sliceToRange(named, from, until).withColumn("pathExpression", lit(pathExpr))
-  }
-
-  override def fetchAll(spark: SparkSession, from: Long, until: Long): DataFrame =
-    SeriesStore.sliceToRange(allSeries(spark), from, until).withColumn("pathExpression", lit("*"))
+  override protected def read(spark: SparkSession, patterns: Seq[String],
+                              from: Long, until: Long): DataFrame = allSeries(spark)
 
   /** The derived frame is already cached per (spark, dir); names off it. */
   override def catalog(spark: SparkSession): DataFrame =
     allSeries(spark).select(col("name"), col("tags")).dropDuplicates("name")
-
-  /** allSeries is cached — fetches already serve from memory. */
-  override def scanCached: Boolean = true
 }
 
 object EventSeriesStore {

@@ -17,7 +17,7 @@ import graft.engine.Align
  * zipper's first-non-null backend merge).
  *
  * Scale shape: each tier prunes/pushes down independently (compose with
- * [[TimePartitionedSeriesStore]] for the history tiers); the align stats
+ * a depth-0 [[RoutedSeriesStore]] for the history tiers); the align stats
  * are two broadcast one-row aggregates and the merge groups only the
  * fetched rows — per-request data, not store-sized.
  */
@@ -43,8 +43,6 @@ class TieredSeriesStore(tiers: Seq[SeriesStore]) extends SeriesStore {
     * coarse tier still answers for its names). */
   override def catalog(spark: SparkSession): DataFrame =
     tiers.map(_.catalog(spark)).reduce(_ unionByName _).dropDuplicates("name")
-
-  override def scanCached: Boolean = tiers.forall(_.scanCached)
 
   /** Union tier frames (tier-indexed), align to the common grid, and
     * coalesce same-name rows: per slot, the first tier with a non-NaN

@@ -4,101 +4,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Time-partitioned Parquet series store — the 100 TB scan story for the
- * batch side, mirroring what the streaming ingest already does
- * (`streaming/Ingest.scala` partitionBy("day")). The layout shards every
- * series row at `windowSec` boundaries and writes `partitionBy("pwin")`,
- * so a [from, until) fetch prunes whole directories before any row is
- * read — Spark's partition pruning is the engine analog of the
+ * Layout helpers of the time-partitioned Parquet stores — the 100 TB scan
+ * story for the batch side, mirroring what the streaming ingest already
+ * does (`streaming/Ingest.scala` partitionBy("day")). [[shard]] splits
+ * every series row at `windowSec` boundaries into rows keyed by the window
+ * ordinal `pwin`, so a [from, until) fetch prunes whole directories before
+ * any row is read — Spark's partition pruning is the engine analog of the
  * reference's TLD path routing + time-range fetch
- * (ref pathcache/pathcache.go:18-56, SURVEY §4): route the request to the
- * slice of the store that can contain it, never scan the rest.
- *
- * fetch() returns the same canonical frame as the flat
- * [[ParquetSeriesStore]]: one row per series covering the requested
- * range. Reassembly (stitching window shards back into one values array)
- * groups only the PRUNED rows — the shuffle is proportional to the
- * requested window, not the store. Missing middle shards (a series with
- * no row in some window) NaN-fill, so a reassembled series is
- * value-identical to the flat layout's slice.
+ * (ref pathcache/pathcache.go:18-56, SURVEY §4). [[RoutedSeriesStore]]
+ * writes and reads the layout (route depth 0 is the time-only
+ * `partitionBy("pwin")` one); [[Retention]] rolls its windows between
+ * tiers. Reassembly ([[stitch]]) groups only the PRUNED rows — the
+ * shuffle is proportional to the requested window, not the store.
  */
-class TimePartitionedSeriesStore(
-    path: String,
-    windowSec: Long,
-    uniformStep: Option[Long] = None) extends SeriesStore {
-
-  override def stepHint: Option[Long] = uniformStep
-
-  // fail fast if the writer persisted a different windowSec (wrong pwin
-  // predicates would otherwise return silently wrong/empty slices)
-  @volatile private var metaChecked = false
-
-  private def pruned(spark: SparkSession, from: Long, until: Long): DataFrame = {
-    if (!metaChecked) {
-      TimePartitionedSeriesStore.validateMeta(spark, path,
-        Map("windowSec" -> windowSec.toString))
-      metaChecked = true
-    }
-    val df = TimePartitionedSeriesStore.readShardedOrEmpty(spark, path)
-    // partition predicate from the request range: floorDiv keeps negative
-    // timestamps on the correct window (SQL DIV is floor division too)
-    val lo = if (SeriesStore.bounded(from)) Some(Math.floorDiv(from, windowSec)) else None
-    val hi = if (SeriesStore.bounded(until)) Some(Math.floorDiv(until - 1L, windowSec)) else None
-    (lo, hi) match {
-      case (Some(l), Some(h)) => df.where(col("pwin") >= l && col("pwin") <= h)
-      case (Some(l), None)    => df.where(col("pwin") >= l)
-      case (None, Some(h))    => df.where(col("pwin") <= h)
-      case _                  => df
-    }
-  }
-
-  override def fetch(spark: SparkSession, pathExpr: String, from: Long, until: Long): DataFrame = {
-    val named = SeriesStore.nameFilter(pruned(spark, from, until), pathExpr)
-    TimePartitionedSeriesStore.stitch(
-      SeriesStore.sliceToRange(
-        named.where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-        from, until))
-      .withColumn("pathExpression", lit(pathExpr))
-  }
-
-  override def fetchAll(spark: SparkSession, from: Long, until: Long): DataFrame =
-    TimePartitionedSeriesStore.stitch(
-      SeriesStore.sliceToRange(
-        pruned(spark, from, until)
-          .where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-        from, until))
-      .withColumn("pathExpression", lit("*"))
-
-  /** Batched: one pwin-pruned scan, the OR of every pattern's name
-    * predicate, ONE stitch over the deduplicated matching series (k
-    * overlapping patterns stitch a shared series once, not k times), then
-    * per-pattern tagging on the stitched series rows. */
-  override def fetchMulti(spark: SparkSession, pathExprs0: Seq[String],
-                          from: Long, until: Long): DataFrame = {
-    require(pathExprs0.nonEmpty, "fetchMulti: no patterns")
-    val pathExprs = pathExprs0.distinct
-    if (pathExprs.size == 1) return fetch(spark, pathExprs.head, from, until)
-    val base = pruned(spark, from, until)
-    val pre = SeriesStore.prefixDisjunction(pathExprs).map(base.where).getOrElse(base)
-    val named = pre.where(
-      pathExprs.map(p => SeriesStore.nameMatch(col("name"), p)).reduce(_ || _))
-    SeriesStore.tagByPattern(
-      TimePartitionedSeriesStore.stitch(
-        SeriesStore.sliceToRange(
-          named.where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-          from, until)),
-      pathExprs)
-  }
-
-  /** The persisted `_catalog` table when the writer/rollover maintains one
-    * (catalog-sized read — no data partition is listed or opened);
-    * otherwise the 2-column pruned scan over the shards. */
-  override def catalog(spark: SparkSession): DataFrame =
-    TimePartitionedSeriesStore.readCatalog(spark, path).getOrElse(
-      TimePartitionedSeriesStore.readShardedOrEmpty(spark, path)
-        .select(col("name"), col("tags")).dropDuplicates("name"))
-}
-
 object TimePartitionedSeriesStore {
 
   /** The sharded layout's row schema (fixed, SURVEY §1.4). Every read
@@ -116,7 +34,7 @@ object TimePartitionedSeriesStore {
   /** Read the sharded dir with the layout's declared `schema`, or an
     * empty frame of it when no partition dir exists (fresh store, or a
     * fully-rolled fine tier). The partition check is any `col=` subdir,
-    * covering both the `pwin=` layout and the routed `troute=`/`pwin=`
+    * covering both the depth-0 `pwin=` layout and the `troute=`/`pwin=`
     * one. Files are still listed on every call, so windows and routes
     * written since the last read are visible without a remount. */
   private[store] def readShardedOrEmpty(spark: SparkSession, path: String,
@@ -128,20 +46,6 @@ object TimePartitionedSeriesStore {
     if (hasShards) spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /**
-   * Split canonical series rows at `windowSec` boundaries and write
-   * Parquet partitioned by the window ordinal `pwin = floor(t /
-   * windowSec)`. Each shard keeps the canonical row shape (name, tags,
-   * start, step, values) so readers slice with the same index math as the
-   * flat store. The per-row explode is map-side; the writer's
-   * `partitionBy` is the only data movement.
-   */
-  def write(df: DataFrame, path: String, windowSec: Long): Unit = {
-    shard(df, windowSec).write.mode("overwrite").partitionBy("pwin").parquet(path)
-    writeCatalog(df.select(col("name"), col("tags")), path)
-    writeMeta(df.sparkSession, path, Map("layout" -> "time", "windowSec" -> windowSec.toString))
   }
 
   // ---- persisted name/tag catalog -----------------------------------------
@@ -207,7 +111,9 @@ object TimePartitionedSeriesStore {
   // values and return silently EMPTY fetches; a windowSec mismatch prunes
   // the wrong pwin dirs the same way. Readers validate once per instance
   // and fail fast on mismatch. An absent file (hand-built or pre-r9
-  // layout) validates trivially.
+  // layout, or a Retention coarse tier) validates trivially; a time-only
+  // store written before route depth 0 was recorded (`layout=time`, no
+  // `routeDepth` key) validates as depth 0.
 
   private[store] def metaPath(path: String) = s"$path/_store_meta"
 
@@ -237,10 +143,14 @@ object TimePartitionedSeriesStore {
   }
 
   /** Throw unless every expected layout parameter matches the persisted
-    * metadata (missing keys/file pass — see above). */
+    * metadata (missing keys/file pass, `layout=time` is depth 0 — see
+    * above). */
   private[store] def validateMeta(spark: SparkSession, path: String,
       expect: Map[String, String]): Unit = {
-    val meta = readMeta(spark, path)
+    val persisted = readMeta(spark, path)
+    val meta =
+      if (persisted.get("layout").contains("time")) Map("routeDepth" -> "0") ++ persisted
+      else persisted
     for ((k, v) <- expect; got <- meta.get(k) if got != v)
       throw new IllegalStateException(
         s"store layout mismatch at $path: reader expects $k=$v but the " +
@@ -255,7 +165,14 @@ object TimePartitionedSeriesStore {
   private def winOf(t: Column, windowSec: Long): Column =
     call_function("div", t - pmod(t, lit(windowSec)), lit(windowSec))
 
-  /** The sharding transform behind [[write]], exposed for tests. */
+  /**
+   * Split canonical series rows at `windowSec` boundaries, tagging each
+   * shard with its window ordinal `pwin = floor(t / windowSec)`. Each
+   * shard keeps the canonical row shape (name, tags, start, step, values)
+   * so readers slice with the same index math as the flat store. The
+   * per-row explode is map-side; the writer's `partitionBy` is the only
+   * data movement.
+   */
   def shard(df: DataFrame, windowSec: Long): DataFrame = {
     val w = lit(windowSec)
     df

@@ -250,7 +250,7 @@ class ApiSpec extends AnyFunSuite {
     try {
       Render.config = Render.RenderConfig(nudgeStartTimeOnAggregation = true,
         useBucketsHighestTimestampOnAggregation = true)
-      // direct consolidate equivalence: renderBytes reads the global config
+      // direct consolidate equivalence: the /render handler reads the global config
       val viaFlags = Render.consolidate(
         Seq(rs("t", Array(1.0, 2, 3, 4, 5, 6), start = 20, step = 10)),
         3, nudgeStartTime = true, useBucketHighestTs = true).head

@@ -626,11 +626,11 @@ class E2eScenarioSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = rows.toDF()
     val base = java.nio.file.Files.createTempDirectory("graft_e2e_layout").toString
     graft.store.ParquetSeriesStore.write(df, s"$base/flat")
-    graft.store.TimePartitionedSeriesStore.write(df, s"$base/part", windowSec = 300L)
+    graft.store.RoutedSeriesStore.write(df, s"$base/part", windowSec = 300L, routeDepth = 0)
     graft.store.RoutedSeriesStore.write(df, s"$base/routed", windowSec = 300L, routeDepth = 1)
     val stores: Seq[(String, graft.store.SeriesStore)] = Seq(
       "flat" -> new graft.store.ParquetSeriesStore(s"$base/flat"),
-      "partitioned" -> new graft.store.TimePartitionedSeriesStore(s"$base/part", 300L),
+      "partitioned" -> new graft.store.RoutedSeriesStore(s"$base/part", 300L, 0),
       "routed" -> new graft.store.RoutedSeriesStore(s"$base/routed", 300L, routeDepth = 1))
     val queries = Seq(
       "/render" -> Seq("format" -> "json", "from" -> "0", "until" -> "600",
@@ -677,31 +677,56 @@ class E2eScenarioSpec extends AnyFunSuite with BeforeAndAfterAll {
     // time: plan construction succeeds, then the persisted batch throws
     // from inside a task (the typed error arrives wrapped in
     // SparkException layers) — without the dropPrefetch fallback every
-    // target of the request would fail
+    // target of the request would fail. The batch reads Parquet files, so
+    // the prefetch pins it and the targets read it through the memo.
+    val batchDir = java.nio.file.Files.createTempDirectory("graft_e2e_batch").toString
     var batchCalls = 0
+    val fetched = scala.collection.mutable.ArrayBuffer.empty[String]
     val store = new MockBackendStore(Map(
       "ok1" -> MockData(MockSeries("ok1", Seq(1, 2, 3))),
       "ok2" -> MockData(MockSeries("ok2", Seq(4, 5, 6))),
       "bad" -> MockFail(503, "Service Unavailable"))) {
+      override def fetch(spark: SparkSession, pathExpr: String, from: Long, until: Long): DataFrame = {
+        fetched += pathExpr
+        super.fetch(spark, pathExpr, from, until)
+      }
       override def fetchMulti(spark: SparkSession, pathExprs: Seq[String],
                               from: Long, until: Long): DataFrame = {
         batchCalls += 1
         val poison = udf((n: String) => {
-          if (n != null)
+          if (n != null) {
+            E2eScenarioSpec.poisonHits.incrementAndGet()
             throw new graft.store.StoreFetchException(503, "batch backend down")
+          }
           true
         }).asNondeterministic()
-        pathExprs.filter(_.startsWith("ok")).map(fetch(spark, _, from, until))
-          .reduce(_ unionByName _).where(poison(col("name")))
+        spark.read.parquet(batchDir)
+          .where(col("pathExpression").isin(pathExprs: _*)).where(poison(col("name")))
       }
     }
+    Seq("ok1", "ok2").map(store.fetch(spark, _, 0, 1000)).reduce(_ unionByName _)
+      .write.mode("overwrite").parquet(batchDir)
+    fetched.clear()
+    E2eScenarioSpec.poisonHits.set(0)
     val (rows, errs) = graft.api.Render.evalWithErrors(
       spark, store, Seq("ok1", "bad", "ok2"), 0, 1000)
     assert(batchCalls == 1, s"prefetch must have batched once, got $batchCalls")
+    // the pinned batch was read and failed, and only then did the targets
+    // go to the per-pattern path: each pattern fetched once, after the
+    // dropped prefetch (the memo served them while the batch was in it)
+    assert(E2eScenarioSpec.poisonHits.get > 0, "the pinned batch must have been read")
+    assert(fetched == Seq("ok1", "bad", "ok2"), fetched.toString)
     // the good targets survive the poisoned batch via the per-pattern retry
     assert(rows.map(_.name).toSet == Set("ok1", "ok2"), rows.map(_.name).toString)
     // only the genuinely failing backend's target records an error
     assert(errs.map(_._1) == Seq("bad"), errs.toString)
     assert(errs.head._2.httpCode == 503)
   }
+
+}
+
+object E2eScenarioSpec {
+  /** Rows the poisoned batch's UDF has seen (local mode: tasks share the
+    * driver JVM, so the counter is visible to the test). */
+  val poisonHits = new java.util.concurrent.atomic.AtomicInteger
 }

@@ -375,19 +375,19 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("/render serves from the production store composition (partitioned history tier + flat recent tier)") {
     import graft.core.Series
-    import graft.store.{ParquetSeriesStore, TieredSeriesStore, TimePartitionedSeriesStore}
+    import graft.store.{ParquetSeriesStore, RoutedSeriesStore, TieredSeriesStore}
     val sp = spark
     import sp.implicits._
     val base = java.nio.file.Files.createTempDirectory("httpstore").toString
     // history: day-sharded partitioned layout; recent: flat dir
-    TimePartitionedSeriesStore.write(
+    RoutedSeriesStore.write(
       Seq(Series("events.click", Map("name" -> "events.click"), 0L, 3600L,
-        Array.tabulate(24)(h => h + 1.0))).toDF(), s"$base/hist", 86400L)
+        Array.tabulate(24)(h => h + 1.0))).toDF(), s"$base/hist", 86400L, routeDepth = 0)
     Seq(Series("events.click", Map("name" -> "events.click"), 86400L, 3600L,
       Array.fill(24)(100.0))).toDF().write.parquet(s"$base/recent")
     val tiered = new TieredSeriesStore(Seq(
       new ParquetSeriesStore(s"$base/recent", Some(3600L)),
-      new TimePartitionedSeriesStore(s"$base/hist", 86400L, Some(3600L))))
+      new RoutedSeriesStore(s"$base/hist", 86400L, 0, Some(3600L))))
     val tApi = new HttpApi(spark, tiered, port = 0)
     val tPort = tApi.start()
     try {
@@ -409,13 +409,13 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     import sp.implicits._
     val base = java.nio.file.Files.createTempDirectory("lifecycle").toString
     // 3 days of 60s data; days 0-1 will roll to a 3600s coarse tier
-    graft.store.TimePartitionedSeriesStore.write(
+    graft.store.RoutedSeriesStore.write(
       Seq(graft.core.Series("events.life", Map("name" -> "events.life"), 0L, 60L,
         Array.tabulate(3 * 1440)(_.toDouble))).toDF(),
-      s"$base/fine", windowSec = 86400L)
+      s"$base/fine", windowSec = 86400L, routeDepth = 0)
     val tiered = new graft.store.TieredSeriesStore(Seq(
-      new graft.store.TimePartitionedSeriesStore(s"$base/fine", 86400L, Some(60L)),
-      new graft.store.TimePartitionedSeriesStore(s"$base/coarse", 86400L, Some(3600L))))
+      new graft.store.RoutedSeriesStore(s"$base/fine", 86400L, 0, Some(60L)),
+      new graft.store.RoutedSeriesStore(s"$base/coarse", 86400L, 0, Some(3600L))))
     val api = new HttpApi(spark, tiered, port = 0)
     val port2 = api.start()
     def hit(pq: String) = client.send(

@@ -4,11 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Series
-import graft.store.{ParquetSeriesStore, TieredSeriesStore, TimePartitionedSeriesStore}
+import graft.store.{ParquetSeriesStore, RoutedSeriesStore, TieredSeriesStore, TimePartitionedSeriesStore}
 
 /**
- * Time-partitioned batch store: the sharded layout must be invisible to
- * readers — a fetch returns exactly the flat store's canonical frame —
+ * Parquet store layouts (flat, and time-partitioned at route depth 0, 1
+ * and 2): the sharded layout must be invisible to readers — a fetch
+ * returns exactly the flat store's canonical frame —
  * while a bounded [from, until) prunes whole partitions before any row
  * is read (the reference's pathcache TLD-routing analog, SURVEY §4).
  */
@@ -18,7 +19,7 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var flatDir: String = _
   private var partDir: String = _
   private var flat: ParquetSeriesStore = _
-  private var part: TimePartitionedSeriesStore = _
+  private var part: RoutedSeriesStore = _
 
   // 2 series on a 60 s step spanning 3 windows of 3600 s; one starts
   // mid-window and one is short (absent from later windows entirely)
@@ -40,9 +41,9 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("storespec").toString
     flatDir = s"$base/flat"; partDir = s"$base/part"
     fixture(spark).write.mode("overwrite").parquet(flatDir)
-    TimePartitionedSeriesStore.write(fixture(spark), partDir, windowSec = 3600L)
+    RoutedSeriesStore.write(fixture(spark), partDir, windowSec = 3600L, routeDepth = 0)
     flat = new ParquetSeriesStore(flatDir, uniformStep = Some(60L))
-    part = new TimePartitionedSeriesStore(partDir, windowSec = 3600L, uniformStep = Some(60L))
+    part = new RoutedSeriesStore(partDir, windowSec = 3600L, routeDepth = 0, uniformStep = Some(60L))
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
@@ -72,7 +73,7 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
         Array.tabulate(180)(_.toDouble))).toDF(), 3600L)
     shards.where(org.apache.spark.sql.functions.col("pwin") =!= 1L)
       .write.mode("overwrite").partitionBy("pwin").parquet(dir)
-    val st = new TimePartitionedSeriesStore(dir, 3600L, Some(60L))
+    val st = new RoutedSeriesStore(dir, 3600L, 0, Some(60L))
     val Seq((_, start, _, vals)) = canon(st.fetch(spark, "events.gap", 0L, 10800L))
     assert(start == 0L && vals.size == 180)
     assert(vals.slice(0, 60) == (0 until 60).map(_.toDouble))
@@ -255,11 +256,14 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val base = java.nio.file.Files.createTempDirectory(s"storeprop$round").toString
       series.toDF().write.mode("overwrite").parquet(s"$base/flat")
-      TimePartitionedSeriesStore.write(series.toDF(), s"$base/part", windowSec)
+      RoutedSeriesStore.write(series.toDF(), s"$base/part", windowSec, routeDepth = 0)
       val fl = new ParquetSeriesStore(s"$base/flat", Some(step))
-      val pt = new TimePartitionedSeriesStore(s"$base/part", windowSec, Some(step))
-      graft.store.RoutedSeriesStore.write(series.toDF(), s"$base/routed", windowSec)
-      val rt = new graft.store.RoutedSeriesStore(s"$base/routed", windowSec, 1, Some(step))
+      val pt = new RoutedSeriesStore(s"$base/part", windowSec, 0, Some(step))
+      // routed at depth 1 (per TLD) and depth 2 (per full name)
+      val routedAt = Seq(1, 2).map { d =>
+        RoutedSeriesStore.write(series.toDF(), s"$base/routed$d", windowSec, routeDepth = d)
+        new RoutedSeriesStore(s"$base/routed$d", windowSec, d, Some(step))
+      }
       // tiered split of the SAME data at a random boundary with overlap:
       // same step, so the merge must be the identity on the flat points
       val span = series.map(s => s.start + s.values.length * step).max
@@ -274,15 +278,25 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       // NaN-safe structural equality: boxed-double == is NaN-hostile
       def bits(s: Seq[(String, Long, Long, Seq[Double])]) =
         s.map { case (n, st, sp, v) => (n, st, sp, v.map(java.lang.Double.doubleToLongBits)) }
+      def tagged(df: org.apache.spark.sql.DataFrame) =
+        df.select("pathExpression", "name", "start", "step", "values").collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+            r.getSeq[Double](4).map(java.lang.Double.doubleToLongBits)))
+          .sortBy(t => (t._1, t._2, t._3)).toSeq
+      val multi = Seq("events.*", "*.s1", "metrics.s2", "{events,metrics}.s*")
       for (_ <- 1 to 3) {
         val a = (rnd.nextInt(500) - 150) * step + rnd.nextInt(step.toInt)
         val b = a + rnd.nextInt(300) * step + rnd.nextInt(step.toInt)
-        val want = bits(canon(fl.fetch(spark, "events.*", a, b)))
-        assert(bits(canon(pt.fetch(spark, "events.*", a, b))) == want,
-          s"partitioned != flat (round $round step $step window $windowSec range [$a,$b))")
-        for (glob <- Seq("events.*", "*.*"))
-          assert(bits(canon(rt.fetch(spark, glob, a, b))) == bits(canon(fl.fetch(spark, glob, a, b))),
-            s"routed != flat for $glob (round $round step $step window $windowSec range [$a,$b))")
+        for ((st, depth) <- (pt +: routedAt).zipWithIndex) {
+          val label = s"route depth $depth, round $round step $step window $windowSec range [$a,$b)"
+          for (glob <- Seq("events.*", "*.*"))
+            assert(bits(canon(st.fetch(spark, glob, a, b))) == bits(canon(fl.fetch(spark, glob, a, b))),
+              s"fetch $glob != flat ($label)")
+          assert(tagged(st.fetchMulti(spark, multi, a, b)) == tagged(fl.fetchMulti(spark, multi, a, b)),
+            s"fetchMulti != flat ($label)")
+          assert(tagged(st.fetchAll(spark, a, b)) == tagged(fl.fetchAll(spark, a, b)),
+            s"fetchAll != flat ($label)")
+        }
         assert(points(td.fetch(spark, "events.*", a, b)) == points(fl.fetch(spark, "events.*", a, b)),
           s"tiered != flat (round $round step $step cut $cut range [$a,$b))")
       }
@@ -296,7 +310,7 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 3 days of 60s data for one series; roll days 0-1 to 3600s
     val fine = Seq(Series("events.m", Map("name" -> "events.m"), 0L, 60L,
       Array.tabulate(3 * 1440)(_.toDouble))).toDF()
-    graft.store.TimePartitionedSeriesStore.write(fine, s"$base/fine", 86400L)
+    graft.store.RoutedSeriesStore.write(fine, s"$base/fine", 86400L, routeDepth = 0)
     val moved = graft.store.Retention.rollover(spark, s"$base/fine", s"$base/coarse",
       windowSec = 86400L, beforeWin = 2L, coarseStep = 3600L)
     assert(moved == Seq(0L, 1L))
@@ -312,7 +326,7 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an untouched copy of the original fine store into the SAME coarse
     // dir; dynamic partition overwrite must replace, not duplicate
     val fine2 = s"$base/fine2"
-    graft.store.TimePartitionedSeriesStore.write(fine, fine2, 86400L)
+    graft.store.RoutedSeriesStore.write(fine, fine2, 86400L, routeDepth = 0)
     val coarseBefore = spark.read.parquet(s"$base/coarse").count()
     assert(graft.store.Retention.rollover(spark, fine2, s"$base/coarse",
       86400L, 2L, 3600L) == Seq(0L, 1L))
@@ -321,8 +335,8 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // tiered read (fine first) = the original data consolidated to 3600s
     // on days 0-1 and avg-of-60 pairs everywhere per the LCM merge
     val tiered = new TieredSeriesStore(Seq(
-      new TimePartitionedSeriesStore(s"$base/fine", 86400L, Some(60L)),
-      new TimePartitionedSeriesStore(s"$base/coarse", 86400L, Some(3600L))))
+      new RoutedSeriesStore(s"$base/fine", 86400L, 0, Some(60L)),
+      new RoutedSeriesStore(s"$base/coarse", 86400L, 0, Some(3600L))))
     val rows = canon(tiered.fetch(spark, "events.m", 0L, 3L * 86400))
     assert(rows.size == 1)
     val (_, start, step, vals) = rows.head
@@ -338,7 +352,7 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("retention_all").toString
     val fine = Seq(Series("events.m", Map("name" -> "events.m"), 0L, 60L,
       Array.tabulate(2 * 1440)(_.toDouble))).toDF()
-    graft.store.TimePartitionedSeriesStore.write(fine, s"$base/fine", 86400L)
+    graft.store.RoutedSeriesStore.write(fine, s"$base/fine", 86400L, routeDepth = 0)
     // cutoff above the newest window: EVERYTHING rolls, fine dir keeps no
     // pwin= partitions (only parquet's _SUCCESS-style metadata, no data)
     assert(graft.store.Retention.rollover(spark, s"$base/fine", s"$base/coarse",
@@ -348,11 +362,11 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.store.Retention.rollover(spark, s"$base/fine", s"$base/coarse",
       86400L, 99L, 3600L).isEmpty)
     // and a direct store read over the emptied dir returns no rows
-    val emptied = new TimePartitionedSeriesStore(s"$base/fine", 86400L, Some(60L))
+    val emptied = new RoutedSeriesStore(s"$base/fine", 86400L, 0, Some(60L))
     assert(emptied.fetch(spark, "events.m", 0L, 2L * 86400).count() == 0L)
     // the tiered composition still serves everything from the coarse tier
     val tiered = new TieredSeriesStore(Seq(
-      emptied, new TimePartitionedSeriesStore(s"$base/coarse", 86400L, Some(3600L))))
+      emptied, new RoutedSeriesStore(s"$base/coarse", 86400L, 0, Some(3600L))))
     val rows = canon(tiered.fetch(spark, "events.m", 0L, 2L * 86400))
     assert(rows.size == 1 && rows.head._3 == 3600L && rows.head._4.size == 48)
   }
@@ -399,11 +413,11 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       Series("events.recent", Map("name" -> "events.recent"), 86400L, 60L,
         Array.tabulate(1440)(_.toDouble))                      // day 1 only
     ).toDF()
-    graft.store.TimePartitionedSeriesStore.write(fine, s"$base/fine", 86400L)
+    graft.store.RoutedSeriesStore.write(fine, s"$base/fine", 86400L, routeDepth = 0)
     assert(graft.store.Retention.rollover(spark, s"$base/fine", s"$base/coarse",
       86400L, beforeWin = 1L, coarseStep = 3600L) == Seq(0L))
-    val fineStore = new TimePartitionedSeriesStore(s"$base/fine", 86400L, Some(60L))
-    val coarseStore = new TimePartitionedSeriesStore(s"$base/coarse", 86400L, Some(3600L))
+    val fineStore = new RoutedSeriesStore(s"$base/fine", 86400L, 0, Some(60L))
+    val coarseStore = new RoutedSeriesStore(s"$base/coarse", 86400L, 0, Some(3600L))
     def names(s: graft.store.SeriesStore) =
       s.catalog(spark).select("name").collect().map(_.getString(0)).sorted.toSeq
     // fine catalog rebuilt from what remains; coarse gained the rolled name
@@ -461,8 +475,8 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       Series("events.b", Map("name" -> "events.b"), 3600L, 60L,
         Array.tabulate(60)(i => i * 2.0))                      // window 1 only
     ).toDF()
-    graft.store.TimePartitionedSeriesStore.write(fine, s"$base/fine", 3600L)
-    val store = new TimePartitionedSeriesStore(s"$base/fine", 3600L, Some(60L))
+    graft.store.RoutedSeriesStore.write(fine, s"$base/fine", 3600L, routeDepth = 0)
+    val store = new RoutedSeriesStore(s"$base/fine", 3600L, 0, Some(60L))
     // both plans list files BEFORE the delete — the rollover race window
     val racingDefault = store.fetch(spark, "events.*", 0L, 7200L)
     val racingLenient = store.fetch(spark, "events.*", 0L, 7200L)
@@ -592,12 +606,33 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e1.getMessage.contains("routeDepth"))
     // wrong window: pwin predicates would prune the wrong dirs — throw
     val pdir = java.nio.file.Files.createTempDirectory("metawin").toString
-    TimePartitionedSeriesStore.write(envFixture(spark), pdir, windowSec = 3600L)
-    val wrongWin = new TimePartitionedSeriesStore(pdir, 7200L, Some(60L))
+    RoutedSeriesStore.write(envFixture(spark), pdir, windowSec = 3600L, routeDepth = 0)
+    val wrongWin = new RoutedSeriesStore(pdir, 7200L, 0, Some(60L))
     val e2 = intercept[IllegalStateException] {
       wrongWin.fetch(spark, "prod.web.*", 0L, 3600L).collect()
     }
     assert(e2.getMessage.contains("windowSec"))
+    // a routed reader over the time-only layout: no troute dirs exist, so
+    // route predicates would silently select nothing — the depth-0 writer
+    // records routeDepth=0, and the mismatch throws
+    val routedOverTime = new RoutedSeriesStore(pdir, 3600L, routeDepth = 1, Some(60L))
+    val e3 = intercept[IllegalStateException] {
+      routedOverTime.fetch(spark, "prod.web.*", 0L, 3600L).collect()
+    }
+    assert(e3.getMessage.contains("routeDepth"))
+    // a time-only store written before depth 0 was recorded (meta without
+    // a routeDepth key) still opens at depth 0, and a routed reader over it
+    // throws just the same
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(pdir, "._store_meta.crc"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(pdir, "_store_meta"),
+      "layout=time\nwindowSec=3600\n")
+    val legacy = new RoutedSeriesStore(pdir, 3600L, routeDepth = 0, Some(60L))
+    assert(canon(legacy.fetch(spark, "prod.web.*", 0L, 3600L)).map(_._1) == Seq("prod.web.cpu"))
+    val routedOverLegacy = new RoutedSeriesStore(pdir, 3600L, routeDepth = 1, Some(60L))
+    val e4 = intercept[IllegalStateException] {
+      routedOverLegacy.fetch(spark, "prod.web.*", 0L, 3600L).collect()
+    }
+    assert(e4.getMessage.contains("routeDepth"))
     // matching reader works, and a hand-built layout (no _store_meta)
     // validates trivially (the gap-store test above relies on this too)
     val ok = new graft.store.RoutedSeriesStore(dir, 3600L, routeDepth = 1, Some(60L))
@@ -660,8 +695,12 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // race and zero leaked pins afterwards
     val targets = Seq("sumSeries(events.*)", "scale(other.metric, 2)",
       "maxSeries(events.cl*, other.*)")
-    def render() = graft.api.Render.eval(spark, flat, targets, 0L, 10800L)
-      .map(r => (r.name, r.start, r.step, r.values.toSeq)).sortBy(_._1)
+    // the path the server runs: HttpApi calls evalWithErrors per request
+    def render() = {
+      val (rows, errors) = graft.api.Render.evalWithErrors(spark, flat, targets, 0L, 10800L)
+      assert(errors.isEmpty, s"no fetch may fail: $errors")
+      rows.map(r => (r.name, r.start, r.step, r.values.toSeq)).sortBy(_._1)
+    }
     val sequential = render()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val pool = java.util.concurrent.Executors.newFixedThreadPool(12)
@@ -683,9 +722,9 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // persist must register with the request's scope and release with
     // the request, not linger until a ContextCleaner GC (ADVICE r11).
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val rows = graft.api.Render.eval(spark, flat,
+    val (rows, errors) = graft.api.Render.evalWithErrors(spark, flat,
       Seq("divideSeriesLists(events.*, events.*)"), 0L, 10800L)
-    assert(rows.nonEmpty)
+    assert(errors.isEmpty && rows.nonEmpty)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"indexByName caches must release with the request: $leaked")
   }
