@@ -4,11 +4,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // knobs: ONLY = comma-list of query names; REPS = time each query N
+    // knobs: ONLY = comma-list of query-name prefixes; REPS = time each query N
     // times and keep the fastest. REPS defaults to 2 so the published total
     // is best-of-2 — a single pass is hostage to host load (r4's driver run
     // read 5.8x the quiet-machine number on identical plans)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -22,7 +21,7 @@ object Bench {
     SparkEntry.entry(spark).count()
     spark.read.parquet(s"$sfDir/documents.parquet").count()
     spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-    val catalog = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
+    val catalog = SparkEntry.queries.filter { case (n, _) => SparkEntry.selected(n) }
     // several operators persist intermediates (signatures, shingle tables,
     // CC labels); left cached they accumulate across the full catalog suite
     // and evict each other, making in-suite numbers order-dependent

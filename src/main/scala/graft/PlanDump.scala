@@ -6,18 +6,18 @@ package graft
  * (Exchange count, join strategy, PushedFilters/ReadSchema) are checkable
  * without running Spark.
  *
- * Usage: SPARK_GRAFT_ONLY=p83,q08 SPARK_GRAFT_PLAN_DIR=plans/r17 \
+ * Usage: SPARK_GRAFT_ONLY=p83,q08 SPARK_GRAFT_PLAN_DIR=target/plans \
  *          SPARK_GRAFT_PLAN_SUFFIX=before sbt "runMain graft.PlanDump"
  *
- * Writes $PLAN_DIR/<query>_<suffix>.txt. Never used by the bench or the
+ * `SPARK_GRAFT_ONLY` takes name prefixes, like Verify's (`g` = every
+ * g-row). Writes $PLAN_DIR/<query>_<suffix>.txt (default `target/plans`). Never used by the bench or the
  * driver — read-only diagnostics over the same catalog entries.
  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r17")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -29,7 +29,7 @@ object PlanDump {
       spark.conf.set(k.trim, v.trim)
     })
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val catalog = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
+    val catalog = SparkEntry.queries.filter { case (n, _) => SparkEntry.selected(n) }
     catalog.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)

@@ -264,10 +264,9 @@ object ScaleBench {
     // once measured p15 at 30 s where a re-run shows 2.3 s); best-of-REPS
     // keeps the ratios about plan shape, not scheduler luck
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
-    // SPARK_GRAFT_ONLY=p36,p37 → measure just those rows (same prefix
-    // convention as Verify) — full-headline runs stay the default
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty))
-    val selected = only.fold(Headline)(ps => Headline.filter(n => ps.exists(n.startsWith)))
+    // SPARK_GRAFT_ONLY=p36,p37 → measure just those rows — full-headline
+    // runs stay the default
+    val selected = Headline.filter(SparkEntry.selected)
     // rows whose body Dataset.count() would DELETE via column pruning (the
     // manifest's md5+token fold reduces to a doc_id-only scan; the as-of
     // window and bucketed-join feature columns vanish the same way) are

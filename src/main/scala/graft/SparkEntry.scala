@@ -20,4 +20,11 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Queries.oracleSql
+
+  /** Whether `SPARK_GRAFT_ONLY` (comma-separated name prefixes; unset =
+    * every row) selects catalog row `name` — the local-iteration subset of
+    * Verify, Bench, PlanDump and ScaleBench. */
+  def selected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty))
+      .forall(_.exists(name.startsWith))
 }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.api.Serve.quote
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,11 +13,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // local-iteration subset: SPARK_GRAFT_ONLY=g99,g100 runs only matching
     // prefixes (the driver never sets this — full catalog by default)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq.filter(_.nonEmpty))
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.queries.filter { case (n, _) => SparkEntry.selected(n) }
     // warm the shared fixture memo, then give each query one scope: it
     // owns the query's persists and checkpoints (incl. the evaluator's
     // pins) and releases them after the dump, so they don't accumulate
@@ -31,20 +28,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped: a tab or CR in an oracle SQL would
+    // otherwise break the json.load that reads this file
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

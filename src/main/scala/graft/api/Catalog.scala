@@ -195,7 +195,7 @@ object Catalog {
     nodes.map { n =>
       val ac = if (n.allowChildren) 1 else 0
       val leaf = if (n.leaf) 1 else 0
-      s"""{"allowChildren":$ac,"expandable":$ac,"leaf":$leaf,"id":"${n.id}","text":"${n.text}","context":{}}"""
+      s"""{"allowChildren":$ac,"expandable":$ac,"leaf":$leaf,"id":${Serve.quote(n.id)},"text":${Serve.quote(n.text)},"context":{}}"""
     }.mkString("[", ",", "]")
 
   /** List of supported function names (the /functions endpoint's key set). */

@@ -1,9 +1,11 @@
 package graft.api
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.core.{Glob, Kernels, Scope}
 import graft.engine.Eval
 import graft.store.SeriesStore
+import graft.api.Serve.quote
 
 /** One collected series, post-evaluation (driver-side marshalling unit —
   * same place the reference marshals, after its single-goroutine eval). */
@@ -25,7 +27,8 @@ case class RenderedSeries(
  * [[consolidate]] and [[formatBytes]]. One collect per target, plus
  * whatever build-time actions its operators run (name and count
  * collects); everything after the collects is O(output), exactly like the
- * reference's marshal layer.
+ * reference's marshal layer. JSON strings go through [[Serve.quote]],
+ * the one escaper every route shares.
  */
 object Render {
 
@@ -74,7 +77,7 @@ object Render {
           // planning, seriesByTag scans, a poisoned shared batch) fails
           // this target only. An ACTION-time store failure arrives
           // wrapped in SparkException layers — unwrap the cause chain
-          case e0: Throwable if storeCause(e0).isDefined =>
+          case NonFatal(e0) if storeCause(e0).isDefined =>
             // the failure may live inside the ONE shared prefetch scan
             // (action-time errors bypass fetch()-time masking, and the
             // persisted batch materializes whole on its first action, so
@@ -87,7 +90,7 @@ object Render {
             if (base.dropPrefetch()) {
               try evalOnce()
               catch {
-                case r0: Throwable if storeCause(r0).isDefined =>
+                case NonFatal(r0) if storeCause(r0).isDefined =>
                   sink.getOrElseUpdate(t, storeCause(r0).get)
               }
             } else sink.getOrElseUpdate(t, storeCause(e0).get)
@@ -264,13 +267,6 @@ object Render {
   private def fmtDouble(v: Double): String =
     if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
 
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Graphite JSON: [{"target":…,"datapoints":[[v|null,ts],…],"tags":{…}}].
     * `tsMul` scales timestamps for timestampFormat=ms/us/ns
     * (ref MarshalJSON expr/types/types.go:120-198; multiplier
@@ -282,7 +278,7 @@ object Render {
     rows.foreach { r =>
       if (!first) sb += ','
       first = false
-      sb ++= "{\"target\":" ++= q(r.name) ++= ",\"datapoints\":["
+      sb ++= "{\"target\":" ++= quote(r.name) ++= ",\"datapoints\":["
       var inner = false
       var t = r.start
       r.values.foreach { v =>
@@ -297,7 +293,7 @@ object Render {
         }
       }
       sb ++= "],\"tags\":{"
-      sb ++= r.tags.toSeq.sortBy(_._1).map { case (k, v) => q(k) + ":" + q(v) }.mkString(",")
+      sb ++= r.tags.toSeq.sortBy(_._1).map { case (k, v) => quote(k) + ":" + quote(v) }.mkString(",")
       sb ++= "}}"
     }
     (sb += ']').toString

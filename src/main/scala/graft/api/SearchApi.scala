@@ -1,11 +1,10 @@
 package graft.api
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
-import scala.util.control.NonFatal
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, desc}
+import graft.api.Serve.{CacheKey, Request, Route, quote}
+import graft.api.Serve.Reply.json
+import graft.pipeline.Refresh
 
 /**
  * The corpus-retrieval serving front-end — the §2.10 endpoint over the
@@ -25,10 +24,12 @@ import org.apache.spark.sql.functions.col
  *   /status                                  → index-health snapshot
  *   /lb_check
  *
- * Admission: /search requests past `maxInflight` concurrent answers get an
- * immediate 429 (the reference's limiter.go analog); 200-bodies cache for
- * `cacheTtlSec` keyed on the raw query (a mount is a snapshot — entries can
- * never be stale, the TTL only bounds memory).
+ * Admission, through [[Serve]]'s pipeline: /search requests past
+ * `maxInflight` concurrent answers get an immediate 429, as do requests
+ * past `maxInflight + 4` data threads; 200-bodies cache for `cacheTtlSec`
+ * keyed on the parameters (a mount is a snapshot — entries can never be
+ * stale, the TTL and a 256-entry cap only bound memory), and a hit takes
+ * no permit. /status and /lb_check answer inline, without a permit.
  *
  * The mount contract — like carbonapi resolving its backend routing at
  * startup, not per request: `start()` opens the artifacts ONCE, as a
@@ -63,35 +64,22 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
                 maxInflight: Int = 16, cacheTtlSec: Int = 60) {
 
   // codebooks default to INSIDE the index dir (compact/retrain write them
-  // there — a self-contained mount needs zero extra configuration); an
-  // explicit external path stays supported and is fingerprint-checked at
-  // startup against the index meta either way
+  // there); an explicit path is fingerprint-checked at startup either way
   private val cbPath: String =
     Option(codebooksPath).getOrElse(s"$ivfPath/codebooks")
 
-  // /search admission control (the reference's limiter.go:14-51 analog,
-  // which the graphite HttpApi already carries as `concurency`): the
-  // worker pool fronts an unbounded HttpServer backlog, so without a
-  // limiter a burst queues Spark actions without bound — excess requests
-  // get an immediate 429 instead. /status and /lb_check are exempt (a
-  // load balancer must always see health).
-  private val inflight = new java.util.concurrent.Semaphore(maxInflight)
-
-  // TTL response cache keyed on the raw query string (the reference's
-  // render cache symmetry, render_handler.go:230-247). The mount is a
-  // snapshot, so entries can never be STALE — the TTL and entry cap only
-  // bound memory. 200-bodies only; hits serve without a limiter permit
-  // (no Spark action runs).
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
-  private val cacheHitCounter = new java.util.concurrent.atomic.AtomicLong(0)
-  private val cacheMaxEntries = 256
+  private val serve: Serve = new Serve(port, Seq(
+    "/search" -> Route(p => json(search(p)), cacheKey = r =>
+      if (cacheTtlSec > 0) Some(CacheKey(r.key(), cacheTtlSec)) else None),
+    "/status" -> Route(_ =>
+      json(statusJson.dropRight(1) + s""","cache_hits":${serve.cacheHits}}"""), slot = false),
+    "/lb_check" -> Route(_ => json("Ok\n"), slot = false)),
+    slots = Some(maxInflight), waitSec = 0L, dataThreads = maxInflight + 4,
+    reject = (429, s"too many concurrent requests (limit $maxInflight)"),
+    error = msg => json(s"""{"error":${quote(msg)}}"""), cacheEntries = 256)
 
   /** Served-from-cache count (observable for specs and /status). */
-  private[graft] def cacheHits: Long = cacheHitCounter.get()
-
-  @volatile private var server: HttpServer = _
-  @volatile private var pool: java.util.concurrent.ExecutorService = _
+  private[graft] def cacheHits: Long = serve.cacheHits
 
   // the mount's one scope: it owns every block the mount pins, and
   // stop() releases them
@@ -133,10 +121,8 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
     // doc edited in the term index but not re-embedded shows up here as
     // consistent:false instead of ranking fresh BM25 against a stale
     // vector silently.
-    val termFp = termTombstones
-      .map(graft.pipeline.Refresh.tombstoneFingerprint).getOrElse(0L)
-    val ivfFp = ivfTombstones
-      .map(graft.pipeline.Refresh.tombstoneFingerprint).getOrElse(0L)
+    val termFp = termTombstones.map(Refresh.tombstoneFingerprint).getOrElse(0L)
+    val ivfFp = ivfTombstones.map(Refresh.tombstoneFingerprint).getOrElse(0L)
     val consistent = termSegs == ivfSegs && termFp == ivfFp
     def arr(xs: Seq[Long]) = xs.mkString("[", ",", "]")
     s"""{"term_index":{"buckets":${termIndex.buckets},""" +
@@ -149,13 +135,6 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
       s""""tombstone_fp":$ivfFp},""" +
       s""""consistent":$consistent}"""
   }
-
-  // the ONE segment-resolution rule, shared with the orchestrator's
-  // skew gate: reads happen at the call sites, so a broken doclen
-  // sidecar or IVF corpus fails start() loudly instead of silently
-  // passing the multi-segment refusal gate and erroring per-request
-  private def maxSegOrZero(df: DataFrame): Long =
-    graft.pipeline.Refresh.maxSegOrZero(df)
 
   def start(): Int = {
     require(maxInflight >= 0 && cacheTtlSec >= 0,
@@ -173,186 +152,84 @@ class SearchApi(spark: SparkSession, termIndexDir: String,
     ti.buckets
     ti.stats
     // fail LOUDLY at startup, not silently per query: a multi-segment
-    // index without tombstones configured cannot be served correctly
-    require(termTombstones.isDefined || maxSegOrZero(dl) == 0L,
+    // index without tombstones configured cannot be served correctly (the
+    // orchestrator's segment rule; a broken doclen sidecar or IVF corpus
+    // fails here too, not per request)
+    require(termTombstones.isDefined || Refresh.maxSegOrZero(dl) == 0L,
       s"SearchApi: term index $termIndexDir has delta segments but no " +
         "termTombstonesPath configured — pass the tombstone artifact " +
         "(empty for a pure-append history) or serve the compacted index")
     val ivf = ivfIndex
-    require(ivfTombstones.isDefined || maxSegOrZero(ivf.corpus) == 0L,
+    require(ivfTombstones.isDefined || Refresh.maxSegOrZero(ivf.corpus) == 0L,
       s"SearchApi: IVF index $ivfPath has delta segments but no " +
         "ivfTombstonesPath configured — pass the tombstone artifact " +
         "(empty for a pure-append history) or serve the compacted index")
-    server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.createContext("/search", handleLimited(search))
-    server.createContext("/status", handle(_ =>
-      statusJson.dropRight(1) + s""","cache_hits":${cacheHitCounter.get()}}"""))
-    server.createContext("/lb_check", handle(_ => "Ok\n"))
-    // MORE worker threads than permits, or the limiter is dead code: with
-    // a pool smaller than maxInflight, tryAcquire can never see a full
-    // semaphore and excess requests queue unboundedly in the pool's own
-    // queue — the exact failure the 429 exists to prevent. The extra
-    // threads also serve cache hits and 429s while every permit is busy.
-    pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(2, maxInflight + 4))
-    server.setExecutor(pool)
-    server.start()
-    server.getAddress.getPort
+    serve.start()
   }
 
   def stop(): Unit = {
-    if (server != null) server.stop(0)
-    // the worker pool is NON-daemon: without an explicit shutdown a JVM
-    // that stopped the server still never exits (caught by the r15
-    // ScaleBench servearm run hanging its forked JVM)
-    if (pool != null) pool.shutdown()
+    serve.stop()
     mount.close()
   }
 
-  private def handle(f: Map[String, String] => String)(ex: HttpExchange): Unit = {
-    val (code, body) = run(f, ex)
-    respond(ex, code, body)
-  }
-
-  /** The /search wrapper: cache lookup → admission control → compute →
-    * cache fill. A cache hit costs no permit and no Spark job; a full
-    * limiter answers 429 immediately instead of queueing another action. */
-  private def handleLimited(f: Map[String, String] => String)(ex: HttpExchange): Unit = {
-    val key = String.valueOf(ex.getRequestURI.getRawQuery)
-    if (cacheTtlSec > 0) {
-      val e = cache.get(key)
-      if (e != null && e._1 > System.nanoTime()) {
-        cacheHitCounter.incrementAndGet()
-        respond(ex, 200, e._2)
-        return
-      }
-    }
-    if (!inflight.tryAcquire()) {
-      respond(ex, 429,
-        s"""{"error":"too many concurrent requests (limit $maxInflight)"}""")
-      return
-    }
-    val (code, body) =
-      try run(f, ex)
-      finally inflight.release()
-    if (code == 200 && cacheTtlSec > 0) {
-      // crude cap: the artifacts are immutable, so a full clear only costs
-      // recomputation — no eviction bookkeeping on the request path
-      if (cache.size >= cacheMaxEntries) cache.clear()
-      cache.put(key, (System.nanoTime() + cacheTtlSec * 1000000000L, body))
-    }
-    respond(ex, code, body)
-  }
-
-  private def run(f: Map[String, String] => String,
-                  ex: HttpExchange): (Int, String) =
-    // NonFatal only: a VirtualMachineError (OOM) must propagate and kill
-    // the worker rather than be masked as a 500 from an undefined state
-    try (200, f(query(ex)))
-    catch {
-      case e: IllegalArgumentException => (400, s"""{"error":${q(e.getMessage)}}""")
-      case NonFatal(e) => (500, s"""{"error":${q(String.valueOf(e.getMessage))}}""")
-    }
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  }
-
-  private def query(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
-      .filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        k -> java.net.URLDecoder.decode(v, "UTF-8")
-      }.toMap
-
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
   // untrusted numeric parameters are range-checked BEFORE they size any
   // limit/window/collect (the k rule applied uniformly)
-  private def boundedInt(p: Map[String, String], name: String,
+  private def boundedInt(p: Request, name: String,
                          default: Int, lo: Int, hi: Int): Int = {
     val v = p.get(name).map(_.toInt).getOrElse(default)
     require(v >= lo && v <= hi, s"$name out of range [$lo, $hi]: $v")
     v
   }
 
-  private def search(p: Map[String, String]): String = {
+  private def search(p: Request): String = {
     val k = boundedInt(p, "k", 10, 1, 1000)
-    p.get("bulk") match {
-      case Some(b) =>
+    def terms(s: String): Seq[String] = s.split("[+ ]").filter(_.nonEmpty).toSeq
+    def top(df: DataFrame, by: String): Array[Row] = df.orderBy(desc(by), col("doc_id")).limit(k).collect()
+    def results(rows: Array[Row])(f: Row => String): String =
+      rows.map(f).mkString("""{"results":[""", ",", "]}")
+    (p.get("bulk"), p.get("complete"), p.get("glob"), p.get("phrase")) match {
+      case (Some(b), _, _, _) =>
         // batched multi-query BM25: N queries, ONE pruned postings pass
         // (TextStats.bm25TopKBatch) — the fetchMulti lesson applied to
         // the retrieval tier instead of N sequential /search round-trips
-        val qs = b.split(";").toSeq
-          .map(_.split("[+ ]").filter(_.nonEmpty).toSeq)
+        val qs = b.split(";").toSeq.map(terms)
         require(qs.nonEmpty && qs.forall(_.nonEmpty),
           "bulk needs q1;q2;... with non-empty queries")
         require(qs.size <= 100, s"bulk: at most 100 queries, got ${qs.size}")
-        val rows = termIndex.bm25TopKBatch(
-          qs.zipWithIndex.map { case (t, i) => (i.toLong, t) }, k = k).collect()
-        val byQ = rows.groupBy(_.getLong(0))
-        return qs.indices.map { i =>
-          val rs = byQ.getOrElse(i.toLong, Array.empty[org.apache.spark.sql.Row])
+        val byQ = termIndex.bm25TopKBatch(
+          qs.zipWithIndex.map { case (t, i) => (i.toLong, t) }, k = k).collect().groupBy(_.getLong(0))
+        qs.indices.map { i =>
+          val rs = byQ.getOrElse(i.toLong, Array.empty[Row])
             .map(r => s"""{"doc_id":${r.getLong(1)},"n_terms":${r.getLong(2)},"score":${r.getDouble(3)}}""")
             .mkString("[", ",", "]")
           s"""{"query":$i,"results":$rs}"""
         }.mkString("""{"batches":[""", ",", "]}")
-      case None => ()
-    }
-    p.get("complete") match {
-      case Some(pref) =>
-        val rows = termIndex.completeTerms(pref, k = k).collect()
-        return rows.map(r => s"""{"term":${q(r.getString(0))},"df":${r.getLong(1)}}""")
-          .mkString("""{"results":[""", ",", "]}")
-      case None => ()
-    }
-    p.get("glob") match {
-      case Some(g) =>
-        val rows = termIndex.globSearch(g)
-          .orderBy(org.apache.spark.sql.functions.desc("n_hits"),
-            org.apache.spark.sql.functions.col("doc_id"))
-          .limit(k).collect()
-        return rows.map(r => s"""{"doc_id":${r.getLong(0)},"n_terms":${r.getLong(1)},"n_hits":${r.getLong(2)}}""")
-          .mkString("""{"results":[""", ",", "]}")
-      case None => ()
-    }
-    p.get("phrase") match {
-      case Some(ph) =>
-        val terms = ph.split("[+ ]").filter(_.nonEmpty).toSeq
-        val rows = termIndex.phraseSearch(terms)
-          .orderBy(org.apache.spark.sql.functions.desc("n_occur"),
-            org.apache.spark.sql.functions.col("doc_id"))
-          .limit(k).collect()
-        rows.map(r => s"""{"doc_id":${r.getLong(0)},"n_occur":${r.getLong(1)}}""")
-          .mkString("""{"results":[""", ",", "]}")
-      case None =>
-        val terms = p.getOrElse("q", "").split("[+ ]").filter(_.nonEmpty).toSeq
-        require(terms.nonEmpty, "missing q, phrase, glob or complete parameter")
-        p.getOrElse("mode", "bm25") match {
+      case (_, Some(pref), _, _) =>
+        results(termIndex.completeTerms(pref, k = k).collect())(r =>
+          s"""{"term":${quote(r.getString(0))},"df":${r.getLong(1)}}""")
+      case (_, _, Some(g), _) =>
+        results(top(termIndex.globSearch(g), "n_hits"))(r =>
+          s"""{"doc_id":${r.getLong(0)},"n_terms":${r.getLong(1)},"n_hits":${r.getLong(2)}}""")
+      case (_, _, _, Some(ph)) =>
+        results(top(termIndex.phraseSearch(terms(ph)), "n_occur"))(r =>
+          s"""{"doc_id":${r.getLong(0)},"n_occur":${r.getLong(1)}}""")
+      case _ =>
+        val ts = terms(p.one("q"))
+        require(ts.nonEmpty, "missing q, phrase, glob or complete parameter")
+        p.one("mode", "bm25") match {
           case "bm25" =>
-            val rows = termIndex.bm25TopK(terms, k = k).collect()
-            rows.map(r => s"""{"doc_id":${r.getLong(0)},"n_terms":${r.getLong(1)},"score":${r.getDouble(2)}}""")
-              .mkString("""{"results":[""", ",", "]}")
+            results(termIndex.bm25TopK(ts, k = k).collect())(r =>
+              s"""{"doc_id":${r.getLong(0)},"n_terms":${r.getLong(1)},"score":${r.getDouble(2)}}""")
           case "hybrid" =>
-            val vec = p.getOrElse("vec", "")
+            val vec = p.one("vec")
             require(vec.nonEmpty, "hybrid mode needs vec=f,f,...")
             val qv = vec.split(",").map(_.trim.toFloat)
             require(qv.length == ivfIndex.dim,
               s"vec has ${qv.length} dims, index expects ${ivfIndex.dim}")
             val pool = boundedInt(p, "pool", 20, 1, 1000)
             val nprobe = boundedInt(p, "nprobe", 4, 1, 64)
-            val rows = ivfIndex.hybridTopK(termIndex, terms, qv,
-              k = k, pool = pool, nprobe = nprobe).collect()
-            rows.map(r => s"""{"doc_id":${r.getLong(0)},"bm_rank":${r.getLong(1)},"ann_rank":${r.getLong(2)},"rrf_x1e6":${r.getLong(3)}}""")
-              .mkString("""{"results":[""", ",", "]}")
+            results(ivfIndex.hybridTopK(termIndex, ts, qv, k = k, pool = pool, nprobe = nprobe).collect())(r =>
+              s"""{"doc_id":${r.getLong(0)},"bm_rank":${r.getLong(1)},"ann_rank":${r.getLong(2)},"rrf_x1e6":${r.getLong(3)}}""")
           case other => throw new IllegalArgumentException(s"bad mode: $other")
         }
     }

@@ -60,10 +60,6 @@ object Similarity {
                     terms: Seq[String], emb: DataFrame, queryVecId: Long,
                     k: Int = 10, pool: Int = 20, kRrf: Int = 60): DataFrame = {
     val bm = TextStats.bm25TopK(spark, indexDir, terms, k = pool)
-      .select(col("doc_id"), col("score"))
-    val wb = Window.orderBy(desc("score"), col("doc_id")) // ≤pool rows by limit
-    val bmR = bm.withColumn("bm_rank", row_number().over(wb).cast("long"))
-      .select(col("doc_id"), col("bm_rank"))
     // the cosine arm inline (not [[bruteForceTopK]]): the rank key must be
     // the QUANTIZED cosine so pool membership and order are engine-stable
     val qv = emb.where(col("vec_id") === queryVecId)
@@ -77,13 +73,26 @@ object Similarity {
       .orderBy(desc("cos_q"), col("doc_id")).limit(pool)
       .withColumn("cos_rank", row_number().over(wc).cast("long"))
       .select(col("doc_id"), col("cos_rank"))
-    bmR.join(cosR, Seq("doc_id"), "full_outer")
+    rrfFuse(bm, cosR, "cos_rank", k, kRrf)
+  }
+
+  /** The RRF fusion both hybrids share: `bm` (doc_id, score, ≤pool rows
+    * by limit) ranks by score then doc_id, full-outer joins the other
+    * arm's (doc_id, `rank`), and the fused 1e6-scaled integer orders the
+    * top `k` — (doc_id, bm_rank, `rank`, rrf_x1e6), a missing rank 0. */
+  private def rrfFuse(bm: DataFrame, other: DataFrame, rank: String,
+                      k: Int, kRrf: Int): DataFrame = {
+    val wb = Window.orderBy(desc("score"), col("doc_id")) // ≤pool rows by limit
+    val bmR = bm.select(col("doc_id"), col("score"))
+      .withColumn("bm_rank", row_number().over(wb).cast("long"))
+      .select(col("doc_id"), col("bm_rank"))
+    bmR.join(other, Seq("doc_id"), "full_outer")
       .withColumn("rrf_x1e6", round((
         coalesce(lit(1.0) / (col("bm_rank") + kRrf), lit(0.0)) +
-          coalesce(lit(1.0) / (col("cos_rank") + kRrf), lit(0.0))) * 1e6).cast("long"))
+          coalesce(lit(1.0) / (col(rank) + kRrf), lit(0.0))) * 1e6).cast("long"))
       .select(col("doc_id"),
         coalesce(col("bm_rank"), lit(0L)).as("bm_rank"),
-        coalesce(col("cos_rank"), lit(0L)).as("cos_rank"),
+        coalesce(col(rank), lit(0L)).as(rank),
         col("rrf_x1e6"))
       .orderBy(desc("rrf_x1e6"), col("doc_id"))
       .limit(k)
@@ -135,24 +144,11 @@ object Similarity {
     def hybridTopK(ti: TextStats.TermIndex, terms: Seq[String],
                    queryVec: Array[Float], k: Int = 10, pool: Int = 20,
                    nprobe: Int = 4, kRrf: Int = 60): DataFrame = {
-      val bm = ti.bm25TopK(terms, k = pool).select(col("doc_id"), col("score"))
-      val wb = Window.orderBy(desc("score"), col("doc_id")) // ≤pool rows by limit
-      val bmR = bm.withColumn("bm_rank", row_number().over(wb).cast("long"))
-        .select(col("doc_id"), col("bm_rank"))
       val annR = probeAndRerank(corpus, Array((-1L, queryVec.map(_.toDouble))),
           codebooks, centroids, pool, nprobe, tombstones = tombstones)
         .select(col("neighbor_id").as("doc_id"),
           col("rank").cast("long").as("ann_rank"))
-      bmR.join(annR, Seq("doc_id"), "full_outer")
-        .withColumn("rrf_x1e6", round((
-          coalesce(lit(1.0) / (col("bm_rank") + kRrf), lit(0.0)) +
-            coalesce(lit(1.0) / (col("ann_rank") + kRrf), lit(0.0))) * 1e6).cast("long"))
-        .select(col("doc_id"),
-          coalesce(col("bm_rank"), lit(0L)).as("bm_rank"),
-          coalesce(col("ann_rank"), lit(0L)).as("ann_rank"),
-          col("rrf_x1e6"))
-        .orderBy(desc("rrf_x1e6"), col("doc_id"))
-        .limit(k)
+      rrfFuse(ti.bm25TopK(terms, k = pool), annR, "ann_rank", k, kRrf)
     }
   }
 

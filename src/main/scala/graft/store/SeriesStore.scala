@@ -160,10 +160,13 @@ trait ScanStore extends SeriesStore {
       else SeriesStore.prefixDisjunction(patterns).map(rows.where).getOrElse(rows)
         .where(patterns.map(SeriesStore.nameMatch(col("name"), _)).reduce(_ || _))
     // the overlap filter drops whole rows outside the request range
-    // before the slice; its `start < until` half pushes to Parquet
+    // before the slice; its `start < until` half pushes to Parquet. Like
+    // the slice, an unbounded side builds no predicate.
+    val overlap =
+      Option.when(SeriesStore.bounded(from))(col("start") + size(col("values")) * col("step") > from) ++
+        Option.when(SeriesStore.bounded(until))(col("start") < until)
     val sliced = SeriesStore.sliceToRange(
-      named.where(col("start") + size(col("values")) * col("step") > from && col("start") < until),
-      from, until)
+      overlap.reduceOption(_ && _).map(named.where).getOrElse(named), from, until)
     // only the sharded layouts read a `pwin` column: a series may span
     // several window rows there, stitched back into one
     val series =

@@ -278,6 +278,36 @@ class ApiSpec extends AnyFunSuite {
   test("treejson shape (ref find_handlers.go:41-103)") {
     val out = Catalog.treeJson(Seq(FindNode("events.click", "click", leaf = true, allowChildren = false)))
     assert(out == """[{"allowChildren":0,"expandable":0,"leaf":1,"id":"events.click","text":"click","context":{}}]""")
+    // a quote, a backslash and a tab in a name escape as encoding/json's do
+    val odd = "q\"b\\t\tx"
+    val tree = Catalog.treeJson(Seq(FindNode("a." + odd, odd, leaf = false, allowChildren = true)))
+    assert(!tree.exists(_ < ' ') && tree.contains("\\u0009") && tree.contains("q\\\"b\\\\t"), tree)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(tree).get(0)
+    assert(node.get("id").asText == "a." + odd && node.get("text").asText == odd)
+  }
+
+  test("request parameters: the shared parser as one table (ref net/http Request.ParseForm, FormValue)") {
+    import graft.api.Serve.{Request, params}
+    val form = Some("application/x-www-form-urlencoded")
+    // (query, method, Content-Type, body) → parameters, values in arrival order
+    val table = Seq(
+      ("t=a+b&u=a%2Bb", "GET", None, "", Map("t" -> Seq("a b"), "u" -> Seq("a+b"))),
+      ("flag&x=1", "GET", None, "", Map("flag" -> Seq(""), "x" -> Seq("1"))),
+      ("k=1&k=2", "GET", None, "", Map("k" -> Seq("1", "2"))),
+      ("k=1", "POST", form, "k=2&f=b+c%21", Map("k" -> Seq("1", "2"), "f" -> Seq("b c!"))),
+      ("k=1", "POST", None, "f=x", Map("k" -> Seq("1"), "f" -> Seq("x"))),
+      ("k=1", "POST", Some("application/json"), "f=x", Map("k" -> Seq("1"))),
+      ("k=1", "GET", form, "f=x", Map("k" -> Seq("1"))),
+      // an inline route passes no method: its body is never read
+      ("k=1", "", form, "f=x", Map("k" -> Seq("1"))))
+    for ((q, m, ct, body, want) <- table)
+      assert(params(q, m, ct, body) == want, s"$q $m $ct $body")
+    var reads = 0
+    params("k=1", "POST", Some("text/plain"), { reads += 1; "f=x" })
+    assert(reads == 0, "a non-form body must not be read")
+    // a repeated key answers its first value, like Go's FormValue
+    assert(Request("/", params("k=1&k=2", "GET", None, "")).one("k") == "1")
+    assert(Request("/", params("", "GET", None, "")).one("k", "d") == "d")
   }
 
   test("functions registry is populated") {

@@ -547,6 +547,33 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally api.stop()
   }
 
+  test("metric and tag names with a quote, a backslash or a tab keep /metrics/expand and /tags valid JSON (ref encoding/json)") {
+    val odd = "q\"b\\t\tx"
+    val store = new MemStore(Seq(graft.core.Series("odd." + odd,
+      Map("name" -> ("odd." + odd), "k\"ey" -> odd), 0L, 60L, Array(1.0))))
+    val oApi = new HttpApi(spark, store, port = 0)
+    val oPort = oApi.start()
+    try {
+      def body(path: String, q: (String, String)*): String = {
+        val qs = q.map { case (k, v) => k + "=" + java.net.URLEncoder.encode(v, "UTF-8") }.mkString("&")
+        val resp = client.send(
+          HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$oPort$path?$qs")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 200, resp.body())
+        resp.body()
+      }
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val expanded = mapper.readTree(body("/metrics/expand", "query" -> "odd.*")).get("results")
+      assert(expanded.size == 1 && expanded.get(0).asText == "odd." + odd)
+      val grouped = mapper.readTree(body("/metrics/expand", "query" -> "odd.*", "groupByExpr" -> "1"))
+      assert(grouped.get("results").get("odd.*").get(0).asText == "odd." + odd)
+      val tagKeys = mapper.readTree(body("/tags/autoComplete/tags"))
+      assert((0 until tagKeys.size).map(tagKeys.get(_).asText).contains("k\"ey"))
+      val tagValues = mapper.readTree(body("/tags/autoComplete/values", "tag" -> "k\"ey"))
+      assert(tagValues.size == 1 && tagValues.get(0).asText == odd)
+    } finally oApi.stop()
+  }
+
   test("concurency limiter: the N+1-th inflight request waits for a slot and 503s past the wait (ref limiter/limiter.go:14-51)") {
     val limited = new HttpApi(spark, new EventSeriesStore("/root/testdata/sf0.001"),
       port = 0, concurency = 1, concurencyWaitSec = 0L)
