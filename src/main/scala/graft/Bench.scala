@@ -1,68 +1,49 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The stamp of a full-answer-timed run. History lines without it were
+    * timed by `Dataset.count()`, which let Catalyst prune the final sort
+    * and the computed columns, so they are never compared against. */
+  val Timing = "\"timing\":\"full\""
+
+  /** Each row's quietest time over the history lines of `sfDir` that
+    * carry [[Timing]]. */
+  def historyMin(lines: Seq[String], sfDir: String): Map[String, Double] = {
+    val re = """"([A-Za-z0-9_]+)":([0-9]+\.[0-9]+)""".r
+    lines.filter(l => l.contains(s""""sf":"$sfDir"""") && l.contains(Timing))
+      .flatMap { line =>
+        val i = line.indexOf("\"queries\":{")
+        if (i < 0) Nil
+        else re.findAllMatchIn(line.substring(i + 11, line.indexOf('}', i)))
+          .map(m => m.group(1) -> m.group(2).toDouble).toSeq
+      }
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // knobs: ONLY = comma-list of query-name prefixes; REPS = time each query N
     // times and keep the fastest. REPS defaults to 2 so the published total
     // is best-of-2 — a single pass is hostage to host load (r4's driver run
     // read 5.8x the quiet-machine number on identical plans)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the shared event-series fixture (one-time derivation from
-    // events.parquet) so its build cost isn't charged to whichever query
-    // happens to run first
-    new graft.store.EventSeriesStore(sfDir).allSeries(spark).count()
-    // warm the non-event scans + codegen/job infrastructure the same way:
-    // one cheap pass per source table, untimed (first query otherwise pays
-    // parquet footer reads and the first whole-stage-codegen compile)
-    SparkEntry.entry(spark).count()
-    spark.read.parquet(s"$sfDir/documents.parquet").count()
-    spark.read.parquet(s"$sfDir/embeddings.parquet").count()
+    val reps = Harness.reps(2)
+    val spark = Harness.session()
+    val fixture = Harness.warm(spark, sfDir)
     val catalog = SparkEntry.queries.filter { case (n, _) => SparkEntry.selected(n) }
-    // several operators persist intermediates (signatures, shingle tables,
-    // CC labels); left cached they accumulate across the full catalog suite
-    // and evict each other, making in-suite numbers order-dependent
-    // (observed 10x inflation on late queries). Each rep owns one scope,
-    // released after its timing, so no rep reads what an earlier rep
-    // cached; the shared fixture memo stays.
-    val fixture = new graft.store.EventSeriesStore(sfDir).allSeries(spark)
     val results = catalog.map { case (name, fn) =>
-      // untimed fixture re-warm: a heavy query's persists can evict the
-      // shared series cache blocks, and the NEXT timed query then pays the
-      // re-materialization (observed in-suite: g23 16.7 s vs 1.3 s
-      // isolated). A count on the cached frame is ~ms when still resident.
       fixture.count()
-      // fail loudly: a swallowed error would REDUCE the published total
-      // (r5 recorded -1 s per failed rep) — breakage must break the bench
-      def timeOnce(): Double = graft.core.Scope { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
-            throw new RuntimeException(s"bench query '$name' failed", e)
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val times0 = (1 to reps).map(_ => timeOnce())
-      // load-robustness: when the reps disagree wildly (a GC pause or a
-      // co-resident JVM stole the host mid-query) spend ONE extra rep so a
-      // transient spike can't stand as the best-of — bounded cost, only
-      // unstable queries pay it (r9's loaded driver pass read 1.45x the
-      // quiet total on identical plans)
-      val times = if (reps >= 2 && times0.max > 1.5 * times0.min)
-        times0 :+ timeOnce() else times0
-      name -> times.min
+      name -> Harness.bestOf(spark, name, reps)(fn(spark, sfDir))
     }
     // millisecond precision: full-precision doubles made the one-liner
     // ~7 KB at 207 queries and the driver's captured stdout tail truncated
     // it (BENCH parsed:null in r5/r6) — 3 decimals is ~40% shorter and
     // well inside timing noise
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
+    val secs = results.map { case (k, v) => k -> v.seconds }
+    val qs = secs.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val layers = results.map { case (k, v) => s"\"" + k + "\":" + v.json }
+      .mkString("{", ",", "}")
+    val total = secs.values.sum
     // the per-query map is ~7 KB at 229 queries and the driver's captured
     // stdout tail is ~2.2 KB — any line embedding it truncates and records
     // parsed:null (r5-r8). The full map goes ONLY to the file; stdout gets
@@ -85,39 +66,30 @@ object Bench {
     val histMin: Map[String, Double] = try {
       if (java.nio.file.Files.exists(histPath)) {
         import scala.jdk.CollectionConverters._
-        val re = """"([A-Za-z0-9_]+)":([0-9]+\.[0-9]+)""".r
-        java.nio.file.Files.readAllLines(histPath).asScala
-          .filter(_.contains(s""""sf":"$sfDir""""))
-          .flatMap { line =>
-            val i = line.indexOf("\"queries\":{")
-            if (i < 0) Nil
-            else {
-              val j = line.indexOf('}', i)
-              re.findAllMatchIn(line.substring(i + 11, j))
-                .map(m => m.group(1) -> m.group(2).toDouble).toSeq
-            }
-          }
-          .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
+        historyMin(java.nio.file.Files.readAllLines(histPath).asScala.toSeq, sfDir)
       } else Map.empty
     } catch { case e: Exception =>
       System.err.println(s"[bench] WARNING: could not read history $histPath: $e")
       Map.empty
     }
-    val flagged = results.filter { case (n, v) =>
+    val flagged = secs.filter { case (n, v) =>
       histMin.get(n).exists(m => v > 2 * m && v - m > 0.5)
     }
     val flagsJson = flagged.map { case (n, v) =>
       s""""$n":{"now":${f3(v)},"hist_min":${f3(histMin(n))}}"""
     }.mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"variance_flags":$flagsJson,"sf":"$sfDir"}"""
+    // the per-layer map goes to bench_out.json only; history keeps the
+    // per-row seconds the variance flags read
+    def line(extra: String) =
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec",$Timing,"queries":$qs,$extra"variance_flags":$flagsJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (line(s""""layers":$layers,""") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // round-over-round evidence: bench_out.json is overwritten per run,
     // which destroyed the per-query history the regression audit needs
-    // (r14 verdict) — so every run ALSO appends its full line (stamped
-    // with wall-clock) to the history, which only ever grows
+    // (r14 verdict) — so every run ALSO appends its line (stamped with
+    // wall-clock) to the history, which only ever grows
     try {
-      val stamped = json.patch(1,
+      val stamped = line("").patch(1,
         "\"at\":\"" + java.time.Instant.now().toString + "\",", 0)
       java.nio.file.Files.write(histPath,
         (stamped + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -134,7 +106,7 @@ object Bench {
     // automated regression audit has per-query signal without embedding
     // the full ~7 KB map in stdout (which truncated the tail in r5-r8).
     // The one-line total contract is unchanged and still printed LAST.
-    val worst = results.toSeq
+    val worst = secs.toSeq
       .flatMap { case (n, v) => histMin.get(n).map(m => (n, v, m)) }
       .sortBy { case (_, v, m) => -(v / math.max(m, 1e-9)) }
       .take(10)

@@ -16,18 +16,11 @@ package graft
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "target/plans")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // optional session-conf overrides (diagnostics only — e.g. force the
-    // distributed paths past the r18 size gates to dump the BEFORE shape):
-    // SPARK_GRAFT_CONF="graft.cc.maxDriverEdges=0,graft.series.maxWindowIndex=0"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
+    // SPARK_GRAFT_CONF (read by the shared session) dumps a size gate's
+    // other side, e.g. "graft.cc.maxDriverEdges=0,graft.series.maxWindowIndex=0"
+    val spark = Harness.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val catalog = SparkEntry.queries.filter { case (n, _) => SparkEntry.selected(n) }
     catalog.foreach { case (name, fn) =>

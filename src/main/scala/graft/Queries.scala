@@ -182,7 +182,7 @@ object Queries {
 
   /** p91's standard refresh delta (the p83/p86 convention) — edited
     * (%5 among the %7-survivors), added (%13, shifted ids), deleted (%7). */
-  private def refreshDelta(d: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def refreshDelta(d: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val edited = d.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 5 === 0)
       .withColumn("text", concat(col("text"), lit(" rev2")))
     val added = d.where(col("doc_id") % 13 === 0)
@@ -230,7 +230,7 @@ object Queries {
     * refresh: re-embedded (%5 among the %7 survivors, deterministically
     * perturbed so cell assignment can move), added (%13, shifted ids and
     * offset vectors), deleted (%7). */
-  private def embRefreshDelta(e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def embRefreshDelta(e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val edited = e.where(col("vec_id") % 7 =!= 0 && col("vec_id") % 5 === 0)
       .withColumn("embedding",
         transform(col("embedding"), x => (x * lit(1.5f)).cast("float")))
@@ -242,38 +242,41 @@ object Queries {
     (edited, added, deletedIds)
   }
 
-  /** Previous-build artifacts for the p96 MoR vector index (the
-    * ensureRefreshedTermIndex contract, ANN edition): ONE base IVF-PQ
-    * build — centroids + codebooks trained once, persisted next to the
-    * index — plus ONE delta segment appended against the EXISTING
-    * quantizers. The row measures the tombstone-aware serve they feed. */
   /** Build-once ensure-step for p34's BASE IVF-PQ index (r17 — the same
     * previous-build-artifact contract as [[ensureRefreshedIvfIndex]] and
     * the r16 g146 store hoist: the row is named "serve" and a production
     * index is trained+written once and served many times; re-training and
     * re-writing it inside the timed closure measured ingest per rep). */
   private def ensureIvfPqIndex(s: SparkSession, dir: String): String = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val path = scratchPath("ivfpq", dir)
     buildOnce(path) {
-      val emb = embeddings(s, dir)
-      val cents = Similarity.trainCentroids(emb, nlist = 8, iters = 3, sampleN = 2000)
-      val cb = Quantize.trainPqCodebooks(emb, m = 16, ksub = 16, iters = 10, sampleN = 2000)
-      Similarity.writeIndex(
-        Quantize.pqEncode(Similarity.assignCells(emb, cents), cb), cents, path)
-      Quantize.writeCodebooks(s, cb, s"$path/codebooks")
+      Quantize.writeCodebooks(s, writeIvfPqIndex(embeddings(s, dir), path), s"$path/codebooks")
     }
     path
   }
 
+  /** The one IVF-PQ build recipe of the catalog and the mains: 8 coarse
+    * cells (3 k-means iterations) and 16×16 PQ codebooks (10 iterations),
+    * both trained on a 2,000-vector sample, then the encoded index written
+    * to `path`. Returns the codebooks; each caller writes them (and the
+    * index meta) where it needs them. */
+  private[graft] def writeIvfPqIndex(emb: DataFrame, path: String): Array[Array[Array[Double]]] = {
+    val cents = Similarity.trainCentroids(emb, nlist = 8, iters = 3, sampleN = 2000)
+    val cb = Quantize.trainPqCodebooks(emb, m = 16, ksub = 16, iters = 10, sampleN = 2000)
+    Similarity.writeIndex(Quantize.pqEncode(Similarity.assignCells(emb, cents), cb), cents, path)
+    cb
+  }
+
+  /** Previous-build artifacts for the p96 MoR vector index (the
+    * ensureRefreshedTermIndex contract, ANN edition): ONE base IVF-PQ
+    * build — centroids + codebooks trained once, persisted next to the
+    * index — plus ONE delta segment appended against the EXISTING
+    * quantizers. The row measures the tombstone-aware serve they feed. */
   private def ensureRefreshedIvfIndex(s: SparkSession, dir: String): String = {
     val path = scratchPath("ivfm", dir)
     buildOnce(path) {
       val emb = embeddings(s, dir)
-      val cents = Similarity.trainCentroids(emb, nlist = 8, iters = 3, sampleN = 2000)
-      val cb = Quantize.trainPqCodebooks(emb, m = 16, ksub = 16, iters = 10, sampleN = 2000)
-      Similarity.writeIndex(
-        Quantize.pqEncode(Similarity.assignCells(emb, cents), cb), cents, path)
+      val cb = writeIvfPqIndex(emb, path)
       Quantize.writeCodebooks(s, cb, s"$path/codebooks")
       // meta BEFORE the delta append: base_mean_d2 is the FRESH build's
       // drift baseline (the ivfMaintenanceAdvice denominator)

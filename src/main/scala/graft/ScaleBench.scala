@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
  *     threshold across copies
  *
  * Usage: runMain graft.ScaleBench [baseDir] [workDir]
- * (defaults /root/testdata/sf0.1 → /tmp/graft_sf1; generation is idempotent)
+ * (defaults: the sf0.1 test corpus → `/tmp/graft_sf_x<copies>`;
+ * generation is idempotent). `SPARK_GRAFT_ARM=docmult|rowmult|refresh|drift|serve|catalog`
+ * runs one other arm instead of the headline curve.
  */
 object ScaleBench {
 
@@ -159,44 +161,33 @@ object ScaleBench {
       .write.mode("overwrite").parquet(s"$workDir/documents.parquet")
   }
 
-  /** Best-of-`reps` seconds of `run`, each rep in its own scope, so a rep
-    * never reads what an earlier rep cached and per-query persists never
-    * accumulate and evict each other (in-suite numbers would turn
-    * order-dependent). A failed rep contributes NO timing — elapsed-to-
-    * exception would let a fast failure publish itself as the best-of
-    * number; if every rep fails, the -1 sentinel rides into the emitted
-    * JSON where a ratio consumer can't miss it (stderr alone is droppable). */
-  private def bestOf(name: String, reps: Int)(run: => Unit): Double = {
-    val times = (1 to reps).flatMap { _ =>
-      graft.core.Scope { _ =>
-        val t0 = System.nanoTime()
-        try { run; Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => System.err.println(s"[scale] $name failed: $e"); None }
-      }
-    }
-    if (times.isEmpty) -1.0 else times.min
-  }
-
   /** p77 on one documents dir (docmult axis) or the q12/q13 pair on one
     * events dir (rowmult axis — that dir carries only events.parquet):
-    * untimed scan and codegen warm-up of `table`, then best-of-reps.
-    * Timed action is toRdd.count(), NOT Dataset.count(): count() lets
-    * Catalyst prune every feature column, which deletes the as-of window
-    * and the bucketed join body — the exact work the rowmult axis exists
-    * to measure. toRdd executes the full physical plan (all output
-    * columns, including the catalog entry's determinism orderBy — present
-    * equally at 1× and N×, so the ratio still isolates growth). */
+    * untimed scan warm-up of `table` and one untimed rep per row (codegen),
+    * then best-of-reps through the harness, which times the full answer —
+    * a `count()` would let Catalyst prune every feature column and delete
+    * the as-of window and bucketed join body the rowmult axis measures. */
   private def runMult(spark: SparkSession, dir: String, table: String,
                       qs: Seq[String]): Seq[(String, Double)] = {
-    def full(q: String): Unit = SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()
-    spark.read.parquet(s"$dir/$table.parquet").count() // untimed scan warm
-    qs.foreach(q => graft.core.Scope(_ => full(q))) // codegen warm
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    qs.map(name => name -> bestOf(name, reps)(full(name)))
+    def row(q: String) = SparkEntry.queries(q)(spark, dir)
+    spark.read.parquet(s"$dir/$table.parquet").count()
+    qs.foreach(q => Harness.time(spark, q)(row(q)))
+    val reps = Harness.reps(2)
+    qs.map(q => q -> Harness.bestOf(spark, q, reps)(row(q)).seconds)
   }
   private val DocMult = Seq("p77_quality_ensemble")
   private val RowMult = Seq("q12_pit_features", "q13_window_features")
 
+  /** One timed rep of an arm block, in seconds. */
+  private def once(spark: SparkSession, name: String)(fn: => DataFrame): (String, Double) =
+    name -> Harness.time(spark, name)(fn).seconds
+
+  /** A block whose answer is an artifact written to disk: all of its
+    * time is plan build. */
+  private def effect(spark: SparkSession)(body: => Unit): DataFrame = {
+    body
+    spark.emptyDataFrame
+  }
 
   /** Headline subset: the scan/agg/window graphite shapes plus every
     * pipeline operator whose growth curve the scale claim rests on. */
@@ -252,32 +243,20 @@ object ScaleBench {
     "p96_ivf_pq_refresh", "p97_complete_terms")
 
   private def runAll(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    new graft.store.EventSeriesStore(dir).allSeries(spark).count() // warm fixture
-    // untimed codegen/scan warm-up per dir (like Bench): without it the
-    // first timed query absorbs the whole-stage-codegen compile and the
-    // base-vs-10x ratios of cheap queries read as <1
-    graft.core.Scope { _ => SparkEntry.queries("g01_sum_series")(spark, dir).count() }
-    spark.read.parquet(s"$dir/documents.parquet").count()
-    spark.read.parquet(s"$dir/embeddings.parquet").count()
-    val fixture = new graft.store.EventSeriesStore(dir).allSeries(spark)
+    // untimed warm-up per dir (like Bench): without it the first timed
+    // query absorbs the whole-stage-codegen compile and the base-vs-10x
+    // ratios of cheap queries read as <1
+    val fixture = Harness.warm(spark, dir)
     // single-shot timings are GC/cache-pressure-sensitive (a one-off pause
     // once measured p15 at 30 s where a re-run shows 2.3 s); best-of-REPS
     // keeps the ratios about plan shape, not scheduler luck
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
+    val reps = Harness.reps(1)
     // SPARK_GRAFT_ONLY=p36,p37 → measure just those rows — full-headline
     // runs stay the default
     val selected = Headline.filter(SparkEntry.selected)
-    // rows whose body Dataset.count() would DELETE via column pruning (the
-    // manifest's md5+token fold reduces to a doc_id-only scan; the as-of
-    // window and bucketed-join feature columns vanish the same way) are
-    // timed with toRdd.count() — the full physical plan, all columns.
-    // Everything else keeps count() for cross-round comparability.
-    val forceFullEval = Set("p78_shard_manifest", "p79_manifest_diff", "p80_backfill_plan",
-      "q12_pit_features", "q13_window_features",
-      // the split manifests/matrices and the rollup/star anchors reduce to
-      // tiny aggregates whose sum/avg expressions count() would prune away
-      "p81_split_manifest", "p82_split_moves", "p83_cluster_split_moves",
-      "q16_rollup_revenue", "q17_market_share", "p90_doc_provenance")
+    val S = graft.pipeline.Similarity
+    val TS = graft.pipeline.TextStats
+    val PM = graft.pipeline.PairMaintenance
     // p52's catalog row times index build + probe TOGETHER; the curve
     // wants them apart — the build is ingest-side work amortized over
     // every later batch, the probe is the steady-state per-batch cost
@@ -293,131 +272,93 @@ object ScaleBench {
         graft.pipeline.Dedup.writeNearDupIndex(d.limit(50), path + "_warm")
         graft.pipeline.Dedup.nearDupAgainstIndex(d.limit(50), path + "_warm",
           threshold = 0.9).count()
-        val t0 = System.nanoTime()
-        graft.pipeline.Dedup.writeNearDupIndex(d, path)
-        val tBuild = (System.nanoTime() - t0) / 1e9
         val batch = d.where(pmod(col("doc_id"), lit(7)) === 0)
           .withColumn("doc_id", col("doc_id") + lit(10_000_000L))
-        val t1 = System.nanoTime()
-        graft.pipeline.Dedup.nearDupAgainstIndex(batch, path, threshold = 0.9).count()
-        val tProbe = (System.nanoTime() - t1) / 1e9
-        Seq("p52_index_build" -> tBuild, "p52_index_probe" -> tProbe)
+        Seq(
+          once(spark, "p52_index_build")(effect(spark)(
+            graft.pipeline.Dedup.writeNearDupIndex(d, path))),
+          once(spark, "p52_index_probe")(
+            graft.pipeline.Dedup.nearDupAgainstIndex(batch, path, threshold = 0.9)))
       } else Nil
     // p84's catalog row also times build + query together; the curve wants
-    // the steady-state query alone (the build is one-time ingest work)
+    // the steady-state query alone (the build is one-time ingest work).
+    // The r14 query-only arms (p87/p89/p94/p95/p97) run over the SAME
+    // one-time build: their catalog rows time build + query together, the
+    // flat claim is about the steady state
     val p84Split: Seq[(String, Double)] =
       if (selected.contains("p84_term_search")) graft.core.Scope { _ =>
         val d = spark.read.parquet(s"$dir/documents.parquet")
         val path = Queries.ndIndexPath(dir) + "_ti_split"
         // untimed warm pass for the explode/agg codegen
-        graft.pipeline.TextStats.writeTermIndex(d.limit(50), path + "_warm")
-        graft.pipeline.TextStats.searchTermIndex(spark, path + "_warm",
-          Seq("window", "scan", "merge")).count()
-        val t0 = System.nanoTime()
-        graft.pipeline.TextStats.writeTermIndex(d, path)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        graft.pipeline.TextStats.searchTermIndex(spark, path,
-          Seq("window", "scan", "merge")).count()
-        val tQuery = (System.nanoTime() - t1) / 1e9
-        // the r14 query-only arms over the SAME one-time build: the
-        // catalog rows p87/p89/p94 time build + query together, the flat
-        // claim is about the steady state
-        val t2 = System.nanoTime()
-        graft.pipeline.TextStats.bm25TopK(spark, path,
-          Seq("window", "scan", "merge"), k = 10).count()
-        val tBm = (System.nanoTime() - t2) / 1e9
-        val t3 = System.nanoTime()
-        graft.pipeline.TextStats.phraseSearch(spark, path,
-          Seq("table", "scan", "merge")).count()
-        val tPh = (System.nanoTime() - t3) / 1e9
-        val t4 = System.nanoTime()
-        graft.pipeline.TextStats.prefixSearchTermIndex(spark, path, "sc").count()
-        val tPre = (System.nanoTime() - t4) / 1e9
-        val t5 = System.nanoTime()
-        graft.pipeline.TextStats.globSearchTermIndex(spark, path, "sc[ae]n*").count()
-        val tGlob = (System.nanoTime() - t5) / 1e9
-        val t6 = System.nanoTime()
-        graft.pipeline.TextStats.completeTerms(spark, path, "sc", k = 10).count()
-        val tComp = (System.nanoTime() - t6) / 1e9
-        Seq("p84_index_build" -> tBuild, "p84_index_query" -> tQuery,
-          "p87_bm25_query" -> tBm, "p89_phrase_query" -> tPh,
-          "p94_prefix_query" -> tPre, "p95_glob_query" -> tGlob,
-          "p97_complete_query" -> tComp)
+        TS.writeTermIndex(d.limit(50), path + "_warm")
+        TS.searchTermIndex(spark, path + "_warm", Seq("window", "scan", "merge")).count()
+        Seq(
+          once(spark, "p84_index_build")(effect(spark)(TS.writeTermIndex(d, path))),
+          once(spark, "p84_index_query")(
+            TS.searchTermIndex(spark, path, Seq("window", "scan", "merge"))),
+          once(spark, "p87_bm25_query")(
+            TS.bm25TopK(spark, path, Seq("window", "scan", "merge"), k = 10)),
+          once(spark, "p89_phrase_query")(
+            TS.phraseSearch(spark, path, Seq("table", "scan", "merge"))),
+          once(spark, "p94_prefix_query")(TS.prefixSearchTermIndex(spark, path, "sc")),
+          once(spark, "p95_glob_query")(TS.globSearchTermIndex(spark, path, "sc[ae]n*")),
+          once(spark, "p97_complete_query")(TS.completeTerms(spark, path, "sc", k = 10)))
       } else Nil
     // the vector-index lifecycle asymmetry, measured: a corpus refresh
     // absorbed as ONE delta segment + tombstone-aware serve (the p96 MoR
     // path) vs the only alternative a write-once index had — full retrain
     // + re-encode + rewrite + serve. The base build is untimed (the
-    // previous build's artifact, the p91 convention).
+    // previous build's artifact, the p91 convention); the delta is the
+    // catalog's p96 refresh (Queries.embRefreshDelta).
     val p96Split: Seq[(String, Double)] =
       if (selected.contains("p34_ivf_pq_serve")) graft.core.Scope { _ =>
-        val S = graft.pipeline.Similarity
-        val Q = graft.pipeline.Quantize
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         val path = Queries.ndIndexPath(dir) + "_ivf_split"
-        val cents = S.trainCentroids(emb, nlist = 8, iters = 3, sampleN = 2000)
-        val cb = Q.trainPqCodebooks(emb, m = 16, ksub = 16, iters = 10, sampleN = 2000)
-        S.writeIndex(Q.pqEncode(S.assignCells(emb, cents), cb), cents, path)
-        val edited = emb.where(col("vec_id") % 7 =!= 0 && col("vec_id") % 5 === 0)
-          .withColumn("embedding",
-            transform(col("embedding"), x => (x * lit(1.5f)).cast("float")))
-        val added = emb.where(col("vec_id") % 13 === 0)
-          .withColumn("vec_id", col("vec_id") + 1000000L)
-        val deleted = emb.where(col("vec_id") % 7 === 0).select("vec_id")
+        val cb = Queries.writeIvfPqIndex(emb, path)
+        val (edited, added, deleted) = Queries.embRefreshDelta(emb)
         val tomb = deleted.select(col("vec_id"), lit(Long.MaxValue).as("before_seg"))
           .unionByName(edited.select(col("vec_id"), lit(1L).as("before_seg")))
         val queries = emb.where(col("vec_id") < 10 &&
           col("vec_id") % 7 =!= 0 && col("vec_id") % 5 =!= 0)
-        val t0 = System.nanoTime()
-        S.appendToIvfIndex(edited.unionByName(added), path, cb, seg = 1L)
-        val (idx, dc) = S.readIndex(spark, path)
-        S.ivfPqTopK(idx, queries, cb, dc, k = 5, nprobe = 5, shortlist = 50,
-          tombstones = Some(tomb)).count()
-        val tRefresh = (System.nanoTime() - t0) / 1e9
-        val path2 = path + "_rebuild"
-        val t1 = System.nanoTime()
-        val cb2 = S.retrainIvfIndex(spark, path, tomb, path2,
-          nlist = 8, m = 16, ksub = 16, iters = 10, sampleN = 2000)
-        val (idx2, dc2) = S.readIndex(spark, path2)
-        S.ivfPqTopK(idx2, queries, cb2, dc2, k = 5, nprobe = 5,
-          shortlist = 50).count()
-        val tRebuild = (System.nanoTime() - t1) / 1e9
-        Seq("p96_ivf_refresh" -> tRefresh, "p96_ivf_rebuild" -> tRebuild)
+        Seq(
+          once(spark, "p96_ivf_refresh") {
+            S.appendToIvfIndex(edited.unionByName(added), path, cb, seg = 1L)
+            val (idx, dc) = S.readIndex(spark, path)
+            S.ivfPqTopK(idx, queries, cb, dc, k = 5, nprobe = 5, shortlist = 50,
+              tombstones = Some(tomb))
+          },
+          once(spark, "p96_ivf_rebuild") {
+            val cb2 = S.retrainIvfIndex(spark, path, tomb, path + "_rebuild",
+              nlist = 8, m = 16, ksub = 16, iters = 10, sampleN = 2000)
+            val (idx2, dc2) = S.readIndex(spark, path + "_rebuild")
+            S.ivfPqTopK(idx2, queries, cb2, dc2, k = 5, nprobe = 5, shortlist = 50)
+          })
       } else Nil
     // p91's catalog row times the OLD build + the refresh together; the
     // scale claim is refresh-only (the old artifacts are the previous
-    // build's outputs) — timed against p83's full recompute row
+    // build's outputs) — timed against p83's full recompute row. Each arm
+    // answers the refreshed cluster labels (what p91 consumes), reading
+    // the refreshed pairs only as far as the labels need them.
     val p91Split: Seq[(String, Double)] =
       if (selected.contains("p83_cluster_split_moves")) graft.core.Scope { _ =>
-        import org.apache.spark.sql.functions._
         val d = spark.read.parquet(s"$dir/documents.parquet")
         val path = Queries.ndIndexPath(dir) + "_shx_split"
         val oldPairs = graft.core.Scope.checkpoint(graft.pipeline.Dedup
           .ngramJaccardPairs(d, k = 3, threshold = 0.5))
         val oldCC = graft.core.Scope.checkpoint(graft.pipeline.Dedup.dedupClusters(d, oldPairs))
-        graft.pipeline.PairMaintenance.writeShingleIndex(d, path)
-        val edited = d.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 5 === 0)
-          .withColumn("text", concat(col("text"), lit(" rev2")))
-        val added = d.where(col("doc_id") % 13 === 0)
-          .withColumn("doc_id", col("doc_id") + 1000000L)
-        val changed = edited.unionByName(added).select("doc_id", "text")
-        val deletedIds = d.where(col("doc_id") % 7 === 0).select("doc_id")
         val noTomb = d.select(col("doc_id"), lit(0L).as("before_seg")).limit(0)
-        val tomb = deletedIds.select(col("doc_id"),
-            lit(Long.MaxValue).as("before_seg"))
-          .unionByName(edited.select(col("doc_id"), lit(1L).as("before_seg")))
-        val t0 = System.nanoTime()
-        graft.pipeline.PairMaintenance.appendToShingleIndex(changed, path, seg = 1L)
-        val (newCC, newPairs) = graft.pipeline.PairMaintenance
-          .incrementalClusters(spark, path, oldPairs, oldCC,
-            changed.select("doc_id"), deletedIds, noTomb, tomb,
-            refreshSegFrom = 1L)
-        newPairs.count(); newCC.count()
-        val tRefresh = (System.nanoTime() - t0) / 1e9
+        def refresh(path: String, edited: DataFrame, added: DataFrame,
+                    deleted: DataFrame): DataFrame = {
+          val changed = edited.unionByName(added).select("doc_id", "text")
+          val tomb = deleted.select(col("doc_id"), lit(Long.MaxValue).as("before_seg"))
+            .unionByName(edited.select(col("doc_id"), lit(1L).as("before_seg")))
+          PM.appendToShingleIndex(changed, path, seg = 1L)
+          PM.incrementalClusters(spark, path, oldPairs, oldCC, changed.select("doc_id"),
+            deleted, noTomb, tomb, refreshSegFrom = 1L)._1
+        }
         // the ~1%-churn arm — the production steady state: refresh cost
-        // must track CHURN, not corpus (the ~25% arm above deliberately
-        // matches p83's refresh convention for the apples-to-apples row)
+        // must track CHURN, not corpus (the ~25% arm deliberately matches
+        // p83's refresh convention for the apples-to-apples row)
         // %89 guard mirrors refreshDelta's edit/delete exclusion: an id in
         // BOTH sets would append seg-1 postings instantly dead under the
         // MaxValue tombstone, inflating the append and skewing the churn
@@ -425,23 +366,14 @@ object ScaleBench {
           .withColumn("text", concat(col("text"), lit(" rev2")))
         val addedS = d.where(col("doc_id") % 101 === 0)
           .withColumn("doc_id", col("doc_id") + 2000000L)
-        val changedS = editedS.unionByName(addedS).select("doc_id", "text")
         val deletedS = d.where(col("doc_id") % 89 === 0).select("doc_id")
-        val tombS = deletedS.select(col("doc_id"),
-            lit(Long.MaxValue).as("before_seg"))
-          .unionByName(editedS.select(col("doc_id"), lit(1L).as("before_seg")))
         val pathS = Queries.ndIndexPath(dir) + "_shx_small"
-        graft.pipeline.PairMaintenance.writeShingleIndex(d, pathS)
-        val t1 = System.nanoTime()
-        graft.pipeline.PairMaintenance.appendToShingleIndex(changedS, pathS, seg = 1L)
-        val (ccS, prS) = graft.pipeline.PairMaintenance
-          .incrementalClusters(spark, pathS, oldPairs, oldCC,
-            changedS.select("doc_id"), deletedS, noTomb, tombS,
-            refreshSegFrom = 1L)
-        prS.count(); ccS.count()
-        val tSmall = (System.nanoTime() - t1) / 1e9
-        Seq("p91_incremental_refresh" -> tRefresh,
-          "p91_small_refresh" -> tSmall)
+        PM.writeShingleIndex(d, path)
+        PM.writeShingleIndex(d, pathS)
+        val (edited, added, deleted) = Queries.refreshDelta(d)
+        Seq(
+          once(spark, "p91_incremental_refresh")(refresh(path, edited, added, deleted)),
+          once(spark, "p91_small_refresh")(refresh(pathS, editedS, addedS, deletedS)))
       } else Nil
     p52Split ++ p84Split ++ p91Split ++ p96Split ++ selected.map { name =>
       // untimed fixture re-warm between queries (same eviction artifact as
@@ -449,20 +381,17 @@ object ScaleBench {
       // the next timed query pays the rebuild — the documented g18 7.57 s
       // in-suite vs 0.60 s isolated reading)
       fixture.count()
-      name -> bestOf(name, reps) {
-        val df = SparkEntry.queries(name)(spark, dir)
-        if (forceFullEval(name)) df.queryExecution.toRdd.count() else df.count()
-      }
+      name -> Harness.bestOf(spark, name, reps)(SparkEntry.queries(name)(spark, dir)).seconds
     }
   }
 
   /** The metadata surface's own curve (find over a routed store's
     * persisted `_catalog`, cold TTL cache): the one surface whose cost
     * must track NAME CARDINALITY, not data volume — the catalog read is
-    * `_catalog`-sized however big the point data grows. Returns (seconds,
-    * result-node count). The routed store is built once per dir (the
-    * build itself is untimed — ingest-side work). */
-  private def catalogSurface(spark: SparkSession, dir: String): (Double, Long) = {
+    * `_catalog`-sized however big the point data grows. Returns seconds
+    * and the result-node count. The routed store is built once per dir
+    * (the build itself is untimed — ingest-side work). */
+  private def catalogSurface(spark: SparkSession, dir: String): Seq[(String, Double)] = {
     val out = s"/tmp/graft_catbench_${java.lang.Integer.toHexString(dir.hashCode)}"
     if (!new java.io.File(s"$out/_catalog/_SUCCESS").exists())
       graft.store.RoutedSeriesStore.write(
@@ -473,9 +402,9 @@ object ScaleBench {
     // catalog read (the within-TTL path reads nothing at all)
     graft.api.Catalog.find(spark, store, "events.*")
     graft.api.Catalog.invalidateCatalogCache()
-    val t0 = System.nanoTime()
-    val n = graft.api.Catalog.find(spark, store, "events.*").size
-    ((System.nanoTime() - t0) / 1e9, n.toLong)
+    var n = 0
+    val secs = Harness.wall { n = graft.api.Catalog.find(spark, store, "events.*").size }
+    Seq("catalog_find" -> secs, "catalog_names" -> n.toDouble)
   }
 
   /** End-to-end /search latency over one dir's PERSISTED artifacts — the
@@ -484,18 +413,13 @@ object ScaleBench {
     * build term + IVF-PQ indexes (untimed — ingest-side), start the real
     * server, time each route warm (best of 3 after one untimed pass). */
   private def serveArm(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    val S = graft.pipeline.Similarity
-    val Q = graft.pipeline.Quantize
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val ti = Queries.ndIndexPath(dir) + "_serve_ti"
     val ivf = Queries.ndIndexPath(dir) + "_serve_ivf"
     val cbp = Queries.ndIndexPath(dir) + "_serve_cb"
     graft.pipeline.TextStats.writeTermIndex(docs, ti)
-    val cents = S.trainCentroids(emb, nlist = 8, iters = 3, sampleN = 2000)
-    val cb = Q.trainPqCodebooks(emb, m = 16, ksub = 16, iters = 10, sampleN = 2000)
-    S.writeIndex(Q.pqEncode(S.assignCells(emb, cents), cb), cents, ivf)
-    Q.writeCodebooks(spark, cb, cbp)
+    graft.pipeline.Quantize.writeCodebooks(spark, Queries.writeIvfPqIndex(emb, ivf), cbp)
     // cache OFF: the arm measures request compute, and with the TTL cache
     // on (the serving default) every post-warm rep would time a map lookup
     val api = new graft.api.SearchApi(spark, ti, ivf, cbp, cacheTtlSec = 0)
@@ -504,14 +428,12 @@ object ScaleBench {
       .head().getSeq[Float](0).toArray
     val vecParam = qv.map(_.toString).mkString(",")
     val client = java.net.http.HttpClient.newHttpClient()
-    def hit(pq: String): Double = {
-      val t0 = System.nanoTime()
+    def hit(pq: String): Double = Harness.wall {
       val resp = client.send(
         java.net.http.HttpRequest.newBuilder(
           java.net.URI.create(s"http://127.0.0.1:$port$pq")).GET().build(),
         java.net.http.HttpResponse.BodyHandlers.ofString())
       require(resp.statusCode() == 200, s"$pq -> ${resp.body().take(200)}")
-      (System.nanoTime() - t0) / 1e9
     }
     val routes = Seq(
       "serve_bm25" -> "/search?q=window+scan+merge&k=10",
@@ -544,27 +466,22 @@ object ScaleBench {
     * CHANGE, the rebuild the corpus. The base build is untimed (it is the
     * previous round's artifact). */
   private def refreshArm(spark: SparkSession, dir: String): Seq[(String, Double)] = graft.core.Scope { _ =>
-    import org.apache.spark.sql.functions._
     val R = graft.pipeline.Refresh
     val d = graft.core.Scope.checkpoint(Queries.orchCorpus(spark, dir))
     val root = Queries.ndIndexPath(dir) + "_orch_arm"
-    R.buildAll(spark, d.select("doc_id", "text"),
-      d.select(col("doc_id").as("vec_id"), col("embedding")), root,
-      nlist = 8, m = 16, ksub = 16, trainIters = 3, sampleN = 2000)
+    def build(corpus: DataFrame, root: String): Unit =
+      R.buildAll(spark, corpus.select("doc_id", "text"),
+        corpus.select(col("doc_id").as("vec_id"), col("embedding")), root,
+        nlist = 8, m = 16, ksub = 16, trainIters = 3, sampleN = 2000)
+    build(d, root)
     val (edited, added, removed) = Queries.corpusRefreshDelta(d)
-    val t0 = System.nanoTime()
-    R.refreshCorpus(spark, root, edited, added, removed)
-    val tRefresh = (System.nanoTime() - t0) / 1e9
     val refreshed = graft.core.Scope.checkpoint(
       d.where(col("doc_id") % 7 =!= 0 && col("doc_id") % 5 =!= 0)
         .unionByName(edited).unionByName(added))
-    val t1 = System.nanoTime()
-    R.buildAll(spark, refreshed.select("doc_id", "text"),
-      refreshed.select(col("doc_id").as("vec_id"), col("embedding")),
-      root + "_rebuild", nlist = 8, m = 16, ksub = 16, trainIters = 3,
-      sampleN = 2000)
-    val tRebuild = (System.nanoTime() - t1) / 1e9
-    Seq("orch_refresh" -> tRefresh, "orch_rebuild" -> tRebuild)
+    Seq(
+      once(spark, "orch_refresh")(effect(spark)(
+        R.refreshCorpus(spark, root, edited, added, removed))),
+      once(spark, "orch_rebuild")(effect(spark)(build(refreshed, root + "_rebuild"))))
   }
 
   /** The retrain-policy recall arm (r15 ask #4): recall on a fresh index,
@@ -573,7 +490,6 @@ object ScaleBench {
     * after the retrain janitor runs. Truth per state is the exact top-k
     * (ADC with an everything-sized shortlist reranks exactly). */
   private def driftArm(spark: SparkSession, dir: String): String = graft.core.Scope { _ =>
-    import org.apache.spark.sql.functions._
     val S = graft.pipeline.Similarity
     val Q = graft.pipeline.Quantize
     val sp = spark
@@ -583,9 +499,7 @@ object ScaleBench {
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val n = emb.count()
     val path = Queries.ndIndexPath(dir) + "_drift_ivf"
-    val cents = S.trainCentroids(emb, nlist = 8, iters = 3, sampleN = 2000)
-    val cb = Q.trainPqCodebooks(emb, m = 16, ksub = 16, iters = 10, sampleN = 2000)
-    S.writeIndex(Q.pqEncode(S.assignCells(emb, cents), cb), cents, path)
+    val cb = Queries.writeIvfPqIndex(emb, path)
     Q.writeCodebooks(spark, cb, s"$path/codebooks")
     S.writeIndexMeta(spark, path, cb)
     // the drift: ~40% of corpus size in a TIGHT cluster far outside the
@@ -647,82 +561,52 @@ object ScaleBench {
       f""""recall_retrained":$rRetrained%.3f}"""
   }
 
+  /** `SPARK_GRAFT_ARM` picks one arm; unset runs the headline curve.
+    * Every arm but `drift` prints one base/x/ratio line. */
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse(s"/tmp/graft_sf_x$Copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("SPARK_GRAFT_DOCMULT").contains("1")) {
-      // the p77 signals-constant doc-growth axis (see generateDocMult)
-      val dmDir = s"${workDir}_docmult"
-      generateDocMult(spark, baseDir, dmDir)
-      val base = runMult(spark, baseDir, "documents", DocMult)
-      val big = runMult(spark, dmDir, "documents", DocMult).toMap
-      def fmtD(xs: Seq[(String, Double)]) =
+    val spark = Harness.session()
+    def curve(metric: String, base: Seq[(String, Double)], big: Seq[(String, Double)]): Unit = {
+      def fmt(xs: Seq[(String, Double)]) =
         xs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-      val ratios = base.map { case (k, v) => k -> (if (v > 0) big(k) / v else -1.0) }
-      println(s"""{"metric":"docmult_x${Copies}","base":${fmtD(base)},"x":${fmtD(big.toSeq)},"ratio":${fmtD(ratios)}}""")
-      spark.stop()
-      return
+      val x = big.toMap
+      val ratios = base.map { case (k, v) => k -> x(k) / v }
+      println(s"""{"metric":"${metric}_x$Copies","base":${fmt(base)},"x":${fmt(big)},"ratio":${fmt(ratios)}}""")
     }
-    if (sys.env.get("SPARK_GRAFT_ROWMULT").contains("1")) {
-      // the q12/q13 per-key row-growth axis (see generateRowMult)
-      val rmDir = s"${workDir}_rowmult"
-      generateRowMult(spark, baseDir, rmDir)
-      val base = runMult(spark, baseDir, "events", RowMult)
-      val big = runMult(spark, rmDir, "events", RowMult).toMap
-      def fmtR(xs: Seq[(String, Double)]) =
-        xs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-      val ratios = base.map { case (k, v) => k -> (if (v > 0) big(k) / v else -1.0) }
-      println(s"""{"metric":"rowmult_x${Copies}","base":${fmtR(base)},"x":${fmtR(big.toSeq)},"ratio":${fmtR(ratios)}}""")
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_REFRESHARM").contains("1")) {
-      // the composed orchestrated refresh vs the full artifact rebuild,
-      // at 1× and Copies× (see refreshArm)
-      generateCore(spark, baseDir, workDir)
-      val base = refreshArm(spark, baseDir)
-      val big = refreshArm(spark, workDir).toMap
-      def fmtO(xs: Seq[(String, Double)]) =
-        xs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-      val ratios = base.map { case (k, v) => k -> (if (v > 0) big(k) / v else -1.0) }
-      println(s"""{"metric":"refresharm_x${Copies}","base":${fmtO(base)},"x":${fmtO(big.toSeq)},"ratio":${fmtO(ratios)}}""")
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_DRIFTARM").contains("1")) {
-      // recall sag under planted drift + recovery after the measured
-      // retrain policy fires (see driftArm); runs on the base dir — the
-      // claim is a recall property, not a scale curve
-      println(driftArm(spark, baseDir))
-      spark.stop()
-      return
-    }
-    if (sys.env.get("SPARK_GRAFT_SERVEARM").contains("1")) {
-      // /search end-to-end latency at 1× and Copies× (see serveArm)
-      generateCore(spark, baseDir, workDir)
-      val base = serveArm(spark, baseDir)
-      val big = serveArm(spark, workDir).toMap
-      def fmtS(xs: Seq[(String, Double)]) =
-        xs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-      val ratios = base.map { case (k, v) => k -> (if (v > 0) big(k) / v else -1.0) }
-      println(s"""{"metric":"servearm_x${Copies}","base":${fmtS(base)},"x":${fmtS(big.toSeq)},"ratio":${fmtS(ratios)}}""")
-      spark.stop()
-      return
-    }
-    generate(spark, baseDir, workDir)
-    val base = runAll(spark, baseDir)
-    val x10 = runAll(spark, workDir).toMap
-    def fmt(xs: Seq[(String, Double)]) =
-      xs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val ratios = base.map { case (k, v) => k -> (if (v > 0) x10(k) / v else -1.0) }
-    println(s"""{"metric":"scaleup_x${Copies}","base":${fmt(base)},"x10":${fmt(x10.toSeq)},"ratio":${fmt(ratios)}}""")
-    if (sys.env.get("SPARK_GRAFT_CATSURFACE").contains("1")) {
-      val (tb, nb) = catalogSurface(spark, baseDir)
-      val (tx, nx) = catalogSurface(spark, workDir)
-      println(f"""{"metric":"catalog_find_x$Copies%d","base_sec":$tb%.3f,"x_sec":$tx%.3f,"ratio":${tx / tb}%.3f,"names_base":$nb%d,"names_x":$nx%d}""")
+    sys.env.getOrElse("SPARK_GRAFT_ARM", "headline") match {
+      case "headline" =>
+        generate(spark, baseDir, workDir)
+        curve("scaleup", runAll(spark, baseDir), runAll(spark, workDir))
+      case "docmult" =>
+        // the p77 signals-constant doc-growth axis (see generateDocMult)
+        generateDocMult(spark, baseDir, s"${workDir}_docmult")
+        curve("docmult", runMult(spark, baseDir, "documents", DocMult),
+          runMult(spark, s"${workDir}_docmult", "documents", DocMult))
+      case "rowmult" =>
+        // the q12/q13 per-key row-growth axis (see generateRowMult)
+        generateRowMult(spark, baseDir, s"${workDir}_rowmult")
+        curve("rowmult", runMult(spark, baseDir, "events", RowMult),
+          runMult(spark, s"${workDir}_rowmult", "events", RowMult))
+      case "refresh" =>
+        // the composed orchestrated refresh vs the full artifact rebuild
+        generateCore(spark, baseDir, workDir)
+        curve("refresharm", refreshArm(spark, baseDir), refreshArm(spark, workDir))
+      case "drift" =>
+        // recall sag under planted drift + recovery after the measured
+        // retrain policy fires; runs on the base dir — the claim is a
+        // recall property, not a scale curve
+        println(driftArm(spark, baseDir))
+      case "serve" =>
+        // /search end-to-end latency (see serveArm)
+        generateCore(spark, baseDir, workDir)
+        curve("servearm", serveArm(spark, baseDir), serveArm(spark, workDir))
+      case "catalog" =>
+        generateCore(spark, baseDir, workDir)
+        curve("catalog_find", catalogSurface(spark, baseDir), catalogSurface(spark, workDir))
+      case other =>
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_ARM=$other: one of docmult|rowmult|refresh|drift|serve|catalog (unset: headline)")
     }
     spark.stop()
   }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 import graft.api.Serve.quote
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,9 +7,7 @@ import graft.api.Serve.quote
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // local-iteration subset: SPARK_GRAFT_ONLY=g99,g100 runs only matching
     // prefixes (the driver never sets this — full catalog by default)
@@ -18,13 +16,13 @@ object Verify {
     // owns the query's persists and checkpoints (incl. the evaluator's
     // pins) and releases them after the dump, so they don't accumulate
     // across the catalog — same protocol as Bench
-    new graft.store.EventSeriesStore(sfDir).allSeries(spark).count()
+    Harness.warm(spark, sfDir)
     selected.foreach { case (name, fn) =>
       try graft.core.Scope { _ =>
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
